@@ -75,6 +75,9 @@ object TbHttpServe {
     * read the bound port off the returned server). The caller owns
     * the server (`stop(0)` to shut down). */
   def start(payloads: Map[String, String], port: Int): HttpServer = {
+    // Nagle's algorithm against the client's delayed ACK holds every
+    // response ~40 ms; the JDK server reads this once, at first use.
+    System.setProperty("sun.net.httpserver.nodelay", "true")
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     server.createContext("/", (ex: HttpExchange) => {
       try {

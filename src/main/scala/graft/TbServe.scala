@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.tb.{TbPipeline, TbServing}
@@ -14,17 +14,43 @@ import graft.ops.tb.{TbPipeline, TbServing}
   * (the HTTP layer itself is out of engine scope; these files ARE the
   * response bodies).
   *
+  * One collect per product: each payload's rows are rendered to JSON
+  * inside Spark with `to_json(struct(...))` — the Jackson encoder
+  * `toJSON` uses, so decimal rates and double counts format exactly as
+  * before — and collected once; the 15 bodies are then assembled on the
+  * driver. `country_trends` is collected once and split by ISO3 (a
+  * coords ISO3 without rows gets `[]`), the coords table once for both
+  * the ISO3 list and `countries.json`, and the map-data rows once for
+  * the features, the year and the country count. At endpoint sizes
+  * (≤ tens of rows per payload) a refresh is bound by the fixed cost
+  * per Spark job, not by data, so the job count is the cost: 7 collects
+  * (37 Spark jobs) instead of the 19 actions (62 jobs) of a `toJSON`
+  * per payload and a lookup per trends ISO3.
+  *
+  * Row order: every array keeps its query's order — trends by year,
+  * comparison by `total_cases` descending (the summary's own sort),
+  * yearly trends by year, countries by ISO3 — except map-data
+  * `features`, which is the `mapData` join's output order and so
+  * unspecified. Pinning it to `total_cases DESC` would change the
+  * payload bytes; that is left for the maintainers to decide.
+  *
   * Usage: TbServe <tbCsv> <popCsv> <outDir>
   * Writes: map_data.json, trends/<ISO3>.json ×10, comparison.json,
   *         yearly_trends.json, countries.json, stats.json
   */
 object TbServe {
 
-  /** JSON array of a DataFrame's rows (column names as keys). Payloads
-    * are endpoint-sized (≤ tens of rows) by construction — the
-    * collect here is the serving boundary, not a distributed step. */
-  private def jsonRows(df: DataFrame): String =
-    df.toJSON.collect().mkString("[", ",", "]")
+  /** `fields` as one JSON object per row, by Spark's JSON encoder. */
+  private def json(fields: Column*): Column = to_json(struct(fields: _*))
+
+  /** Every column of `df` as one JSON object. */
+  private def rowJson(df: DataFrame): Column = json(df.columns.toSeq.map(col): _*)
+
+  private def jsonArray(rows: Array[String]): String = rows.mkString("[", ",", "]")
+
+  /** JSON array of `df`'s rows, in `df`'s order. */
+  private def collectJsonArray(df: DataFrame): String =
+    jsonArray(df.select(rowJson(df)).collect().map(_.getString(0)))
 
   /** Materialize every endpoint payload under `outDir`. Returns the
     * (path → payload) map for spec inspection. */
@@ -33,57 +59,64 @@ object TbServe {
     val coords = TbServing.countryCoords(spark)
     val summary = products.countrySummary
 
+    // GET /api/countries (flask:746-754); its rows also give the ISO3
+    // list the trends payloads are keyed by
+    val coordRows = coords.orderBy("iso3")
+      .select(col("iso3"), rowJson(coords)).collect()
+    val countries = s"""{"countries":${jsonArray(coordRows.map(_.getString(1)))}}"""
+
     // GET /api/map-data (flask_api_server.py:539-597): features carry
     // coordinates + a nested data struct; envelope adds regional sums.
-    // JSON values render through Spark's own encoder (toJSON), so
-    // product column types (decimal rates, long counts) format
-    // consistently without driver-side type juggling.
-    val mapRows = TbServing.mapData(summary, coords, year = None).cache()
-    val year = mapRows.agg(max("year")).first().getInt(0)
-    val features = jsonRows(mapRows.select(
+    val mapRows = TbServing.mapData(summary, coords, year = None)
+    val featureRows = mapRows.select(col("year"), json(
       col("iso3"), col("country"), array(col("lat"), col("lon")).as("coordinates"),
       struct(
         col("year"), col("total_cases"), col("new_cases"), col("deaths"),
         col("population"), col("total_cases_per_100k"),
         col("new_cases_per_100k"), col("deaths_per_100k"),
-        col("case_fatality_rate")).as("data")))
+        col("case_fatality_rate")).as("data"))).collect()
+    val year = featureRows.map(_.getInt(0)).max
     val regional = TbServing.regionalStats(mapRows)
-      .select(
+      .select(json(
         col("region_cases").as("total_cases"),
         col("region_deaths").as("total_deaths"),
-        col("avg_rate").as("avg_cases_per_100k"))
-      .withColumn("countries_count", lit(mapRows.count()))
-      .toJSON.first()
+        col("avg_rate").as("avg_cases_per_100k"),
+        lit(featureRows.length.toLong).as("countries_count")))
+      .first().getString(0)
     val mapPayload =
-      s"""{"year":$year,"features":$features,"regional_stats":$regional,"data_source":"graft"}"""
+      s"""{"year":$year,"features":${jsonArray(featureRows.map(_.getString(1)))},""" +
+        s""""regional_stats":$regional,"data_source":"graft"}"""
 
-    // GET /api/trends/<iso3> (flask:599-624), one payload per country
-    val isoList = coords.select("iso3").collect().map(_.getString(0)).sorted
-    val trendPayloads = isoList.map { iso =>
-      val t = jsonRows(TbServing.countryTrendsFor(products.countryTrends, iso))
+    // GET /api/trends/<iso3> (flask:599-624), one payload per country:
+    // the product is sorted by (iso3, year), so each group is by year
+    val trendsByIso = products.countryTrends
+      .select(col("iso3"), rowJson(products.countryTrends)).collect()
+      .groupMap(_.getString(0))(_.getString(1))
+    val trendPayloads = coordRows.map(_.getString(0)).map { iso =>
+      val t = jsonArray(trendsByIso.getOrElse(iso, Array.empty[String]))
       s"trends/$iso.json" -> s"""{"iso3":"$iso","trends":$t}"""
     }.toMap
 
-    // GET /api/comparison (flask:626-640)
+    // GET /api/comparison (flask:626-640) — from the summary's own
+    // ordered plan: the mapData join above does not keep its sort
     val comparison =
-      s"""{"year":$year,"countries":${jsonRows(TbServing.comparison(summary, year))}}"""
+      s"""{"year":$year,"countries":${collectJsonArray(TbServing.comparison(summary, year))}}"""
 
     // GET /api/yearly-trends (flask:643-662)
     val yearly =
-      s"""{"yearly_trends":${jsonRows(TbServing.yearlyTrendsAll(products.yearlyTrends))}}"""
-
-    // GET /api/countries (flask:746-754)
-    val countries = s"""{"countries":${jsonRows(coords.orderBy("iso3"))}}"""
+      s"""{"yearly_trends":${collectJsonArray(TbServing.yearlyTrendsAll(products.yearlyTrends))}}"""
 
     // GET /api/stats (flask:765-783) — deterministic fields only (no
-    // wall-clock last_updated; the driver diff would flake on it)
+    // wall-clock last_updated; a byte diff of two runs would flake on
+    // it). Its own aggregate: fused with the regional sums, the distinct
+    // count changes the plan and with it the double sums' rounding.
     val stats = TbServing.stats(summary)
-      .select(
+      .select(json(
         col("total_records"),
         concat(col("min_year"), lit("-"), col("max_year")).as("year_range"),
-        col("n_countries").as("countries_count"))
-      .withColumn("data_source", lit("graft"))
-      .toJSON.first()
+        col("n_countries").as("countries_count"),
+        lit("graft").as("data_source")))
+      .first().getString(0)
 
     val payloads = Map(
       "map_data.json" -> mapPayload,
@@ -96,7 +129,6 @@ object TbServe {
       Option(p.getParent).foreach(Files.createDirectories(_))
       Files.writeString(p, body)
     }
-    mapRows.unpersist()
     payloads
   }
 

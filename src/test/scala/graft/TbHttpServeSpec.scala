@@ -10,15 +10,12 @@ import graft.ops.tb.TbPipeline
 
 /** Integration spec for [[TbHttpServe]]: the server on an ephemeral
   * port must return, byte-for-byte, the payload files
-  * [[TbServe.writePayloads]] materializes — the golden-gated bodies
-  * ARE the HTTP responses (the reference's flask route table,
-  * `flask_api_server.py:710-783`). */
+  * [[TbServe.writePayloads]] materializes from the TB fixture — the
+  * bodies TbServeSpec pins ARE the HTTP responses (the reference's
+  * flask route table, `flask_api_server.py:710-783`). */
 class TbHttpServeSpec extends AnyFunSuite {
   import SparkTestSession.spark
-
-  private val refRaw = "/root/reference/data/raw"
-  private val tbCsv = s"$refRaw/who_tb_data_20250923_041355.csv"
-  private val popCsv = s"$refRaw/worldbank_population_20250923_041355.csv"
+  import TbFixture._
 
   test("every endpoint serves the writePayloads bytes; 404/health per reference") {
     val out = Files.createTempDirectory("graft_http").toString
