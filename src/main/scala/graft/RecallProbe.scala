@@ -50,26 +50,32 @@ object RecallProbe {
         measure(s"srp tables=$tables bits=$bits")(
           operators.Similarity.annTopK(emb, queries, k = 10,
             tables = tables, bits = bits))
+      // the index family runs on integer z codes, as q43/q174 do; an
+      // IVF build is memoized per (nlist, lloyd) and shared across
+      // nprobe, each IVF-PQ setting pays its own build
+      import operators.SimilarityInt
+      val z = SimilarityInt.zCodes(emb).cache()
+      val zq = z.filter($"vid" < 10)
+      def ivf(nlist: Int, nprobe: Int, lloyd: Int) =
+        SimilarityInt.ivfTopKInt(
+          SimilarityInt.ivfBuildInt(z, nlist, lloyd, seed = 42L,
+            memoKey = s"recall_probe:ivf:$nlist:$lloyd"),
+          zq, z, k = 10, nprobe = nprobe)
       for (nlist <- Seq(32, 64); nprobe <- Seq(4, 8); lloyd <- Seq(0, 1, 2, 3))
-        measure(s"ivf n=$nlist p=$nprobe lloyd=$lloyd")(
-          operators.Similarity.ivfTopK(emb, queries, k = 10,
-            nlist = nlist, nprobe = nprobe, lloydIters = lloyd))
+        measure(s"ivf n=$nlist p=$nprobe lloyd=$lloyd")(ivf(nlist, nprobe, lloyd))
       // the equal-candidate-volume family (probed share fixed at 1/8):
       // coarser lists probe fewer/bigger cells, finer lists more/smaller
       // ones, at the same expected share of the corpus scored per query
       for ((nlist, nprobe) <- Seq((16, 2), (64, 8), (128, 16)); lloyd <- Seq(2, 3, 4))
-        measure(s"ivf@1/8 n=$nlist p=$nprobe lloyd=$lloyd")(
-          operators.Similarity.ivfTopK(emb, queries, k = 10,
-            nlist = nlist, nprobe = nprobe, lloydIters = lloyd))
+        measure(s"ivf@1/8 n=$nlist p=$nprobe lloyd=$lloyd")(ivf(nlist, nprobe, lloyd))
       // IVFADC: probed share and rerank window against the residual
-      // codebook (q174's dials); Memo cleared so each setting pays its
-      // own build
+      // codebook (q174's dials)
       for (nprobe <- Seq(8, 16, 32); rerank <- Seq(50, 100))
         measure(s"ivfpq n=64 p=$nprobe r=$rerank") {
-          graft.ops.Memo.clear(spark)
-          val idx = operators.Similarity.ivfPqBuild(emb, nlist = 64,
-            m = 8, ksub = 16, lloydIters = 2)
-          operators.Similarity.ivfPqTopK(idx, queries, emb, k = 10,
+          val idx = SimilarityInt.ivfPqBuildInt(z, nlist = 64, m = 8,
+            ksub = 16, iters = 2, seed = 42L,
+            memoKey = s"recall_probe:ivfpq:$nprobe:$rerank")
+          SimilarityInt.ivfPqTopKInt(idx, zq, z, k = 10,
             nprobe = nprobe, rerank = rerank)
         }
     }

@@ -383,53 +383,35 @@ object ScaleProbe {
     def settle(): Unit = Thread.sleep(300)
   }
 
-  /** r20: the integer-exact ANN family laddered against its float
-    * siblings — the replayability-cost question asked at scale: both
-    * families are bucket-join shaped (build = bounded-sample k-means,
-    * query = nprobe/nlist of the corpus or an m-lookup ADC scan), so
-    * the cells should track each other within the kernel-parity band
-    * the r20 solo A/Bs measured, and a DIVERGING slope would mean the
-    * integer form hides a volume term the float form doesn't pay.
-    * Queries are the 100 lowest base vec_ids at every cell (fixed
-    * query batch, growing corpus — the production read shape). */
+  /** The integer-exact ANN family laddered over corpus volume: IVF,
+    * PQ and IVF-PQ are bucket-join shaped (build = bounded-sample
+    * k-means, query = nprobe/nlist of the corpus or an m-lookup ADC
+    * scan), so each row's time should grow no faster than the corpus;
+    * a steeper slope would mean a hidden volume term. Queries are the
+    * 100 lowest base vec_ids at every cell (fixed query batch, growing
+    * corpus — the production read shape). */
   private def annIntProbe(spark: org.apache.spark.sql.SparkSession,
                           dir: String, scales: Seq[Int], cpus: Int): Unit = {
     import spark.implicits._
-    import graft.operators.{Similarity, SimilarityInt}
+    import graft.operators.SimilarityInt
     scales.foreach { s =>
       ops.Memo.clear(spark)
-      val emb = scaledEmbeddings(spark, dir, s).repartition(cpus * 2).cache()
-      val n = emb.count()
-      val queries = emb.filter($"vec_id" < 100)
-      val z = SimilarityInt.zCodes(emb).cache()
-      z.count()
+      val z = SimilarityInt.zCodes(
+        scaledEmbeddings(spark, dir, s).repartition(cpus * 2)).cache()
+      val n = z.count()
       val zq = z.filter($"vid" < 100)
       println(s"== ann-int ${s}x: $n vectors")
       val probes: Seq[(String, () => Long)] = Seq(
-        "ivf_float" -> (() =>
-          Similarity.ivfTopK(emb, queries, k = 10, nlist = 128,
-            nprobe = 16, lloydIters = 2).count()),
         "ivf_int" -> (() => {
           val idx = SimilarityInt.ivfBuildInt(z, nlist = 128, iters = 2,
             seed = 42L, memoKey = s"sp:ivfint:$s")
           SimilarityInt.ivfTopKInt(idx, zq, z, k = 10, nprobe = 16).count()
-        }),
-        "pq_float" -> (() => {
-          val cb = Similarity.pqTrain(emb, m = 8, ksub = 16, lloydIters = 2)
-          Similarity.pqTopK(Similarity.pqEncode(emb, cb), cb, emb,
-            queries, k = 10, rerank = 50).count()
         }),
         "pq_int" -> (() => {
           val cb = SimilarityInt.pqTrainInt(z, m = 8, ksub = 16, iters = 2,
             seed = 42L, memoKey = s"sp:pqint:$s")
           SimilarityInt.pqTopKInt(SimilarityInt.pqEncodeInt(z, cb), cb, z,
             zq, k = 10, rerank = 50).count()
-        }),
-        "ivfpq_float" -> (() => {
-          val idx = Similarity.ivfPqBuild(emb, nlist = 64, m = 8,
-            ksub = 16, lloydIters = 2)
-          Similarity.ivfPqTopK(idx, queries, emb, k = 10, nprobe = 16,
-            rerank = 50).count()
         }),
         "ivfpq_int" -> (() => {
           val idx = SimilarityInt.ivfPqBuildInt(z, nlist = 64, m = 8,
@@ -441,7 +423,7 @@ object ScaleProbe {
         val (c, t) = timeIt(f())
         println(f"  $nm%-12s $t%7.2f s  rows=$c%d")
       }
-      emb.unpersist(); z.unpersist()
+      z.unpersist()
     }
   }
 
@@ -677,8 +659,14 @@ object ScaleProbe {
         }),
         "q41_ann_topk" -> (() =>
           operators.Similarity.annTopK(emb, queries, k = 10).count()),
-        "q43_ann_ivf" -> (() =>
-          operators.Similarity.ivfTopK(emb, queries, k = 10).count()),
+        // the registered q43: integer IVF at its dials
+        "q43_ann_ivf" -> (() => {
+          val z = operators.SimilarityInt.zCodes(emb)
+          val idx = operators.SimilarityInt.ivfBuildInt(z, nlist = 128,
+            iters = 2, seed = 42L, memoKey = s"sp:q43:$s")
+          operators.SimilarityInt.ivfTopKInt(idx, z.filter($"vid" < 100),
+            z, k = 10, nprobe = 16).count()
+        }),
         // substream valve engaged: the probe's copies all share one
         // doc_id range per source, the skew shape the valve exists for
         "q71_pack_sequences" -> (() =>

@@ -18,8 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
   /** Exact dedup by content hash: keep the smallest doc_id per md5(text).
     * One hash-shuffle; at 100 TB this is the standard first pass — and
     * it MUST run before MinHash/SimHash: exact-duplicate cliques of c
@@ -517,7 +515,9 @@ object Dedup {
     * i re-executes rounds 1..i-1 and the job goes quadratic). Rounds
     * needed = graph diameter; near-dup clusters are shallow (dups of a
     * common original), so convergence is fast. At extreme scale swap
-    * for large-star/small-star, same contract. */
+    * for large-star/small-star, same contract. Throws
+    * IllegalStateException when `maxIter` rounds pass without a
+    * fixpoint: the labels would not all be component minima. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     val edges = pairs
       .select(col("d1").as("a"), col("d2").as("b"))
@@ -553,7 +553,8 @@ object Dedup {
     // A non-fixpoint exit degrades to a single (possibly non-minimal)
     // label per node — results LOOK valid, so the failure must be loud.
     if (!converged)
-      log.warn(s"connectedComponents: no fixpoint after $maxIter rounds; " +
+      throw new IllegalStateException(
+        s"connectedComponents: no fixpoint after $maxIter rounds; " +
         "labels may not be component minima (raise maxIter or use " +
         "connectedComponentsStars for deep graphs)")
     labels.select(col("node").as("doc_id"), col("label").as("component_id"))
@@ -1036,8 +1037,7 @@ object Dedup {
       edges = afterSmall
       i += 1
     }
-    // Unlike the min-label variant (which degrades to one wrong label),
-    // a non-fixpoint edge set here emits MULTIPLE (doc_id, component_id)
+    // A non-fixpoint edge set here emits MULTIPLE (doc_id, component_id)
     // rows per node, and dedupCorpus's `component_id === doc_id` filter
     // would then keep/drop duplicates arbitrarily. Fail fast instead of
     // returning a silently-corrupt labeling.

@@ -8,7 +8,8 @@ import org.apache.spark.sql.expressions.Window
   * (`array<float>`), for similarity search and embedding-cosine dedup
   * in a training-data pipeline.
   *
-  * Two paths, same output contract (query_id, neighbor_id, rank):
+  * Two float top-k paths, same output contract (query_id,
+  * neighbor_id, rank):
   *   - [[bruteForceTopK]] — exact cosine against every corpus vector.
   *     The correctness baseline; O(|corpus|·|queries|) but fully
   *     distributed: queries broadcast, corpus streamed, per-query
@@ -16,6 +17,11 @@ import org.apache.spark.sql.expressions.Window
   *   - [[annTopK]] — signed-random-projection LSH: vectors meet only
   *     inside equal (table, bucket) cells, so the corpus scan is
   *     replaced by bucket joins. The 100 TB path.
+  *
+  * The index families — IVF, PQ and IVF-PQ — live in
+  * [[SimilarityInt]], integer-exact and DuckDB-replayable; this file
+  * keeps the float baselines, the SRP-LSH family and the int8
+  * pair/semantic-dedup operators.
   *
   * All per-row math goes through two native codegen'd expressions —
   * [[graft.functions.CosineSim]] (scoring) and
@@ -100,8 +106,7 @@ object Similarity {
   }
 
   /** Exact-score a candidate (query_id, neighbor_id) frame and keep
-    * the per-query top-k — the shared verification tail of every ANN
-    * path (candidates differ, scoring doesn't). */
+    * the per-query top-k — [[annTopK]]'s verification tail. */
   private def scoreTopK(candidates: DataFrame, corpus: DataFrame, queries: DataFrame,
                         k: Int, idCol: String, vecCol: String): DataFrame = {
     val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
@@ -110,173 +115,6 @@ object Similarity {
     candidates
       .join(broadcast(qv), "query_id")
       .join(cv, "neighbor_id")
-      .withColumn("cos", expr("cosine_sim(qv, cv)"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank")
-  }
-
-  /** Per-vector nearest-centroid assignment (cosine argmax): the
-    * shared kernel of IVF list-building and Lloyd refinement.
-    * Centroids broadcast; the groupBy's max_by partial-aggregates
-    * map-side, so the shuffle carries one row per vector. The `-cid`
-    * tie-break keeps the argmax deterministic under score ties. */
-  private def assignToCentroids(vecs: DataFrame, cents: DataFrame): DataFrame =
-    vecs
-      .crossJoin(broadcast(cents))
-      .withColumn("cos", expr("cosine_sim(cv, cvec)"))
-      .groupBy("vid")
-      .agg(
-        max_by(col("cid"), struct(col("cos"), -col("cid"))).as("list_id"),
-        first(col("cv")).as("cv")) // constant within the group
-
-  /** One or more Lloyd iterations over seeded centroids: assign the
-    * training vectors to their nearest centroid, replace each centroid
-    * with the per-dimension MEAN of its members — the k-means step
-    * that moves list centers toward the data's density, which is what
-    * lifts recall at a fixed probed share (measured via RecallProbe on
-    * the pinned dials nlist=64/nprobe=8, lloyd=2: 0.46 -> 0.57
-    * recall@10 at a 1/8 probed share — the sweep row q58 is pinned to).
-    *
-    * Determinism at any partitioning: the mean accumulates in exact
-    * DECIMAL (FP addition is not associative across partitions, and a
-    * partitioning-dependent centroid would flip downstream top-k rows
-    * between runs); members collect back into a vector via an
-    * array_sort on (pos, m) structs. A centroid that captures no
-    * training vectors drops out (its list would be empty anyway). */
-  private def refineCentroids(train: DataFrame, cents0: DataFrame,
-                              iters: Int): DataFrame = {
-    var cents = cents0
-    for (_ <- 1 to iters) {
-      cents = assignToCentroids(train, cents)
-        .select(col("list_id"), posexplode(col("cv")).as(Seq("pos", "v")))
-        .groupBy("list_id", "pos")
-        .agg((sum(col("v").cast("decimal(27,15)")) / count(lit(1)))
-          .cast("double").as("m"))
-        .groupBy("list_id")
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("list_id").as("cid"),
-          expr("transform(pm, s -> s.m)").as("cvec"))
-    }
-    cents
-  }
-
-  /** IVF-flat approximate top-k: the corpus is coarse-quantized into
-    * `nlist` inverted lists (centroids = a deterministic seeded-hash
-    * sample of the corpus, refined by `lloydIters` distributed k-means
-    * steps over a bounded training sample), each vector joins its
-    * nearest centroid's list, and each query exactly scores only the
-    * members of its `nprobe` nearest lists.
-    *
-    * vs [[annTopK]] (SRP-LSH): IVF adapts to the data distribution —
-    * lists land where vectors are dense — while SRP is data-oblivious;
-    * candidate volume is ~nprobe/nlist of the corpus by construction,
-    * a directly tunable recall/cost dial. Both are bucket joins, never
-    * O(n²).
-    *
-    * Scale shape: centroids are a broadcast dimension (nlist·dim
-    * doubles); Lloyd training runs on a hash-sample capped at
-    * 256·nlist vectors (the standard IVF practice — training cost is
-    * bounded regardless of corpus size, and 256 members per list is
-    * plenty for stable means); corpus assignment is one broadcast
-    * nested-loop pass + a map-side-combinable argmax (shuffle carries
-    * one row per vector); the list join shuffles ids only. Hot lists
-    * (dense regions) are AQE skew-join territory, same as any skewed
-    * key. */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              nlist: Int = 32, nprobe: Int = 4, lloydIters: Int = 2,
-              seed: Long = 42L,
-              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    ivfTopKIndexed(
-      ivfBuildIndex(corpus, nlist, lloydIters, seed, idCol, vecCol),
-      queries, k, nprobe, idCol, vecCol)
-
-  /** Materialized IVF index: the centroid table (cid, cvec) and the
-    * posting lists (vid, cv, list_id — vectors clustered by their
-    * nearest centroid). An ingest pipeline persists both and appends
-    * new vectors via [[ivfAssign]] against the FROZEN centroids; query
-    * time is [[ivfTopKIndexed]] — no retraining, no corpus re-scan.
-    * (Centroid drift under a shifting distribution is the operator's
-    * documented retrain trigger, not something queries pay for.) */
-  case class IvfIndex(centroids: DataFrame, lists: DataFrame)
-
-  /** Train centroids (seeded sample + bounded Lloyd refinement) and
-    * cluster the corpus into posting lists — [[ivfTopK]]'s build leg,
-    * exposed for index materialization. */
-  def ivfBuildIndex(corpus: DataFrame,
-                    nlist: Int = 32, lloydIters: Int = 2, seed: Long = 42L,
-                    idCol: String = "vec_id", vecCol: String = "embedding"): IvfIndex = {
-    registerFns(corpus)
-    // deterministic density-following sample: the nlist corpus rows
-    // with the smallest seeded id-hashes; the centroid's own vec_id is
-    // the list id (no global row_number needed)
-    val seeds = corpus
-      .select(col(idCol).as("cid"), col(vecCol).as("cvec"))
-      .withColumn("h", xxhash64(col("cid"), lit(seed)))
-      .orderBy("h").limit(nlist)
-      .select("cid", "cvec")
-    val centsPlan =
-      if (lloydIters <= 0) seeds
-      else {
-        // bounded deterministic training sample: smallest seeded
-        // id-hashes again (a different seed stream than the centroid
-        // draw so the sample isn't biased toward the seeds)
-        val train = corpus
-          .select(col(idCol).as("vid"), col(vecCol).as("cv"))
-          .withColumn("h", xxhash64(col("vid"), lit(seed + 1)))
-          .orderBy("h").limit(256 * nlist)
-          .select("vid", "cv")
-        refineCentroids(train, seeds, lloydIters)
-      }
-    // Materialize the centroid table ONCE (nlist rows — trivial to
-    // cache, expensive to rebuild): it feeds two broadcasts (corpus
-    // assignment + query probing) and AQE's exchange reuse does not
-    // reliably dedupe them, so an unpersisted plan re-runs the whole
-    // multi-stage Lloyd chain per consumer (measured ~2× q43 wall
-    // time). Routed through Memo so benchmark passes and session end
-    // reclaim it; the key carries every input that shapes the result.
-    val cents = graft.ops.Memo.of(corpus.sparkSession,
-      s"ivf_cents:$nlist:$lloydIters:$seed:$idCol:$vecCol:${graft.ops.Memo.frameKey(corpus)}") {
-      centsPlan
-    }
-    IvfIndex(cents, ivfAssign(cents,
-      corpus.select(col(idCol).as("vid"), col(vecCol).as("cv"))))
-  }
-
-  /** Cluster vectors (vid, cv) into posting-list rows against frozen
-    * centroids — the per-batch append of a vector ingest. */
-  def ivfAssign(centroids: DataFrame, vectors: DataFrame): DataFrame =
-    assignToCentroids(vectors, centroids).select("vid", "cv", "list_id")
-
-  /** IVF query against a materialized index: probe the `nprobe`
-    * nearest lists per query, exactly score only their members. Same
-    * output contract (and bit-identical results) as [[ivfTopK]] at
-    * equal dials — the spec pins the equivalence. */
-  def ivfTopKIndexed(index: IvfIndex, queries: DataFrame, k: Int,
-                     nprobe: Int = 4,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    registerFns(queries)
-    // query → nprobe nearest lists (query batch is small; the window
-    // partitions by query)
-    val wq = Window.partitionBy("query_id").orderBy(col("cos").desc, col("cid").asc)
-    val probes = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .crossJoin(broadcast(index.centroids))
-      .withColumn("cos", expr("cosine_sim(qv, cvec)"))
-      .withColumn("pr", row_number().over(wq))
-      .filter(col("pr") <= nprobe)
-      .select(col("query_id"), col("cid").as("list_id"))
-    // every vector sits in exactly one list and probes are distinct
-    // lists, so (query, neighbor) candidates are already unique; the
-    // lists carry their vectors (the IVF layout), so scoring needs no
-    // corpus join
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    index.lists
-      .select(col("vid").as("neighbor_id"), col("cv"), col("list_id"))
-      .join(probes.hint("broadcast"), Seq("list_id"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .join(broadcast(qv), "query_id")
       .withColumn("cos", expr("cosine_sim(qv, cv)"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
@@ -309,300 +147,6 @@ object Similarity {
   def dequantize(df: DataFrame, outCol: String = "dq"): DataFrame =
     df.withColumn(outCol,
       expr("transform(q, v -> qmin + (cast(v as double) + 128.0d) * qscale)"))
-
-  // ------------------------------------------------ product quantization
-
-  /** L2-normalize a vector column into `outCol` (double). Constant/
-    * zero vectors keep direction 0 instead of dividing by zero. On a
-    * normalized corpus, L2² = 2 − 2·cos, so PQ's Euclidean machinery
-    * ranks exactly like cosine — which is what lets [[pqTopK]] share
-    * q40's cosine ground truth. */
-  def l2Normalize(df: DataFrame, vecCol: String = "embedding",
-                  outCol: String = "nv"): DataFrame =
-    df
-      .withColumn("_nrm", expr(
-        s"sqrt(aggregate(zip_with($vecCol, $vecCol, " +
-          "(x, y) -> cast(x as double) * y), 0d, (a, v) -> a + v))"))
-      .withColumn(outCol, expr(
-        s"transform($vecCol, x -> cast(x as double) / greatest(_nrm, 1e-30d))"))
-      .drop("_nrm")
-
-  /** Squared L2 between two double arrays, accumulated strictly
-    * left-to-right (bit-deterministic across partitionings). */
-  private def l2sqSql(a: String, b: String): String =
-    s"aggregate(zip_with($a, $b, (x, y) -> (x - y) * (x - y)), " +
-      "0d, (acc, v) -> acc + v)"
-
-  /** Explode a normalized vector into its m subvectors: rows
-    * (…, sub, sv) with sv = dims [sub·d/m, (sub+1)·d/m). The split is
-    * in-plan (`size(nv) div m`), so one codebook API serves any
-    * dimension; dims must divide evenly by m — ENFORCED in-plan with
-    * `raise_error` (a silent `div` would drop the trailing `size mod
-    * m` dimensions and rank on a prefix of every vector with no
-    * sign anything was lost). */
-  private def subvectors(df: DataFrame, m: Int): DataFrame =
-    df
-      .withColumn("_nvck", when(expr(s"pmod(size(nv), $m) != 0"),
-        expr(s"cast(raise_error(concat('PQ: vector dim ', size(nv), " +
-          s"' not divisible by m=$m')) as array<double>)"))
-        .otherwise(col("nv")))
-      .select(col("*"), explode(expr(
-        s"transform(sequence(0, ${m - 1}), _s -> struct(_s as sub, " +
-          s"slice(_nvck, _s * (size(_nvck) div $m) + 1, size(_nvck) div $m) as sv))"))
-        .as("p"))
-      .withColumn("sub", col("p.sub")).withColumn("sv", col("p.sv"))
-      .drop("p", "nv", "_nvck")
-
-  /** Per-subspace codebooks: (sub, cid, cvec) — `m` independent
-    * ksub-way k-means problems over the corpus' subvectors. */
-  case class PqCodebook(centroids: DataFrame, m: Int, ksub: Int)
-
-  /** Nearest-centroid assignment per (vector, subspace): argmin L2²
-    * with a cid-asc tiebreak — deterministic on every partitioning. */
-  private def pqAssign(subvecs: DataFrame, cents: DataFrame): DataFrame =
-    subvecs.join(broadcast(cents), Seq("sub"))
-      .withColumn("d2", expr(l2sqSql("sv", "cvec")))
-      .groupBy("vid", "sub")
-      .agg(max_by(col("cid"), struct((-col("d2")).as("nd"),
-        (-col("cid")).as("nc"))).as("cid"),
-        first(col("sv")).as("sv")) // constant within the group
-
-  /** Train product-quantization codebooks — Jégou et al., "Product
-    * Quantization for Nearest Neighbor Search" (TPAMI 2011): split
-    * each (L2-normalized) vector into `m` subvectors, k-means each
-    * subspace to `ksub` centroids, so a d-dim float vector compresses
-    * to m small codes (m bytes at ksub ≤ 256 — 32× beyond
-    * [[quantizeInt8]]'s 4×) while distances remain computable against
-    * the codes alone. The k-means machinery mirrors [[ivfBuildIndex]]
-    * exactly: deterministic smallest-seeded-hash seeds (one draw
-    * shared by all subspaces — each gets its slice), a bounded
-    * 256·ksub training sample so training cost is corpus-size-free,
-    * Lloyd means in exact DECIMAL (partitioning-deterministic), empty
-    * centroids drop. Memoized per (dials, corpus plan) like the IVF
-    * centroid table and for the same reason: it feeds multiple
-    * broadcasts. */
-  def pqTrain(corpus: DataFrame, m: Int = 8, ksub: Int = 16,
-              lloydIters: Int = 2, seed: Long = 42L,
-              idCol: String = "vec_id", vecCol: String = "embedding"): PqCodebook =
-    pqTrainOn(
-      l2Normalize(corpus, vecCol).select(col(idCol).as("vid"), col("nv")),
-      m, ksub, lloydIters, seed,
-      s"pq_cents:$m:$ksub:$lloydIters:$seed:$idCol:$vecCol:${graft.ops.Memo.frameKey(corpus)}")
-
-  /** [[pqTrain]]'s core over a PRE-BUILT (vid, nv) frame with NO
-    * normalization — the residual-space entry point: IVF-PQ quantizes
-    * `nv − coarse_centroid` vectors, which must not be re-normalized
-    * (their magnitude IS the information the codebook captures). */
-  private[operators] def pqTrainOn(nv: DataFrame, m: Int, ksub: Int,
-                                   lloydIters: Int, seed: Long,
-                                   memoKey: String): PqCodebook = {
-    require(m >= 1 && ksub >= 2, s"bad PQ dials: m=$m ksub=$ksub")
-    val w = Window.orderBy(col("h").asc, col("vid").asc)
-    val seeds = subvectors(
-      nv.withColumn("h", xxhash64(col("vid"), lit(seed)))
-        .orderBy("h", "vid").limit(ksub)
-        .withColumn("cid", row_number().over(w) - 1), m)
-      .select(col("sub"), col("cid"), col("sv").as("cvec"))
-    val cents0 =
-      if (lloydIters <= 0) seeds
-      else {
-        val train = subvectors(
-          nv.withColumn("h", xxhash64(col("vid"), lit(seed + 1)))
-            .orderBy("h", "vid").limit(256 * ksub).drop("h"), m)
-        var cents = seeds
-        for (_ <- 1 to lloydIters) {
-          cents = pqAssign(train, cents)
-            .select(col("sub"), col("cid"), posexplode(col("sv")).as(Seq("pos", "v")))
-            .groupBy("sub", "cid", "pos")
-            .agg((sum(col("v").cast("decimal(27,15)")) / count(lit(1)))
-              .cast("double").as("mu"))
-            .groupBy("sub", "cid")
-            .agg(array_sort(collect_list(struct(col("pos"), col("mu")))).as("pm"))
-            .select(col("sub"), col("cid"),
-              expr("transform(pm, s -> s.mu)").as("cvec"))
-        }
-        cents
-      }
-    val cents = graft.ops.Memo.of(nv.sparkSession, memoKey)(cents0)
-    PqCodebook(cents, m, ksub)
-  }
-
-  /** Encode a corpus against frozen codebooks: (vec_id, sub, code) —
-    * the materialized PQ index rows a vector ingest appends to, m
-    * small integers per vector. One broadcast pass, shuffle carries
-    * ids+codes only. */
-  def pqEncode(corpus: DataFrame, cb: PqCodebook,
-               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    pqEncodeOn(l2Normalize(corpus, vecCol)
-      .select(col(idCol).as("vid"), col("nv")), cb)
-      .select(col("vid").as(idCol), col("sub"), col("code"))
-
-  /** [[pqEncode]]'s core over a pre-built (vid, nv) frame (no
-    * normalization — the residual-space entry point). */
-  private[operators] def pqEncodeOn(nv: DataFrame, cb: PqCodebook): DataFrame =
-    pqAssign(subvectors(nv, cb.m), cb.centroids)
-      .select(col("vid"), col("sub"), col("cid").as("code"))
-
-  /** Residual encode with the list id CARRIED through the argmax's
-    * group keys (constant per vid) — the IVF-PQ build/append path
-    * needs (vid, list_id, sub, code) and would otherwise pay a
-    * join-back to the assignment frame for a column it already had. */
-  private def pqEncodeListed(resid: DataFrame, cb: PqCodebook): DataFrame =
-    subvectors(resid, cb.m)
-      .join(broadcast(cb.centroids), Seq("sub"))
-      .withColumn("d2", expr(l2sqSql("sv", "cvec")))
-      .groupBy("vid", "list_id", "sub")
-      .agg(max_by(col("cid"), struct((-col("d2")).as("nd"),
-        (-col("cid")).as("nc"))).as("code"))
-      .select("vid", "list_id", "sub", "code")
-
-  /** Asymmetric-distance top-k over a PQ-encoded corpus (ADC, Jégou
-    * et al. §IV): each query computes one m×ksub distance table
-    * against the codebooks (exact query vs quantized corpus — the
-    * asymmetric side is free precision), every corpus vector's
-    * approximate distance is m table LOOKUPS summed — never a d-dim
-    * float op — and the ADC top-`rerank` shortlist is re-scored
-    * exactly (the standard two-stage: ADC recalls, floats decide).
-    * Same output contract as [[bruteForceTopK]]; scale shape: the
-    * table is |Q|·m·ksub broadcast rows, the corpus side touches only
-    * (id, sub, code) — the point of PQ at 100 TB: the float corpus
-    * stays on disk until the shortlist. */
-  def pqTopK(codes: DataFrame, cb: PqCodebook,
-             corpus: DataFrame, queries: DataFrame, k: Int,
-             rerank: Int = 50,
-             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    require(rerank >= k, s"rerank window $rerank must cover k=$k")
-    registerFns(queries) // scoreTopK's exact rerank uses cosine_sim
-    val table = subvectors(
-      l2Normalize(queries, vecCol)
-        .select(col(idCol).as("query_id"), col("nv")), cb.m)
-      .join(broadcast(cb.centroids), Seq("sub"))
-      .withColumn("d2", expr(l2sqSql("sv", "cvec")))
-      .select(col("query_id"), col("sub"), col("cid").as("code"), col("d2"))
-    val wa = Window.partitionBy("query_id")
-      .orderBy(col("adist").asc, col("neighbor_id").asc)
-    val shortlist = codes
-      .select(col(idCol).as("neighbor_id"), col("sub"), col("code"))
-      .join(broadcast(table), Seq("sub", "code"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .groupBy("query_id", "neighbor_id")
-      // exact DECIMAL accumulation: FP addition over the m partial
-      // distances is partitioning-order-dependent, and a flipped ulp
-      // on an adist tie would swap shortlist membership between runs
-      .agg(sum(col("d2").cast("decimal(27,15)")).as("adist"))
-      .withColumn("ar", row_number().over(wa))
-      .filter(col("ar") <= rerank)
-      .select("query_id", "neighbor_id")
-    scoreTopK(shortlist, corpus, queries, k, idCol, vecCol)
-  }
-
-  // --------------------------------------------------------- IVF-PQ (IVFADC)
-
-  /** Materialized IVF-PQ index — Jégou et al. §V's IVFADC, the actual
-    * 100 TB embedding-store layout: coarse centroids route queries to
-    * lists, and each list member is stored as m PQ codes of its
-    * RESIDUAL (vector − its list's centroid). `centroids` (cid, cvec)
-    * live in the L2-normalized corpus space; `codebook` quantizes
-    * residual space; `codes` rows are (vid, list_id, sub, code) — the
-    * whole corpus persists as m+1 small integers per vector. */
-  case class IvfPqIndex(centroids: DataFrame, codebook: PqCodebook,
-                        codes: DataFrame)
-
-  /** Build an IVF-PQ index: coarse-quantize the normalized corpus into
-    * `nlist` lists (the [[ivfBuildIndex]] machinery verbatim), then
-    * PQ-train on the RESIDUALS and encode every vector's residual
-    * against the shared codebook. Residuals are the reason IVFADC
-    * out-recalls flat PQ at equal code budget: after subtracting the
-    * list centroid the vectors the codebook must cover occupy a much
-    * smaller ball, so the same ksub centroids quantize finer (Jégou
-    * §V.A). Residuals are NOT re-normalized — their magnitude is the
-    * signal ([[pqTrainOn]]).
-    *
-    * Scale shape: everything bounded or per-row — coarse training on
-    * the 256·nlist sample, PQ training on a 256·ksub residual sample,
-    * corpus assignment one broadcast pass, the final code join
-    * shuffles (id, list, sub, code) ints only. */
-  def ivfPqBuild(corpus: DataFrame, nlist: Int = 64, m: Int = 8,
-                 ksub: Int = 16, lloydIters: Int = 2, seed: Long = 42L,
-                 idCol: String = "vec_id", vecCol: String = "embedding"): IvfPqIndex = {
-    registerFns(corpus)
-    val nvCorpus = l2Normalize(corpus, vecCol)
-      .select(col(idCol).as("vec_id"), col("nv").as("embedding"))
-    val ivf = ivfBuildIndex(nvCorpus, nlist, lloydIters, seed)
-    // residual per assigned vector: nv − its list's centroid
-    val resid = ivf.lists
-      .join(broadcast(ivf.centroids), col("list_id") === col("cid"))
-      .select(col("vid"), col("list_id"),
-        expr("zip_with(cv, cvec, (x, c) -> x - c)").as("nv"))
-    val cb = pqTrainOn(resid.select("vid", "nv"), m, ksub, lloydIters, seed,
-      s"ivfpq_cents:$nlist:$m:$ksub:$lloydIters:$seed:$idCol:$vecCol:" +
-        graft.ops.Memo.frameKey(corpus))
-    IvfPqIndex(ivf.centroids, cb, pqEncodeListed(resid, cb))
-  }
-
-  /** Cluster + encode vectors against a FROZEN IVF-PQ index (coarse
-    * centroids + residual codebook): (vid, list_id, sub, code) rows —
-    * the per-batch append of a vector ingest, mirroring [[ivfAssign]]
-    * for the composed index. One broadcast assignment pass + one
-    * broadcast encode pass; the shuffle carries ids + ints only. */
-  def ivfPqAssign(centroids: DataFrame, cb: PqCodebook, vectors: DataFrame,
-                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    registerFns(vectors)
-    val nv = l2Normalize(vectors, vecCol)
-      .select(col(idCol).as("vid"), col("nv").as("cv"))
-    val resid = assignToCentroids(nv, centroids)
-      .join(broadcast(centroids), col("list_id") === col("cid"))
-      .select(col("vid"), col("list_id"),
-        expr("zip_with(cv, cvec, (x, c) -> x - c)").as("nv"))
-    pqEncodeListed(resid, cb)
-  }
-
-  /** IVF-PQ top-k (IVFADC search, Jégou §V.B): each query probes its
-    * `nprobe` nearest lists, computes ONE m×ksub residual distance
-    * table PER PROBED LIST (the query residual differs per list —
-    * that is the asymmetric+residual trick), ADC-scores only the
-    * probed lists' code rows by m lookups each, and float-reranks the
-    * decimal-deterministic shortlist. vs flat [[pqTopK]]: the scored
-    * candidate set drops from the whole corpus to ~nprobe/nlist of it,
-    * while residual codebooks quantize finer — recall goes UP as cost
-    * goes down (q175 pins both sides of that trade on the fixture).
-    * The broadcast side is |Q|·nprobe·m·ksub table rows; the corpus
-    * side moves only the probed lists' int codes. */
-  def ivfPqTopK(index: IvfPqIndex, queries: DataFrame, corpus: DataFrame,
-                k: Int, nprobe: Int = 16, rerank: Int = 50,
-                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    require(rerank >= k, s"rerank window $rerank must cover k=$k")
-    registerFns(queries)
-    val qn = l2Normalize(queries, vecCol)
-      .select(col(idCol).as("query_id"), col("nv").as("qv"))
-    val wq = Window.partitionBy("query_id").orderBy(col("cos").desc, col("cid").asc)
-    // probe routing + per-list query residual in one pass
-    val probes = qn
-      .crossJoin(broadcast(index.centroids))
-      .withColumn("cos", expr("cosine_sim(qv, cvec)"))
-      .withColumn("pr", row_number().over(wq))
-      .filter(col("pr") <= nprobe)
-      .select(col("query_id"), col("cid").as("list_id"),
-        expr("zip_with(qv, cvec, (x, c) -> x - c)").as("nv"))
-    val table = subvectors(probes, index.codebook.m)
-      .join(broadcast(index.codebook.centroids), Seq("sub"))
-      .withColumn("d2", expr(l2sqSql("sv", "cvec")))
-      .select(col("query_id"), col("list_id"), col("sub"),
-        col("cid").as("code"), col("d2"))
-    val wa = Window.partitionBy("query_id")
-      .orderBy(col("adist").asc, col("neighbor_id").asc)
-    val shortlist = index.codes
-      .select(col("vid").as("neighbor_id"), col("list_id"), col("sub"), col("code"))
-      .join(broadcast(table), Seq("list_id", "sub", "code"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .groupBy("query_id", "neighbor_id")
-      // exact decimal accumulation — the pqTopK determinism stance
-      .agg(sum(col("d2").cast("decimal(27,15)")).as("adist"))
-      .withColumn("ar", row_number().over(wa))
-      .filter(col("ar") <= rerank)
-      .select("query_id", "neighbor_id")
-    scoreTopK(shortlist, corpus, queries, k, idCol, vecCol)
-  }
 
   /** Exact all-pairs cosine above a threshold — the brute-force
     * ORACLE leg for [[cosineNearDupPairs]] (same contract), O(n²) by

@@ -4,23 +4,22 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 
-/** INTEGER-EXACT product quantization and IVF — the r19 VERDICT's
-  * remaining correctness tier: [[Similarity.pqTopK]]/[[Similarity
-  * .ivfPqTopK]] are float pipelines (decimal-deterministic WITHIN
-  * Spark, but k-means means and cosine reranks carry engine-specific
-  * float reductions no DuckDB oracle can replay), so their registered
-  * queries sat at rows-only checks with pinned recall companions.
-  * This family re-expresses the SAME index structures — PQ/ADC
-  * (Jégou et al. TPAMI 2011 §IV), IVF-flat, and IVFADC (§V) — over
-  * integer-quantized NORMALIZED vectors, where every training step,
-  * every distance, and the final ranking are exact BIGINT arithmetic:
-  * the full top-k output replays bit-for-bit in DuckDB (the q81
-  * `semanticDedup` recipe applied to the whole index family, r20).
+/** The ANN index family — product quantization, IVF-flat and IVF-PQ
+  * — in INTEGER-EXACT form: PQ/ADC (Jégou et al. TPAMI 2011 §IV),
+  * IVF-flat, and IVFADC (§V) over integer-quantized NORMALIZED
+  * vectors, where every training step, every distance, and the final
+  * ranking are exact BIGINT arithmetic. Float k-means means and cosine
+  * reranks carry engine-specific reductions no DuckDB oracle can
+  * replay; here the full top-k output replays bit-for-bit in DuckDB
+  * (the q81 `semanticDedup` recipe applied to the whole index
+  * family). The registered index queries (q43 IVF, q171 PQ, q174
+  * IVF-PQ) and the streamed index ([[graft.streaming.VectorIngest]])
+  * all run on it.
   *
   * The coding: z_i = round(Scale · x_i / ‖x‖₂) — int codes of the
   * L2-NORMALIZED vector, so ‖z‖ ≈ Scale for every vector and squared
-  * L2 over z ranks like cosine over x (the [[Similarity.l2Normalize]]
-  * identity, quantized); the exact-integer dot over z is the rerank
+  * L2 over z ranks like cosine over x (on unit vectors L2² = 2 −
+  * 2·cos, quantized); the exact-integer dot over z is the rerank
   * metric. The ONLY float work is the per-row coding chain (widen →
   * square → left-to-right sum → sqrt → divide → scale → round): every
   * op is a correctly-rounded IEEE-754 double op in a FIXED order, so
@@ -34,16 +33,13 @@ import org.apache.spark.sql.functions._
   * centroid updates are sign-split TRUNCATING integer means
   * ([[Spectral]]'s rescale spelling), argmins tie-break on centroid
   * id ascending, shortlists and ranks tie-break on neighbor id
-  * ascending. Quantization costs recall precision vs the float forms
-  * (~1e-4 relative on each coordinate — far below the codebooks' own
-  * quantization error); the float forms remain the API for callers
-  * who want them ([[Similarity]]), with their specs intact.
+  * ascending. Quantization costs ~1e-4 relative precision on each
+  * coordinate — far below the codebooks' own quantization error.
   *
-  * Scale shape is unchanged from the float family: codebooks and
-  * LUTs broadcast, the corpus side of every shuffle carries ids +
-  * small ints only, training runs on md5-bounded samples
-  * (corpus-size-free), and int64 codes are HALF the bytes of float64
-  * through every exchange.
+  * Scale shape: codebooks and LUTs broadcast, the corpus side of
+  * every shuffle carries ids + small ints only, training runs on
+  * md5-bounded samples (corpus-size-free), and int64 codes are HALF
+  * the bytes of float64 through every exchange.
   */
 object SimilarityInt {
 
@@ -58,7 +54,7 @@ object SimilarityInt {
     * accumulates strictly left-to-right from a 0.0 seed (bitwise
     * equal to DuckDB's seedless list_reduce on non-negative terms);
     * constant/zero vectors keep direction 0 via the 1e-30 guard
-    * (the [[Similarity.l2Normalize]] stance). */
+    * instead of dividing by zero. */
   def zCodes(df: DataFrame, idCol: String = "vec_id",
              vecCol: String = "embedding"): DataFrame =
     df
@@ -93,9 +89,11 @@ object SimilarityInt {
     graft.functions.BoundedMinKPairs.register(df.sparkSession)
   }
 
-  /** Split a z vector into its m subvectors: (…, sub, sv) — the
-    * [[Similarity.subvectors]] split with the same loud in-plan
-    * divisibility guard. */
+  /** Split a z vector into its m subvectors: (…, sub, sv) with sv =
+    * dims [sub·d/m, (sub+1)·d/m). Dims must divide evenly by m —
+    * ENFORCED in-plan with `raise_error` (a silent `div` would drop
+    * the trailing `d mod m` dims and rank on a prefix of every
+    * vector with no sign anything was lost). */
   private def subZ(df: DataFrame, m: Int): DataFrame =
     df
       .withColumn("_zck", when(expr(s"pmod(size(z), $m) != 0"),
@@ -161,15 +159,14 @@ object SimilarityInt {
           |        ELSE _s div size(svs) END)""".stripMargin).as("cvec"))
 
   /** Integer PQ codebooks: (sub, cid, cvec array<bigint>) — cid is
-    * the seed row's own vid (no global row_number; the
-    * [[Similarity.ivfBuildIndex]] id convention). */
-  case class IntCodebook(centroids: DataFrame, m: Int, ksub: Int)
+    * the seed row's own vid (no global row_number needed). */
+  case class IntCodebook(centroids: DataFrame, m: Int)
 
   /** Train integer PQ codebooks over a (vid, z) frame: md5-smallest
     * ksub seed rows, md5-bounded 256·ksub training sample (disjoint
     * seed stream), `iters` integer Lloyd steps. Memoized — the
-    * codebook feeds several broadcasts ([[Similarity.pqTrain]]'s
-    * reasoning). */
+    * codebook feeds several broadcasts, and an unpersisted plan would
+    * re-run the whole Lloyd chain per consumer. */
   def pqTrainInt(z: DataFrame, m: Int, ksub: Int, iters: Int,
                  seed: Long, memoKey: String): IntCodebook = {
     require(m >= 1 && ksub >= 2 && iters >= 0,
@@ -200,7 +197,7 @@ object SimilarityInt {
       for (_ <- 1 to iters) cents = lloydStep(train, cents)
       cents
     }
-    IntCodebook(done, m, ksub)
+    IntCodebook(done, m)
   }
 
   /** Encode a (vid, z) frame against frozen codebooks:
@@ -237,12 +234,13 @@ object SimilarityInt {
         (col("_p") + 1L).cast("long").as("rank"))
   }
 
-  /** Integer ADC top-k ([[Similarity.pqTopK]]'s contract): one
-    * m×ksub exact-integer distance table per query, adist = m BIGINT
-    * lookups summed (order-free — integer addition is associative,
-    * the reason the decimal crutch of the float form isn't needed),
-    * shortlist of `rerank` by (adist, neighbor_id), exact z-dot
-    * rerank. Every row of the output replays in DuckDB. */
+  /** Integer ADC top-k (Jégou et al. §IV): one m×ksub exact-integer
+    * distance table per query, adist = m BIGINT lookups summed
+    * (order-free — integer addition is associative, so the sum is the
+    * same on every partitioning), shortlist of `rerank` by (adist,
+    * neighbor_id), exact z-dot rerank. Output contract (query_id,
+    * neighbor_id, rank), as [[Similarity.bruteForceTopK]]. Every row
+    * of the output replays in DuckDB. */
   def pqTopKInt(codes: DataFrame, cb: IntCodebook, z: DataFrame,
                 queriesZ: DataFrame, k: Int, rerank: Int): DataFrame = {
     require(rerank >= k, s"rerank window $rerank must cover k=$k")
@@ -273,12 +271,17 @@ object SimilarityInt {
 
   /** Integer IVF index: full-dim centroids (cid, cvec) + clustered
     * lists (vid, z, list_id). Routing is argmin exact d2 — on the
-    * fixed-norm z coding that IS the cosine routing of the float
-    * form, minus the last-ulp engine dependence. */
+    * fixed-norm z coding that IS cosine routing, minus the last-ulp
+    * engine dependence. The lists carry each vector's z, so a search
+    * over a materialized index needs no corpus re-scan. */
   case class IntIvfIndex(centroids: DataFrame, lists: DataFrame)
 
-  /** Full-dim integer k-means + corpus clustering — the
-    * [[Similarity.ivfBuildIndex]] machinery on z codes. */
+  /** Full-dim integer k-means + corpus clustering: centroids are the
+    * md5-smallest `nlist` seed vectors (cid = the seed's vid), refined
+    * by `iters` integer Lloyd steps over an md5-bounded 256·nlist
+    * training sample (training cost is corpus-size-free); every
+    * vector then joins its nearest centroid's list
+    * ([[ivfAssignInt]]). */
   def ivfBuildInt(z: DataFrame, nlist: Int, iters: Int, seed: Long,
                   memoKey: String): IntIvfIndex = {
     require(nlist >= 1 && iters >= 0, s"bad IVF-int dials: $nlist/$iters")
@@ -301,17 +304,24 @@ object SimilarityInt {
       for (_ <- 1 to iters) cents = lloydStep(train, cents)
       cents.select(col("cid"), col("cvec"))
     }
-    val lists = z.select(lit(0).as("sub"), col("vid"), col("z").as("sv"))
-      .transform(sv => assignSub(sv,
-        done.select(lit(0).as("sub"), col("cid"), col("cvec"))))
+    IntIvfIndex(done, ivfAssignInt(done, z))
+  }
+
+  /** Cluster (vid, z) into list rows (vid, z, list_id) against frozen
+    * centroids (cid, cvec) — the list step of [[ivfBuildInt]] and the
+    * per-batch append of a vector ingest. One broadcast in-row argmin
+    * pass; the vectors never shuffle. */
+  def ivfAssignInt(centroids: DataFrame, z: DataFrame): DataFrame = {
+    registerKernels(z)
+    assignSub(z.select(lit(0).as("sub"), col("vid"), col("z").as("sv")),
+        centroids.select(lit(0).as("sub"), col("cid"), col("cvec")))
       .select(col("vid"), col("sv").as("z"), col("cid").as("list_id"))
-    IntIvfIndex(done, lists)
   }
 
   /** Integer IVF-flat top-k: probe the `nprobe` d2-nearest lists per
     * query, exact z-dot their members, per-query top-k. Fully
     * replayable — candidate volume is nprobe/nlist of the corpus by
-    * construction (the [[Similarity.ivfTopK]] scale argument). */
+    * construction, a directly tunable recall/cost dial. */
   def ivfTopKInt(index: IntIvfIndex, queriesZ: DataFrame, z: DataFrame,
                  k: Int, nprobe: Int): DataFrame = {
     registerKernels(z)
@@ -340,15 +350,14 @@ object SimilarityInt {
   }
 
   /** Integer IVFADC index: coarse centroids route, residual PQ codes
-    * store — (vid, list_id, sub, code), m+1 small ints per vector
-    * (the [[Similarity.IvfPqIndex]] layout, integer-exact). */
+    * store — (vid, list_id, sub, code), m+1 small ints per vector. */
   case class IntIvfPqIndex(centroids: DataFrame, codebook: IntCodebook,
                            codes: DataFrame)
 
   /** Build: integer coarse k-means (seed / seed+1 streams), integer
     * residuals r = z − centroid (their magnitude IS the signal — not
     * re-coded), residual PQ codebooks (seed+2 / seed+3 streams), one
-    * encode pass carrying list_id through the argmax keys. */
+    * encode pass carrying list_id through the row. */
   def ivfPqBuildInt(z: DataFrame, nlist: Int, m: Int, ksub: Int,
                     iters: Int, seed: Long, memoKey: String): IntIvfPqIndex = {
     registerKernels(z)
@@ -359,25 +368,39 @@ object SimilarityInt {
     // residuals derive from. One row per vector (m+1 small ints after
     // encode; d ints here), corpus-sized but narrow — the same
     // build-artifact stance as the memoized centroids.
-    val resid = ivf.lists
-      .join(broadcast(ivf.centroids), col("list_id") === col("cid"))
-      .select(col("vid"), col("list_id"),
-        expr("zip_with(z, cvec, (a, b) -> a - b)").as("z"))
-      .localCheckpoint(true)
+    val resid = residuals(ivf.lists, ivf.centroids).localCheckpoint(true)
     val cb = pqTrainInt(resid.select("vid", "z"), m, ksub, iters,
       seed + 2, memoKey + ":pq")
-    // r22: the encode pass is assignSub's in-row argmin — list_id
-    // rides through the row, so the old per-encode groupBy exchange
-    // (and its ksub-way join explosion) is gone
-    val codes = assignSub(subZ(resid, m), cb.centroids)
-      .select(col("vid"), col("list_id"), col("sub"), col("cid").as("code"))
-    IntIvfPqIndex(ivf.centroids, cb, codes)
+    IntIvfPqIndex(ivf.centroids, cb, encodeResiduals(resid, cb))
   }
 
-  /** Integer IVFADC search ([[Similarity.ivfPqTopK]]'s contract):
-    * nprobe d2-nearest lists, one m×ksub RESIDUAL distance table per
-    * (query, probed list), adist over probed code rows, shortlist,
-    * exact z-dot rerank. Bit-replayable end to end. */
+  /** Cluster + residual-encode (vid, z) against a FROZEN IVF-PQ index
+    * (coarse centroids + residual codebook): (vid, list_id, sub, code)
+    * rows — the per-batch append of a vector ingest, built from the
+    * same list-assignment and encode steps as [[ivfPqBuildInt]]. */
+  def ivfPqAssignInt(centroids: DataFrame, cb: IntCodebook,
+                     z: DataFrame): DataFrame =
+    encodeResiduals(residuals(ivfAssignInt(centroids, z), centroids), cb)
+
+  /** Integer residuals r = z − its list's centroid over list rows
+    * (vid, z, list_id): (vid, list_id, z = r). */
+  private def residuals(lists: DataFrame, centroids: DataFrame): DataFrame =
+    lists
+      .join(broadcast(centroids), col("list_id") === col("cid"))
+      .select(col("vid"), col("list_id"),
+        expr("zip_with(z, cvec, (a, b) -> a - b)").as("z"))
+
+  /** Encode residual rows (vid, list_id, z) against the codebook:
+    * assignSub's in-row argmin — list_id rides through the row, so no
+    * groupBy exchange is needed to carry it. */
+  private def encodeResiduals(resid: DataFrame, cb: IntCodebook): DataFrame =
+    assignSub(subZ(resid, cb.m), cb.centroids)
+      .select(col("vid"), col("list_id"), col("sub"), col("cid").as("code"))
+
+  /** Integer IVFADC search (Jégou et al. §V.B): nprobe d2-nearest
+    * lists, one m×ksub RESIDUAL distance table per (query, probed
+    * list), adist over probed code rows, shortlist, exact z-dot
+    * rerank. Bit-replayable end to end. */
   def ivfPqTopKInt(index: IntIvfPqIndex, queriesZ: DataFrame,
                    z: DataFrame, k: Int, nprobe: Int,
                    rerank: Int): DataFrame = {

@@ -71,16 +71,15 @@ object SimilarityQueries {
   /** IVF-flat approximate top-10 — the density-adaptive ANN variant,
     * since r20 the INTEGER-EXACT form ([[SimilarityInt.ivfBuildInt]]
     * /[[SimilarityInt.ivfTopKInt]]): integer k-means routing + exact
-    * z-dot scoring, so the FULL top-k output replays in DuckDB (was
-    * rows-only; the float [[Similarity.ivfTopK]] stays the API with
-    * its specs). Dial rationale carries over from the float probe
-    * sweeps — at a fixed probed share recall grows with list
+    * z-dot scoring, so the FULL top-k output replays in DuckDB.
+    * Dial rationale from the RecallProbe sweeps (run on the float
+    * form) — at a fixed probed share recall grows with list
     * resolution (16/2 = 0.33 → 128/16 = 0.68 at 1/8), two Lloyd
     * passes lift seeded centroids, more measured flat — and q58
     * re-derives the recall against brute force per run (no pinned
     * constant anymore: both legs replay). The build leg pays for
     * nlist — an index build cost, amortized in the materialized-index
-    * shape ([[Similarity.ivfBuildIndex]]). */
+    * shape ([[graft.streaming.VectorIngest]]). */
   def q43AnnIvf(spark: SparkSession, dir: String): DataFrame =
     Memo.of(spark, s"ann_ivf_int:$dir:n128p16l2") {
       val idx = SimilarityInt.ivfBuildInt(zAll(spark, dir),
@@ -98,8 +97,7 @@ object SimilarityQueries {
     * (rerank=50) with exact integer-dot rerank. Every decision is
     * integer arithmetic, so the FULL top-k output hash-matches a
     * DuckDB replay (was rows-only with a pinned recall — the r19
-    * VERDICT's last sub-replay correctness tier; the float
-    * [[Similarity.pqTopK]] remains the API with its specs). Random
+    * VERDICT's last sub-replay correctness tier). Random
     * fixtures are PQ's adversarial case (no subspace structure); the
     * rerank window is what keeps recall useful there. */
   def q171PqTopK(spark: SparkSession, dir: String): DataFrame =

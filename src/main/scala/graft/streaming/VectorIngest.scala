@@ -1,19 +1,26 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, max}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.operators.Similarity
+import graft.operators.SimilarityInt
+import graft.ops.Memo
 
 /** Continuous embedding ingest — the similarity-pillar counterpart of
   * [[CorpusIngest]]: vector files land in a directory; the first batch
-  * trains the IVF centroids (seeded sample + bounded Lloyd, exactly
-  * [[Similarity.ivfBuildIndex]]), every batch clusters its vectors
-  * against the FROZEN centroid table and appends posting-list rows.
-  * Queries run [[Similarity.ivfTopKIndexed]] over the materialized
-  * index — no retraining, no corpus re-scan, per-batch cost is one
-  * broadcast-assign pass over the batch.
+  * trains the IVF centroids ([[SimilarityInt.ivfBuildInt]] over the
+  * batch's integer z codes), every batch clusters its vectors against
+  * the FROZEN centroid table ([[SimilarityInt.ivfAssignInt]]) and
+  * appends posting-list rows (vid, z, list_id). Queries run
+  * [[SimilarityInt.ivfTopKInt]] over the materialized index, reranking
+  * against the z the lists carry — no retraining, no corpus re-scan,
+  * per-batch cost is one broadcast-assign pass over the batch.
+  *
+  * The index is integer-exact, like q43/q171/q174: every training
+  * step, assignment and rerank is BIGINT arithmetic over seeded md5
+  * draws, so the streamed index and its answers are bit-identical at
+  * any input partitioning and replay in DuckDB.
   *
   * Replay is idempotent without special-casing: a bootstrap replay
   * retrains the same deterministic centroids from the same batch and
@@ -23,7 +30,10 @@ import graft.operators.Similarity
   * Assumes unique vec_ids across batches (compose with the dedup
   * pillar upstream); centroid drift under a shifting distribution is
   * the documented retrain trigger — rebuild the index offline and swap
-  * directories, queries never pay for it.
+  * directories, queries never pay for it. An index directory written
+  * by the earlier float build (lists holding float `cv` vectors,
+  * codebook `cid`s numbered 0..ksub−1 instead of seed vids) has a
+  * different layout and must be rebuilt the same way.
   */
 object VectorIngest {
 
@@ -37,39 +47,42 @@ object VectorIngest {
     // Lloyd sample, assignment) — pin it so each pass reads the cache,
     // not the source files again
     val pinned = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val vecs = pinned.select(col(idCol).as("vid"), col(vecCol).as("cv"))
+    val z = SimilarityInt.zCodes(pinned, idCol, vecCol)
     val lists =
       if (!pathExists(spark, centPath)) {
         // bootstrap: train on this batch, freeze the centroids
-        val idx = Similarity.ivfBuildIndex(pinned, nlist, lloydIters, seed,
-          idCol, vecCol)
+        val idx = SimilarityInt.ivfBuildInt(z, nlist, lloydIters, seed,
+          s"vec_ingest_ivf:$nlist:$lloydIters:$seed:$idCol:$vecCol:" +
+            Memo.frameKey(batch))
         idx.centroids.write.mode("overwrite").parquet(centPath)
         idx.lists
       } else
-        Similarity.ivfAssign(spark.read.parquet(centPath), vecs)
+        SimilarityInt.ivfAssignInt(spark.read.parquet(centPath), z)
     lists.write.mode("overwrite")
       .parquet(s"$listsPath/ingest_batch=$batchId")
     pinned.unpersist(blocking = false)
   }
 
   /** The materialized index, or None before the bootstrap batch. */
-  def readIndex(spark: SparkSession, outDir: String): Option[Similarity.IvfIndex] = {
+  def readIndex(spark: SparkSession, outDir: String): Option[SimilarityInt.IntIvfIndex] = {
     val centPath = s"$outDir/index/centroids"
     val listsPath = s"$outDir/index/lists"
     if (!pathExists(spark, centPath) || !pathExists(spark, listsPath)) None
-    else Some(Similarity.IvfIndex(
+    else Some(SimilarityInt.IntIvfIndex(
       spark.read.parquet(centPath),
       spark.read.parquet(listsPath).drop("ingest_batch")))
   }
 
-  /** Top-k against the materialized index. */
+  /** Top-k against the materialized index; the rerank reads the z
+    * codes the lists carry. */
   def topK(spark: SparkSession, outDir: String, queries: DataFrame, k: Int,
            nprobe: Int = 4,
-           idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    Similarity.ivfTopKIndexed(
-      readIndex(spark, outDir).getOrElse(
-        throw new IllegalStateException(s"no IVF index at $outDir/index")),
-      queries, k, nprobe, idCol, vecCol)
+           idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    val idx = readIndex(spark, outDir).getOrElse(
+      throw new IllegalStateException(s"no IVF index at $outDir/index"))
+    SimilarityInt.ivfTopKInt(idx, SimilarityInt.zCodes(queries, idCol, vecCol),
+      idx.lists.select("vid", "z"), k, nprobe)
+  }
 
   private def pathExists(spark: SparkSession, p: String): Boolean = {
     val path = new org.apache.hadoop.fs.Path(p)
@@ -80,14 +93,14 @@ object VectorIngest {
 
   /** The IVF-PQ counterpart of [[processBatch]] — the index that
     * actually fits a 100 TB embedding store at rest (m+1 small ints
-    * per vector instead of the full float list rows): the bootstrap
-    * batch trains coarse centroids AND the residual codebook
-    * ([[Similarity.ivfPqBuild]]) and freezes both; every later batch
-    * runs one broadcast assign + one broadcast encode
-    * ([[Similarity.ivfPqAssign]]) and appends (vid, list_id, sub,
-    * code) rows to its own idempotent partition. Same replay story as
-    * the flat variant: bootstrap retrains deterministically and
-    * overwrites, appends re-encode against the frozen tables and
+    * per vector instead of the full list rows): the bootstrap batch
+    * trains coarse centroids AND the residual codebook
+    * ([[SimilarityInt.ivfPqBuildInt]]) and freezes both; every later
+    * batch runs one broadcast assign + one broadcast encode
+    * ([[SimilarityInt.ivfPqAssignInt]]) and appends (vid, list_id,
+    * sub, code) rows to its own idempotent partition. Same replay
+    * story as the flat variant: bootstrap retrains deterministically
+    * and overwrites, appends re-encode against the frozen tables and
     * overwrite their own partition. */
   def processBatchPq(batch: DataFrame, outDir: String, batchId: Long,
                      nlist: Int = 32, m: Int = 8, ksub: Int = 16,
@@ -98,10 +111,12 @@ object VectorIngest {
     val cbPath = s"$outDir/pqindex/codebook"
     val codesPath = s"$outDir/pqindex/codes"
     val pinned = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val z = SimilarityInt.zCodes(pinned, idCol, vecCol)
     val codes =
       if (!pathExists(spark, centPath)) {
-        val idx = Similarity.ivfPqBuild(pinned, nlist, m, ksub, lloydIters,
-          seed, idCol, vecCol)
+        val idx = SimilarityInt.ivfPqBuildInt(z, nlist, m, ksub, lloydIters,
+          seed, s"vec_ingest_ivfpq:$nlist:$m:$ksub:$lloydIters:$seed:$idCol:" +
+            s"$vecCol:${Memo.frameKey(batch)}")
         // codebook FIRST: the branch above gates on centPath, so the
         // centroid write is the bootstrap's commit marker — a crash
         // between the two writes must leave centPath ABSENT (replay
@@ -111,48 +126,44 @@ object VectorIngest {
         idx.codebook.centroids.write.mode("overwrite").parquet(cbPath)
         idx.centroids.write.mode("overwrite").parquet(centPath)
         idx.codes
-      } else {
-        val cb = readCodebook(spark, cbPath)
-        Similarity.ivfPqAssign(spark.read.parquet(centPath), cb, pinned,
-          idCol, vecCol)
-      }
+      } else
+        SimilarityInt.ivfPqAssignInt(spark.read.parquet(centPath),
+          readCodebook(spark, cbPath), z)
     codes.write.mode("overwrite").parquet(s"$codesPath/ingest_batch=$batchId")
     pinned.unpersist(blocking = false)
   }
 
   /** Rebuild the codebook handle from its persisted centroid table —
-    * m and ksub are recovered from the table itself (max sub/code +
-    * 1), so the index directory is self-describing. */
-  private def readCodebook(spark: SparkSession, cbPath: String): Similarity.PqCodebook = {
+    * m is recovered from the table itself (max sub + 1), so the index
+    * directory is self-describing. */
+  private def readCodebook(spark: SparkSession, cbPath: String): SimilarityInt.IntCodebook = {
     val cents = spark.read.parquet(cbPath)
-    val dials = cents.agg(
-      org.apache.spark.sql.functions.max(col("sub")),
-      org.apache.spark.sql.functions.max(col("cid"))).first()
-    Similarity.PqCodebook(cents, dials.getInt(0) + 1, dials.getInt(1) + 1)
+    SimilarityInt.IntCodebook(cents, cents.agg(max(col("sub"))).first().getInt(0) + 1)
   }
 
   /** The materialized IVF-PQ index, or None before bootstrap. */
-  def readPqIndex(spark: SparkSession, outDir: String): Option[Similarity.IvfPqIndex] = {
+  def readPqIndex(spark: SparkSession, outDir: String): Option[SimilarityInt.IntIvfPqIndex] = {
     val centPath = s"$outDir/pqindex/centroids"
     val cbPath = s"$outDir/pqindex/codebook"
     val codesPath = s"$outDir/pqindex/codes"
     if (!pathExists(spark, centPath) || !pathExists(spark, codesPath)) None
-    else Some(Similarity.IvfPqIndex(
+    else Some(SimilarityInt.IntIvfPqIndex(
       spark.read.parquet(centPath),
       readCodebook(spark, cbPath),
       spark.read.parquet(codesPath).drop("ingest_batch")))
   }
 
   /** IVFADC top-k against the materialized index. `corpus` supplies
-    * the float vectors for the exact rerank only — at scale it stays
+    * the vectors for the exact z-dot rerank only — at scale it stays
     * on disk until the shortlist (the PQ point). */
   def topKPq(spark: SparkSession, outDir: String, queries: DataFrame,
              corpus: DataFrame, k: Int, nprobe: Int = 8, rerank: Int = 50,
              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    Similarity.ivfPqTopK(
+    SimilarityInt.ivfPqTopKInt(
       readPqIndex(spark, outDir).getOrElse(
         throw new IllegalStateException(s"no IVF-PQ index at $outDir/pqindex")),
-      queries, corpus, k, nprobe, rerank, idCol, vecCol)
+      SimilarityInt.zCodes(queries, idCol, vecCol),
+      SimilarityInt.zCodes(corpus, idCol, vecCol), k, nprobe, rerank)
 
   /** Start the ingest stream over a landing directory of embedding
     * parquet files; AvailableNow turns it into a scheduled

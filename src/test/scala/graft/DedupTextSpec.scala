@@ -281,6 +281,19 @@ class DedupTextSpec extends AnyFunSuite {
     assert(comp == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
+  test("connected components fail loudly when rounds run out, converge when they suffice") {
+    import spark.implicits._
+    // a 60-node chain: diameter 59, far past the default 20 rounds
+    val chain = (0L until 59L).map(i => (i + 1, i)).toDF("d1", "d2")
+    val e = intercept[IllegalStateException] {
+      Dedup.connectedComponents(chain).collect()
+    }
+    assert(e.getMessage.contains("no fixpoint after 20 rounds"))
+    val labels = Dedup.connectedComponents(chain, maxIter = 100)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels == (0L to 59L).map(_ -> 0L).toMap)
+  }
+
   test("star-contraction CC equals min-label CC (fixture, chain, random)") {
     import spark.implicits._
     def labels(df: org.apache.spark.sql.DataFrame) =

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Dedup, Similarity, TextAnalysis}
+import graft.operators.{Dedup, Similarity, SimilarityInt, TextAnalysis}
 import graft.ops.tb.{TbPipeline, TbSynth}
 
 /** Edge-case robustness: operators must degrade to empty results, not
@@ -98,7 +98,11 @@ class RobustnessSpec extends AnyFunSuite {
     val corpus = Tables.embeddings(spark, sf)
     assert(Similarity.bruteForceTopK(corpus, emptyQ, 5).count() == 0)
     assert(Similarity.annTopK(corpus, emptyQ, 5).count() == 0)
-    assert(Similarity.ivfTopK(corpus, emptyQ, 5).count() == 0)
+    val z = SimilarityInt.zCodes(corpus)
+    val ivf = SimilarityInt.ivfBuildInt(z, nlist = 32, iters = 2, seed = 42L,
+      memoKey = "robustness:ivf")
+    assert(SimilarityInt.ivfTopKInt(ivf, SimilarityInt.zCodes(emptyQ), z,
+      k = 5, nprobe = 4).count() == 0)
   }
 
   test("round-2 text operators tolerate empty and degenerate inputs") {

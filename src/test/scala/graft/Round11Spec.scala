@@ -221,7 +221,7 @@ class Round11Spec extends AnyFunSuite {
 
   // ------------------------------------------------- product quantization
 
-  import graft.operators.Similarity
+  import graft.operators.SimilarityInt
 
   private def vecsDf(n: Int, dim: Int, seed: Int) = {
     val rnd = new scala.util.Random(seed)
@@ -230,44 +230,36 @@ class Round11Spec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
   }
 
-  test("pqTrain: codebooks are deterministic across partitionings") {
+  test("pqTrainInt: codebooks are deterministic across partitionings") {
     val v = vecsDf(60, 16, seed = 7)
-    def cents(parts: Int): Seq[(Int, Int, Seq[Double])] = {
+    def cents(parts: Int): Seq[(Int, Long, Seq[Long])] = {
       graft.ops.Memo.clear(spark) // a memo hit would hide nondeterminism
-      Similarity.pqTrain(v.repartition(parts), m = 4, ksub = 8, lloydIters = 2)
-        .centroids.as[(Int, Int, Seq[Double])].collect()
+      SimilarityInt.pqTrainInt(SimilarityInt.zCodes(v.repartition(parts)),
+          m = 4, ksub = 8, iters = 2, seed = 42L, memoKey = s"r11spec:pq:$parts")
+        .centroids.as[(Int, Long, Seq[Long])].collect()
         .sortBy(r => (r._1, r._2)).toSeq
     }
     assert(cents(1) == cents(13))
   }
 
-  test("pqTopK: with corpus <= ksub the codebook is lossless and ADC+rerank equals brute force") {
-    // every vector becomes its own centroid (seeds = whole corpus,
-    // each subvector's nearest centroid is itself at distance 0), so
-    // the ADC ranking is the exact ranking — the closed-form case
-    graft.ops.Memo.clear(spark)
-    val v = vecsDf(12, 16, seed = 11)
-    val cb = Similarity.pqTrain(v, m = 4, ksub = 16, lloydIters = 0)
-    val queries = v.filter($"vec_id" < 3)
-    val pq = Similarity.pqTopK(Similarity.pqEncode(v, cb), cb, v, queries,
-      k = 5, rerank = 11)
-      .as[(Long, Long, Long)].collect().sortBy(r => (r._1, r._3)).toSeq
-    val bf = Similarity.bruteForceTopK(v, queries, k = 5)
-      .as[(Long, Long, Long)].collect().sortBy(r => (r._1, r._3)).toSeq
-    assert(pq == bf)
-  }
-
-  test("pqEncode: codes are m small ids per vector; rerank window must cover k") {
+  test("pqEncodeInt: codes are m seed vids per vector; rerank window must cover k") {
     graft.ops.Memo.clear(spark)
     val v = vecsDf(40, 16, seed = 3)
-    val cb = Similarity.pqTrain(v, m = 4, ksub = 8, lloydIters = 1)
-    val codes = Similarity.pqEncode(v, cb)
+    val z = SimilarityInt.zCodes(v)
+    val cb = SimilarityInt.pqTrainInt(z, m = 4, ksub = 8, iters = 1,
+      seed = 42L, memoKey = "r11spec:pq_encode")
+    val codes = SimilarityInt.pqEncodeInt(z, cb)
     assert(codes.count() == 40L * 4)
-    val rng = codes.agg(min($"code"), max($"code"), countDistinct($"vec_id"))
-      .as[(Int, Int, Long)].first()
-    assert(rng._1 >= 0 && rng._2 < 8 && rng._3 == 40L)
+    assert(codes.select("vid").distinct().count() == 40L)
+    // every code is a codeword of its own subspace, and codeword ids
+    // are the vids of at most ksub seed rows
+    val codewords = cb.centroids.select("sub", "cid").as[(Int, Long)].collect().toSet
+    assert(codes.select("sub", "code").as[(Int, Long)].collect().toSet
+      .subsetOf(codewords))
+    val seedVids = codewords.map(_._2)
+    assert(seedVids.size <= 8 && seedVids.subsetOf((0L until 40L).toSet))
     intercept[IllegalArgumentException] {
-      Similarity.pqTopK(codes, cb, v, v.limit(1), k = 10, rerank = 5)
+      SimilarityInt.pqTopKInt(codes, cb, z, z.limit(1), k = 10, rerank = 5)
     }
   }
 

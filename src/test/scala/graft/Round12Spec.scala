@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.GzipArchiveCore
-import graft.operators.{Bpe, Similarity}
+import graft.operators.{Bpe, SimilarityInt}
 import graft.sources.WebArchive
 
 /** Round-12 closures of the round-11 advice items (WET ingest must
@@ -178,12 +178,13 @@ class Round12Spec extends AnyFunSuite {
       .toDF("vec_id", "embedding") // 15 dims, m = 4
     val e = intercept[Exception] {
       graft.ops.Memo.clear(spark)
-      Similarity.pqTrain(v, m = 4, ksub = 4, lloydIters = 0)
-        .centroids.collect()
+      SimilarityInt.pqTrainInt(SimilarityInt.zCodes(v), m = 4, ksub = 4,
+        iters = 0, seed = 42L, memoKey = "r12spec:pq_div").centroids.collect()
     }
     def messages(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(e).exists(_.contains("not divisible by m=4")))
+    graft.ops.Memo.clear(spark) // drop the failed entry
   }
 
   // ------------------------------------------ offset-splittable ingestion
@@ -257,33 +258,32 @@ class Round12Spec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
   }
 
-  test("ivfPqTopK: all-lists probe + per-vector codewords is EXACT (closed form) and equals brute force") {
-    // ksub >= corpus and lloydIters = 0 make every residual its own
+  test("ivfPqTopKInt: all-lists probe + per-vector codewords is EXACT (closed form) and equals the exact z-dot ranking") {
+    // ksub >= corpus and iters = 0 make every residual its own
     // codeword (assignment distance 0), and nprobe = nlist probes
     // everything — so ADC distance IS the exact distance and the
-    // shortlist ranking is already the true ranking
+    // shortlist covers every true neighbor
     graft.ops.Memo.clear(spark)
-    val v = rndVecs(12, 16, seed = 19)
-    val idx = Similarity.ivfPqBuild(v, nlist = 3, m = 4, ksub = 16,
-      lloydIters = 0)
-    val queries = v.filter($"vec_id" < 3)
-    val got = Similarity.ivfPqTopK(idx, queries, v, k = 5, nprobe = 3,
+    val z = SimilarityInt.zCodes(rndVecs(12, 16, seed = 19))
+    val idx = SimilarityInt.ivfPqBuildInt(z, nlist = 3, m = 4, ksub = 16,
+      iters = 0, seed = 42L, memoKey = "r12spec:ivfpq_exact")
+    val qz = z.filter($"vid" < 3)
+    val got = SimilarityInt.ivfPqTopKInt(idx, qz, z, k = 5, nprobe = 3,
       rerank = 11)
-      .as[(Long, Long, Long)].collect().sortBy(r => (r._1, r._3)).toSeq
-    val bf = Similarity.bruteForceTopK(v, queries, k = 5)
-      .as[(Long, Long, Long)].collect().sortBy(r => (r._1, r._3)).toSeq
-    assert(got == bf)
+    assert(ZDotBaseline.triples(got) ==
+      ZDotBaseline.triples(ZDotBaseline.topK(qz, z, 5)))
   }
 
-  test("ivfPqBuild: codes and results are deterministic across partitionings; codes are m ints per vector") {
+  test("ivfPqBuildInt: codes and results are deterministic across partitionings; codes are m ints per vector") {
     val v = rndVecs(60, 16, seed = 23)
-    def run(parts: Int): (Seq[(Long, Int, Int, Int)], Seq[(Long, Long, Long)]) = {
+    def run(parts: Int): (Seq[(Long, Long, Int, Long)], Seq[(Long, Long, Long)]) = {
       graft.ops.Memo.clear(spark)
-      val idx = Similarity.ivfPqBuild(v.repartition(parts), nlist = 8,
-        m = 4, ksub = 8, lloydIters = 2)
-      val codes = idx.codes.as[(Long, Long, Int, Int)].collect()
-        .map(c => (c._1, c._2.toInt, c._3, c._4)).sortBy(c => (c._1, c._3)).toSeq
-      val top = Similarity.ivfPqTopK(idx, v.filter($"vec_id" < 4), v,
+      val z = SimilarityInt.zCodes(v.repartition(parts))
+      val idx = SimilarityInt.ivfPqBuildInt(z, nlist = 8, m = 4, ksub = 8,
+        iters = 2, seed = 42L, memoKey = s"r12spec:ivfpq:$parts")
+      val codes = idx.codes.as[(Long, Long, Int, Long)].collect()
+        .sortBy(c => (c._1, c._3)).toSeq
+      val top = SimilarityInt.ivfPqTopKInt(idx, z.filter($"vid" < 4), z,
         k = 5, nprobe = 4, rerank = 20)
         .as[(Long, Long, Long)].collect().sortBy(r => (r._1, r._3)).toSeq
       (codes, top)
@@ -292,7 +292,8 @@ class Round12Spec extends AnyFunSuite {
     val (c13, t13) = run(13)
     assert(c1 == c13 && t1 == t13)
     assert(c1.size == 60 * 4 && c1.map(_._1).distinct.size == 60)
-    assert(c1.forall(c => c._4 >= 0 && c._4 < 8))
+    // codes are codeword ids: the vids of at most ksub seed residuals
+    assert(c1.map(_._4).distinct.size <= 8)
   }
 
   // ----------------------------------------------- streaming archive ingest

@@ -312,20 +312,9 @@ class Round20Spec extends AnyFunSuite {
     val qz = z.filter(col("vid") < 3)
     val got = SimilarityInt.pqTopKInt(
       SimilarityInt.pqEncodeInt(z, cb), cb, z, qz, k = 5, rerank = 15)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // exact ranking by integer dot, same tiebreak
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("dot").desc, col("neighbor_id").asc)
-    val exact = qz.select(col("vid").as("query_id"), col("z").as("qz"))
-      .crossJoin(z.select(col("vid").as("neighbor_id"), col("z").as("cz")))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("dot", expr(
-        "aggregate(zip_with(qz, cz, (p, q) -> p * q), 0L, (x, y) -> x + y)"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 5)
-      .select("query_id", "neighbor_id", "rank")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got === exact)
+    assert(ZDotBaseline.triples(got) ===
+      ZDotBaseline.triples(ZDotBaseline.topK(qz, z, 5)))
   }
 
   /** Partitioning determinism — the property the whole family exists

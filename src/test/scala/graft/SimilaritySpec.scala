@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Similarity
+import graft.operators.{Similarity, SimilarityInt}
 
 class SimilaritySpec extends AnyFunSuite {
   import SparkTestSession.{spark, sf}
@@ -75,25 +75,33 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("ivf topk: deterministic, recall beats random, ranks inversion-free") {
     import spark.implicits._
-    val i1 = Similarity.ivfTopK(emb, queries, k = 10).collect().toSet
-    val i2 = Similarity.ivfTopK(emb, queries, k = 10).collect().toSet
+    val z = SimilarityInt.zCodes(emb)
+    val zq = z.filter($"vid" < 10)
+    def ivf(k: Int, nlist: Int = 32, nprobe: Int = 4) =
+      SimilarityInt.ivfTopKInt(SimilarityInt.ivfBuildInt(z, nlist, iters = 2,
+        seed = 42L, memoKey = s"simspec:ivf:$nlist"), zq, z, k, nprobe)
+    // a memo hit would hide nondeterminism: each run trains afresh
+    graft.ops.Memo.clear(spark)
+    val i1 = ivf(10).collect().toSet
+    graft.ops.Memo.clear(spark)
+    val i2 = ivf(10).collect().toSet
     assert(i1 == i2, "IVF must be deterministic (seeded centroid sample)")
     val exact = Similarity.bruteForceTopK(emb, queries, k = 10)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // generous probe budget for the recall pin (uniform random corpus
     // is ANN-adversarial, same caveat as the SRP spec)
-    val ivf = Similarity.ivfTopK(emb, queries, k = 10, nlist = 16, nprobe = 8)
+    val found = ivf(10, nlist = 16, nprobe = 8)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = (exact & ivf).size.toDouble / exact.size
+    val recall = (exact & found).size.toDouble / exact.size
     assert(recall > 10 * (10.0 / emb.count()),
       s"recall $recall must beat random by 10x")
-    // exact scoring: restricted ordering agrees with brute force
-    val exactRank = Similarity.bruteForceTopK(emb, queries, k = 500)
+    // exact scoring: restricted ordering agrees with the exact z-dot
+    // ranking the rerank uses
+    val exactRank = ZDotBaseline.topK(zq, z, 500)
       .withColumnRenamed("rank", "exact_rank")
-    val joined = Similarity.ivfTopK(emb, queries, k = 10)
-      .join(exactRank, Seq("query_id", "neighbor_id"))
+    val joined = ivf(10).join(exactRank, Seq("query_id", "neighbor_id"))
     val inversions = joined.as("x").join(joined.as("y"),
         $"x.query_id" === $"y.query_id" &&
         $"x.rank" < $"y.rank" && $"x.exact_rank" > $"y.exact_rank")
@@ -102,9 +110,10 @@ class SimilaritySpec extends AnyFunSuite {
     // candidate volume is bounded by the probed share of the corpus
     // (the IVF cost dial): with nprobe/nlist = 1/8 of lists probed no
     // query may scan anywhere near the full corpus
-    val cand = Similarity.ivfTopK(emb, queries, k = 1000000, nlist = 32, nprobe = 4)
+    val cand = ivf(emb.count().toInt)
       .groupBy("query_id").count().agg(max("count")).first().getLong(0)
-    assert(cand < emb.count(), "IVF must never degenerate to a full scan")
+    assert(cand <= emb.count() / 2,
+      s"IVF must never degenerate to a full scan: $cand of ${emb.count()}")
   }
 
   test("near-dup pairs carry cos >= threshold and no self-pairs") {

@@ -13,13 +13,18 @@ import graft.ops.tb.{TbCollect, TbPipeline}
 class TbCollectSpec extends AnyFunSuite {
   import SparkTestSession.spark
 
-  private val tbCsv = "/root/reference/data/raw/who_tb_data_20250923_041355.csv"
-
   test("primary snapshot present: who_csv leg wins and output equals the direct read") {
-    val (leg, df) = TbCollect.collectTb(spark, Some(tbCsv), None)
+    val (leg, df) = TbCollect.collectTb(spark, Some(TbFixture.tbCsv), None)
     assert(leg == TbCollect.WhoCsv)
-    val direct = TbPipeline.readTbCsv(spark, tbCsv)
-    assert(df.count() == direct.count(), "chain must not drop snapshot rows")
+    // every snapshot row inside the default 2018-2023 collect window
+    // survives unchanged; the fixture's one out-of-window row (2035) is
+    // the only row the leg drops
+    val direct = TbPipeline.readTbCsv(spark, TbFixture.tbCsv)
+    val inWindow = direct.filter(col("year").cast("int").between(2018, 2023))
+    def sorted(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(_.toString).sorted.toSeq
+    assert(direct.count() == 18 && inWindow.count() == 17)
+    assert(sorted(df) == sorted(inWindow), "chain must not drop snapshot rows")
     assert(df.columns.toSeq == direct.columns.toSeq)
   }
 
