@@ -1149,11 +1149,12 @@ object ScaleProbe {
       docs.unpersist(); emb.unpersist()
     }
 
-    // deep-graph CC: a 50k-node chain (diameter 50k) — min-label would
-    // need 50k rounds; star contraction is the only viable path
+    // deep-graph CC through the entry point: a 50k-node chain (diameter
+    // 50k) exhausts the min-label rounds, and connectedComponents hands
+    // the graph over to star contraction
     val chain = spark.range(1L, 50000L).select($"id".as("d1"), ($"id" - 1).as("d2"))
-    val (cc, sec) = timeIt(operators.Dedup.connectedComponentsStars(chain).count())
-    println(f"star_cc_50k_chain      $sec%8.2f s   (nodes=$cc)")
+    val (cc, sec) = timeIt(operators.Dedup.connectedComponents(chain).count())
+    println(f"cc_50k_chain           $sec%8.2f s   (nodes=$cc)")
     spark.stop()
   }
 }

@@ -514,10 +514,11 @@ object Dedup {
     * each round truncates the exploding lineage (without it, iteration
     * i re-executes rounds 1..i-1 and the job goes quadratic). Rounds
     * needed = graph diameter; near-dup clusters are shallow (dups of a
-    * common original), so convergence is fast. At extreme scale swap
-    * for large-star/small-star, same contract. Throws
-    * IllegalStateException when `maxIter` rounds pass without a
-    * fixpoint: the labels would not all be component minima. */
+    * common original), so convergence is fast. A deeper graph hands
+    * over after `maxIter` rounds: the cached symmetric edges go to
+    * [[connectedComponentsStars]] (same contract, rounds independent
+    * of diameter), which still throws IllegalStateException when its
+    * own rounds run out. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     val edges = pairs
       .select(col("d1").as("a"), col("d2").as("b"))
@@ -549,15 +550,15 @@ object Dedup {
       converged = changed == 0
       i += 1
     }
-    edges.unpersist()
-    // A non-fixpoint exit degrades to a single (possibly non-minimal)
-    // label per node — results LOOK valid, so the failure must be loud.
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents: no fixpoint after $maxIter rounds; " +
-        "labels may not be component minima (raise maxIter or use " +
-        "connectedComponentsStars for deep graphs)")
-    labels.select(col("node").as("doc_id"), col("label").as("component_id"))
+    // A non-fixpoint exit would leave labels that look valid but are
+    // not all component minima: hand the graph to star contraction.
+    // Its first localCheckpoint is eager, so `edges` can go after it.
+    try {
+      if (converged)
+        labels.select(col("node").as("doc_id"), col("label").as("component_id"))
+      else
+        connectedComponentsStars(edges.select(col("a").as("d1"), col("b").as("d2")))
+    } finally edges.unpersist()
   }
 
   /** End-to-end corpus dedup — the operator a pipeline actually calls:
@@ -568,12 +569,11 @@ object Dedup {
     * columns.
     *
     * Each stage is the scale-shaped variant: O(n) hash pass → bucketed
-    * LSH (never O(n²)) → iterative CC (swap in
-    * [[connectedComponentsStars]] via `starCC = true` for deep/
-    * adversarial duplicate graphs). */
+    * LSH (never O(n²)) → iterative CC ([[connectedComponents]] hands
+    * deep/adversarial duplicate graphs over to star contraction after
+    * `maxIter` rounds). */
   def dedupCorpus(docs: DataFrame, k: Int = 3, numHashes: Int = 16,
-                  bands: Option[Int] = None, threshold: Double = 0.6,
-                  starCC: Boolean = false): DataFrame = {
+                  bands: Option[Int] = None, threshold: Double = 0.6): DataFrame = {
     // exact pass: survivors = smallest doc_id per distinct text. The
     // semi-join recovers the survivor's full row — and the per-id
     // collapse closes the one hole in that recovery: with
@@ -594,8 +594,7 @@ object Dedup {
       .select(col("doc_id") +: others.map(c => col("_rep")(c).as(c)): _*)
     val pairs = minHashPairs(exactSurvivors, k, numHashes, bands, threshold)
       .select("d1", "d2")
-    val comp = if (starCC) connectedComponentsStars(pairs)
-               else connectedComponents(pairs)
+    val comp = connectedComponents(pairs)
     // unclustered docs survive; clustered ones only as the component min
     exactSurvivors.join(comp, Seq("doc_id"), "left")
       .filter(col("component_id").isNull || col("component_id") === col("doc_id"))
@@ -979,7 +978,8 @@ object Dedup {
     * rounds — fine for shallow near-dup clusters, quadratic pain on
     * chain-shaped graphs. Star contraction converges in O(log²) rounds
     * regardless of diameter, at the cost of two shuffles per round —
-    * the swap for extreme scale or adversarial graph shapes.
+    * so [[connectedComponents]] hands over to it after `maxIter`
+    * min-label rounds.
     *
     *   large-star: every neighbor v > u re-attaches to
     *     m = min(Γ(u) ∪ {u});

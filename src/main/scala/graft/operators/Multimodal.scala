@@ -253,15 +253,6 @@ object Multimodal {
       .withColumn("height", (pmod(xxhash64(col("payload"), lit(1)), lit(1080)) + 1).cast("int"))
       .withColumn("channels", lit(3))
 
-  /** STUB resize: records the target size and re-derives a payload
-    * fingerprint; a real kernel would transform pixels in
-    * `mapPartitions` over Arrow batches. */
-  def resizeStub(decoded: DataFrame, w: Int, h: Int): DataFrame =
-    decoded
-      .withColumn("resized_width", lit(w))
-      .withColumn("resized_height", lit(h))
-      .withColumn("resized_fp", xxhash64(col("payload"), lit(w), lit(h)))
-
   /** STUB feature extraction: a deterministic 8-dim pseudo-embedding
     * from stride-hashed byte windows — the batch shape (fixed-width
     * array<double> per asset) is exactly what a real vision encoder

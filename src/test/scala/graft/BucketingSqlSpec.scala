@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -33,12 +34,12 @@ class BucketingSqlSpec extends AnyFunSuite {
 
   test("the reference's SQL views run verbatim-shaped through spark.sql") {
     // latest_country_stats (init_db.sql:96-106): rank by cases and by
-    // per-100k over the latest year, via the SQL API on registered views
-    val p = TbPipeline.run(spark,
-      "/root/reference/data/raw/who_tb_data_20250923_041355.csv",
-      "/root/reference/data/raw/worldbank_population_20250923_041355.csv")
+    // per-100k over the latest year, via the SQL API on registered views.
+    // Expected values: FIXTURES.md §D3.
+    val p = TbPipeline.run(spark, TbFixture.tbCsv, TbFixture.popCsv)
     p.countrySummary.createOrReplaceTempView("country_summary")
     p.countryTrends.createOrReplaceTempView("country_trends")
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
 
     val stats = spark.sql(
       """SELECT country, iso3, total_cases, total_cases_per_100k,
@@ -46,20 +47,26 @@ class BucketingSqlSpec extends AnyFunSuite {
         |  RANK() OVER (ORDER BY total_cases_per_100k DESC) AS rate_rank
         |FROM country_summary
         |WHERE year = (SELECT MAX(year) FROM country_summary)""".stripMargin)
-    val idn = stats.filter(col("iso3") === "IDN").collect()(0)
-    assert(idn.getAs[Int]("cases_rank") == 1)
-    val phl = stats.filter(col("iso3") === "PHL").collect()(0)
-    assert(phl.getAs[Int]("rate_rank") == 1) // PHL: 643.22 per 100k
+    val ranks = stats.select("iso3", "cases_rank", "rate_rank").collect()
+      .map(r => r.getString(0) -> (r.getInt(1), r.getInt(2))).toMap
+    assert(ranks == Map("IDN" -> (1, 1), "KHM" -> (2, 3),
+      "LAO" -> (3, 2), "BRN" -> (4, 4)))
+    assert(rows(stats) == rows(TbPipeline.latestCountryStats(p.countrySummary)
+      .select(stats.columns.map(col).toIndexedSeq: _*)))
 
     // regional yearly median (init_db.sql:109-122)
     val med = spark.sql(
       """SELECT year,
         |  SUM(total_cases) AS region_cases,
+        |  AVG(total_cases_per_100k) AS avg_rate,
         |  MEDIAN(CAST(total_cases_per_100k AS DOUBLE)) AS median_rate,
         |  COUNT(DISTINCT iso3) AS n_countries
         |FROM country_trends GROUP BY year ORDER BY year""".stripMargin)
-    assert(med.count() == 6)
-    assert(med.filter(col("n_countries") =!= 10).count() == 0)
+    assert(med.select("year", "median_rate", "n_countries").collect()
+      .map(r => (r.getInt(0), r.getDouble(1), r.getLong(2))).toSeq ==
+      Seq((2022, 30.0, 3L), (2023, 45.0, 4L)))
+    assert(med.collect().toSeq ==
+      TbPipeline.regionalYearlyMedian(p.countryTrends).collect().toSeq)
   }
 
   test("spark.sql and DataFrame API produce identical plans for the same query") {

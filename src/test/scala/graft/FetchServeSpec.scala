@@ -23,10 +23,12 @@ class FetchServeSpec extends AnyFunSuite {
   private val popCsv = s"$refRaw/worldbank_population_20250923_041355.csv"
 
   test("fetchToFile lands a local snapshot (plain path and file:// URI)") {
+    // fetching only copies a file, so the in-repo fixture serves
+    val src = TbFixture.tbCsv
     val dir = Files.createTempDirectory("graft_fetch")
-    val a = Fetch.fetchToFile(tbCsv, dir.resolve("plain.csv"))
-    val b = Fetch.fetchToFile(s"file://$tbCsv", dir.resolve("uri.csv"))
-    assert(Files.size(a) == Files.size(Paths.get(tbCsv)))
+    val a = Fetch.fetchToFile(src, dir.resolve("plain.csv"))
+    val b = Fetch.fetchToFile(s"file://$src", dir.resolve("uri.csv"))
+    assert(Files.size(a) == Files.size(Paths.get(src)))
     assert(Files.mismatch(a, b) == -1L, "both scheme branches must land identical bytes")
   }
 
@@ -44,15 +46,16 @@ class FetchServeSpec extends AnyFunSuite {
   }
 
   test("fetchIfStale lands once, stamps the marker, then skips until stale") {
+    val src = TbFixture.tbCsv
     val dir = Files.createTempDirectory("graft_fis")
     val dest = dir.resolve("raw.csv")
     val marker = dir.resolve("last_update.txt")
     val t0 = Instant.parse("2026-08-12T00:00:00Z")
-    assert(Fetch.fetchIfStale(tbCsv, dest, marker, 30, t0), "first call must fetch")
+    assert(Fetch.fetchIfStale(src, dest, marker, 30, t0), "first call must fetch")
     assert(Files.exists(dest) && Files.readString(marker).trim == t0.toString)
-    assert(!Fetch.fetchIfStale(tbCsv, dest, marker, 30, t0.plus(1, ChronoUnit.DAYS)),
+    assert(!Fetch.fetchIfStale(src, dest, marker, 30, t0.plus(1, ChronoUnit.DAYS)),
       "fresh marker must skip the fetch")
-    assert(Fetch.fetchIfStale(tbCsv, dest, marker, 30, t0.plus(31, ChronoUnit.DAYS)),
+    assert(Fetch.fetchIfStale(src, dest, marker, 30, t0.plus(31, ChronoUnit.DAYS)),
       "31 days later the fetch must re-run")
   }
 

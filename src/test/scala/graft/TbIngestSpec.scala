@@ -67,12 +67,11 @@ class TbIngestSpec extends AnyFunSuite {
   }
 
   test("typed country trends expose decimal rates with schema checked at compile time") {
-    val p = TbPipeline.run(spark,
-      "/root/reference/data/raw/who_tb_data_20250923_041355.csv",
-      "/root/reference/data/raw/worldbank_population_20250923_041355.csv")
+    // fixture (FIXTURES.md §D2): IDN 2023 = 1200 cases over 2,000,000
+    val p = TbPipeline.run(spark, TbFixture.tbCsv, TbFixture.popCsv)
     val typed = Models.countryTrends(p.countryTrends)
     val idn2023 = typed.filter(t => t.iso3 == "IDN" && t.year == 2023).collect()(0)
-    assert(idn2023.total_cases == 1090000.0)
-    assert(idn2023.total_cases_per_100k.toString == "387.64")
+    assert(idn2023.total_cases == 1200.0)
+    assert(idn2023.total_cases_per_100k.toString == "60.00")
   }
 }
