@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.storage.StorageLevel
 
 import graft.operators.{Dedup, TextAnalysis}
 
@@ -35,19 +36,26 @@ object CorpusIngest {
                    maxShingleDocFreq: Option[Int] = None,
                    containmentPermille: Option[Long] = None): Unit = {
     val spark = batch.sparkSession
-    // Several consumers (clean recipe, dedup legs, report counts) each
-    // trigger actions over this micro-batch; unpersisted, every action
-    // re-reads the batch's source files. Batch-sized, so
-    // MEMORY_AND_DISK spills rather than OOMs.
-    val pinned = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // The raw batch feeds the clean recipe and the report's input
+    // count; the cleaned batch feeds the LSH candidate and hash
+    // checkpoints, the batch-novel materialization and the report.
+    // Both are pinned so the source files are read once and the clean
+    // recipe (token, quality, language and bigram passes) runs once,
+    // not once per consumer — the CorpusMain shape. The report's
+    // n_cleaned count materializes `cleaned` before any dedup leg
+    // reads it. Batch-sized, so MEMORY_AND_DISK spills rather than
+    // OOMs.
+    val pinned = batch.persist(StorageLevel.MEMORY_AND_DISK)
     val keepIds = TextAnalysis.cleanCorpus(pinned, minTokens, maxTokens,
       minQuality, maxTopBigramRatio, langs).select("doc_id")
     val cleaned = pinned.join(keepIds, Seq("doc_id"), "left_semi")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val nCleaned = cleaned.count()
     // novelty WITHIN the batch first (deltaDedup's documented contract);
     // persisted because the novelty join, the write, and the report
     // count all consume it — the LSH+CC chain must not run three times
     val batchNovel = Dedup.dedupCorpus(cleaned, k, numHashes, bands, threshold)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val corpusPath = s"$outDir/corpus"
     // Novelty is judged against the MATERIALIZED dedup index, not the
     // corpus text: per-batch cost reads (hash set + shingle index),
@@ -94,17 +102,15 @@ object CorpusIngest {
     // like every other per-batch artifact; read the whole funnel with
     // spark.read.parquet(outDir/reports).
     import spark.implicits._
-    Seq((pinned.count(), cleaned.count(), batchNovel.count(), landed.count()))
+    Seq((pinned.count(), nCleaned, batchNovel.count(), landed.count()))
       .toDF("n_input", "n_cleaned", "n_batch_novel", "n_novel")
       .write.mode("overwrite")
       .parquet(s"$outDir/reports/ingest_batch=$batchId")
     batchNovel.unpersist(blocking = false)
+    cleaned.unpersist(blocking = false)
     pinned.unpersist(blocking = false)
   }
 
-  /** The accumulated corpus, or None before the first batch lands.
-    * Partition discovery folds every ingest_batch directory into one
-    * table; the partition column itself is provenance, not content. */
   /** Publish a read-optimized snapshot of the ingest corpus: the
     * append-oriented `ingest_batch` layout is replay-idempotent but
     * accrues one directory of smallish files per batch — the snapshot
@@ -149,6 +155,35 @@ object CorpusIngest {
     pathExists(spark, p) &&
       graft.operators.Maintenance.listParquet(spark, p)._1 > 0
 
+  /** The first parquet data file under `dir`, if any (a driver-side
+    * listing that stops at the first match). */
+  private def firstParquetFile(fs: org.apache.hadoop.fs.FileSystem,
+                               dir: org.apache.hadoop.fs.Path)
+      : Option[org.apache.hadoop.fs.Path] = {
+    val it = fs.listFiles(dir, true)
+    var found: Option[org.apache.hadoop.fs.Path] = None
+    while (found.isEmpty && it.hasNext) {
+      val p = it.next().getPath
+      if (p.getName.endsWith(".parquet")) found = Some(p)
+    }
+    found
+  }
+
+  /** Whether `file`'s parquet schema has a top-level `field`, read from
+    * its footer on the driver — no Spark job, unlike a
+    * `spark.read.parquet(...).columns` schema inference. */
+  private def footerHasField(conf: org.apache.hadoop.conf.Configuration,
+                             file: org.apache.hadoop.fs.Path,
+                             field: String): Boolean = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+    try reader.getFileMetaData.getSchema.containsField(field)
+    finally reader.close()
+  }
+
+  /** The accumulated corpus, or None before the first batch lands.
+    * Partition discovery folds every ingest_batch directory into one
+    * table; the partition column itself is provenance, not content. */
   def readCorpus(spark: SparkSession, corpusPath: String): Option[DataFrame] =
     if (!pathExists(spark, corpusPath)) None
     else {
@@ -179,23 +214,26 @@ object CorpusIngest {
       // down before it store shingle rows without the carried per-doc
       // count (`nc`) and wrote no `dfs` partials (the two shipped
       // together), while later batches have both. The vintage is
-      // decided DRIVER-SIDE, one footer per batch directory (a batch
-      // is written at once, so one file speaks for the directory) —
-      // and the clean steady state (no legacy dirs) reads the table
-      // through ONE branch with no union, no nc-IS-NULL scan, and no
-      // legacy dfs leg: the straddle machinery must not tax every
-      // post-upgrade ingest batch forever.
+      // decided on the driver from the footer of each batch
+      // directory's first data file (a batch is written at once, so
+      // one file speaks for the directory): no Spark job per
+      // directory, so the read's job count does not grow with the
+      // number of batches ingested. The clean steady state (no legacy
+      // dirs) reads the table through ONE branch with no union, no
+      // nc-IS-NULL scan, and no legacy dfs leg: the straddle machinery
+      // must not tax every post-upgrade ingest batch forever.
       val fsPath = new org.apache.hadoop.fs.Path(paths(1))
-      val fs = fsPath.getFileSystem(spark.sessionState.newHadoopConf())
-      val batchDirs = fs.listStatus(fsPath).toSeq
+      val conf = spark.sessionState.newHadoopConf()
+      val fs = fsPath.getFileSystem(conf)
+      val batchFiles = fs.listStatus(fsPath).toSeq
         .filter(_.isDirectory).map(_.getPath)
         .filter(_.getName.startsWith("ingest_batch="))
         .filterNot(_.getName == s"ingest_batch=$batchId")
-        .filter(d => hasParquetData(spark, d.toString))
-      if (batchDirs.isEmpty) None
+        .flatMap(d => firstParquetFile(fs, d).map(d -> _))
+      if (batchFiles.isEmpty) None
       else {
-        val (modernDirs, legacyDirs) = batchDirs.partition(d =>
-          spark.read.parquet(d.toString).columns.contains("nc"))
+        val (modernDirs, legacyDirs) = batchFiles
+          .partition { case (_, f) => footerHasField(conf, f, "nc") }
         // legacy rows (the pre-r7 vintage) restore nc with a per-doc
         // window over ONLY themselves — a doc's rows all land in one
         // batch, so the legacy subset contains every row of its docs;
@@ -203,13 +241,13 @@ object CorpusIngest {
         // near-dup leg consumes it)
         val legacy =
           if (legacyDirs.isEmpty) None
-          else Some(spark.read.parquet(legacyDirs.map(_.toString): _*))
+          else Some(spark.read.parquet(legacyDirs.map(_._1.toString): _*))
         val legacyFilled = legacy.map(_.withColumn("nc",
           cnt(lit(1)).over(
             org.apache.spark.sql.expressions.Window.partitionBy("c_id"))))
         val modern =
           if (modernDirs.isEmpty) None
-          else Some(spark.read.parquet(modernDirs.map(_.toString): _*))
+          else Some(spark.read.parquet(modernDirs.map(_._1.toString): _*))
         val shingles = (modern, legacyFilled) match {
           case (Some(m), Some(l)) => m.unionByName(l)
           case (Some(m), None) => m
@@ -272,6 +310,12 @@ object CorpusIngest {
       .trigger(trigger)
       .start()
 
+  /** [[archiveBatchDocs]]'s result: document + dead-letter frames,
+    * both reading the shared `pinned` member frame (unpersist it when
+    * the batch's actions are done — the [[processBatch]] style). */
+  final case class ArchiveBatch(docs: DataFrame, quarantine: DataFrame,
+                                pinned: DataFrame)
+
   /** One micro-batch of WET archive FILES (`binaryFile` rows: path,
     * content) → (documents, quarantine) in the corpus schema — the
     * adapter both the streaming and batch archive legs share, so
@@ -282,12 +326,6 @@ object CorpusIngest {
     * e.g. the fixture's `…/doc/<id>` URIs) and `source` = the archive
     * path. Quarantine rows keep full provenance for the dead-letter
     * sink — corruption is data on the streaming path too. */
-  /** [[archiveBatchDocs]]'s result: document + dead-letter frames,
-    * both reading the shared `pinned` member frame (unpersist it when
-    * the batch's actions are done — the [[processBatch]] style). */
-  final case class ArchiveBatch(docs: DataFrame, quarantine: DataFrame,
-                                pinned: DataFrame)
-
   def archiveBatchDocs(archiveFiles: DataFrame,
                        docId: Option[org.apache.spark.sql.Column] = None,
                        maxMemberBytes: Long = graft.functions.GzipArchiveCore.MaxMemberBytes,
@@ -310,7 +348,7 @@ object CorpusIngest {
     else
       graft.sources.WebArchive.wetDocuments(arch,
         maxMemberBytes = maxMemberBytes, maxTotalBytes = maxTotalBytes))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val id = docId.getOrElse(xxhash64(col("archive"), col("member_offset")))
     val docs = recs.filter(col("quarantine").isNull)
       .select(id.as("doc_id"), col("text"), col("archive").as("source"))
@@ -425,7 +463,7 @@ object CorpusIngest {
           ss.read.parquet(idxPath),
           maxMemberBytes = maxMemberBytes, maxTotalBytes = maxTotalBytes,
           maxSliceBytes = maxSliceBytes, fanoutPartitions = fanoutPartitions)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .persist(StorageLevel.MEMORY_AND_DISK)
         recs.filter(col("quarantine").isNotNull)
           .select("archive", "member_index", "member_offset", "member_clen",
             "quarantine")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkInternals
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,6 +17,12 @@ class CorpusIngestSpec extends AnyFunSuite {
 
   private val fixtureDocs = Tables.documents(spark, SparkTestSession.sf)
   private val docSchema = fixtureDocs.schema
+
+  /** Spark jobs one non-first [[CorpusIngest.processBatch]] may start
+    * on the fixture: measured at 71; 109 when each of the cleaned
+    * batch's four consumers re-ran the clean recipe and the index read
+    * inferred each shingle directory's schema with a Spark job. */
+  private val MaxBatchJobs = 71
 
   /** Land a wave as ONE parquet file directly in the landing dir (the
     * file stream source lists files, not nested write directories). */
@@ -247,5 +254,39 @@ class CorpusIngestSpec extends AnyFunSuite {
     CorpusIngest.processBatch(wave, outDir, batchId = 0L)
     val twice = CorpusIngest.readCorpus(spark, s"$outDir/corpus").get.count()
     assert(once == twice, "replaying a batch id must overwrite its partition")
+  }
+
+  test("the index read starts as many Spark jobs after 4 batches as after 2") {
+    // the vintage check reads one footer per shingle directory on the
+    // driver; a schema-inferring spark.read per directory would add
+    // one job for every batch already ingested
+    val outDir = java.nio.file.Files.createTempDirectory("graft_ingest_flat").toString
+    def ingest(b: Long): Unit =
+      CorpusIngest.processBatch(fixtureDocs.filter($"doc_id" % 4 === b), outDir, b)
+    def readJobs(): Int =
+      SparkInternals.jobsStarted(spark.sparkContext, "corpus-ingest-spec-index-read") {
+        assert(CorpusIngest.readIndexExcluding(spark, outDir, 99L).isDefined)
+      }
+    Seq(0L, 1L).foreach(ingest)
+    val afterTwo = readJobs()
+    Seq(2L, 3L).foreach(ingest)
+    val afterFour = readJobs()
+    assert(afterTwo > 0 && afterFour === afterTwo,
+      s"$afterTwo jobs after 2 batches, $afterFour after 4")
+  }
+
+  test("a non-first batch stays within its Spark-job budget and releases what it persists") {
+    val sc = spark.sparkContext
+    def cachedNonCkpt() =
+      sc.getPersistentRDDs.filter { case (_, r) => !r.isCheckpointed }.keySet
+    val outDir = java.nio.file.Files.createTempDirectory("graft_ingest_jobs").toString
+    CorpusIngest.processBatch(fixtureDocs.filter($"doc_id" < 200), outDir, 0L)
+    val before = cachedNonCkpt()
+    val jobs = SparkInternals.jobsStarted(sc, "corpus-ingest-spec-batch") {
+      CorpusIngest.processBatch(fixtureDocs.filter($"doc_id" >= 200), outDir, 1L)
+    }
+    assert(jobs > 0 && jobs <= MaxBatchJobs, s"$jobs jobs")
+    assert((cachedNonCkpt() -- before).isEmpty,
+      "processBatch must unpersist the frames it pins")
   }
 }

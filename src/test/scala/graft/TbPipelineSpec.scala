@@ -10,7 +10,9 @@ import graft.ops.tb.{TbPipeline, TbServing}
   * (CSVs under /root/reference/data/processed — the de-facto golden files,
   * SURVEY §5). Values are compared numerically: strings exactly,
   * numbers to 1e-6 relative (the goldens carry pandas float formatting
-  * noise like `265.948` vs `10.165000`).
+  * noise like `265.948` vs `10.165000`). Checks that only need
+  * TB-shaped input run on the in-repo fixture ([[TbFixture]], expected
+  * values in FIXTURES.md §D3).
   */
 class TbPipelineSpec extends AnyFunSuite {
   import SparkTestSession.spark
@@ -21,6 +23,8 @@ class TbPipelineSpec extends AnyFunSuite {
   private val popCsv = s"$refRaw/worldbank_population_20250923_041355.csv"
 
   private lazy val products = TbPipeline.run(spark, tbCsv, popCsv)
+  private lazy val fixtureProducts =
+    TbPipeline.run(spark, TbFixture.tbCsv, TbFixture.popCsv)
 
   private def goldenRows(path: String): Seq[Map[String, String]] = {
     val lines = scala.io.Source.fromFile(path).getLines().toSeq
@@ -59,7 +63,7 @@ class TbPipelineSpec extends AnyFunSuite {
   }
 
   test("pivot precondition: (country,iso3,year,indicator) unique post-cleaning") {
-    val clean = TbPipeline.cleanTb(TbPipeline.readTbCsv(spark, tbCsv))
+    val clean = TbPipeline.cleanTb(TbPipeline.readTbCsv(spark, TbFixture.tbCsv))
     val dupes = clean.groupBy("country", "iso3", "year", "indicator")
       .count().filter(col("count") > 1).count()
     assert(dupes == 0)
@@ -81,10 +85,10 @@ class TbPipelineSpec extends AnyFunSuite {
   }
 
   test("quality report folds A3-A6 into one job with expected values") {
-    val r = products.qualityReport.collect()(0)
-    assert(r.getAs[Long]("total_records") == 60)       // 10 countries × 6 years
-    assert(r.getAs[Long]("countries_count") == 10)
-    assert(r.getAs[Int]("year_min") == 2018)
+    val r = fixtureProducts.qualityReport.collect()(0)
+    assert(r.getAs[Long]("total_records") == 7)  // IDN/KHM/LAO × 2 years + BRN 2023
+    assert(r.getAs[Long]("countries_count") == 4)
+    assert(r.getAs[Int]("year_min") == 2022)
     assert(r.getAs[Int]("year_max") == 2023)
     assert(r.getAs[Long]("zero_population_records") == 0)
   }
@@ -113,8 +117,9 @@ class TbPipelineSpec extends AnyFunSuite {
 
   test("population join is planned as a broadcast hash join") {
     val pivoted = TbPipeline.pivotIndicators(
-      TbPipeline.cleanTb(TbPipeline.readTbCsv(spark, tbCsv)))
-    val pop = TbPipeline.cleanPopulation(TbPipeline.readPopulationCsv(spark, popCsv))
+      TbPipeline.cleanTb(TbPipeline.readTbCsv(spark, TbFixture.tbCsv)))
+    val pop = TbPipeline.cleanPopulation(
+      TbPipeline.readPopulationCsv(spark, TbFixture.popCsv))
     val plan = TbPipeline.joinPopulation(pivoted, pop)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"plan:\n$plan")
@@ -136,18 +141,18 @@ class TbPipelineSpec extends AnyFunSuite {
   }
 
   test("rank view: Indonesia ranks 1 by cases in latest year") {
-    val stats = TbPipeline.latestCountryStats(products.countrySummary)
+    val stats = TbPipeline.latestCountryStats(fixtureProducts.countrySummary)
     val idn = stats.filter(col("iso3") === "IDN").collect()(0)
     assert(idn.getAs[Int]("cases_rank") == 1)
   }
 
   test("csv/parquet sink round-trip preserves the summary") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    TbPipeline.write(products.countrySummary, s"$tmp/summary_pq", "parquet")
-    TbPipeline.write(products.countrySummary, s"$tmp/summary_csv", "csv")
+    TbPipeline.write(fixtureProducts.countrySummary, s"$tmp/summary_pq", "parquet")
+    TbPipeline.write(fixtureProducts.countrySummary, s"$tmp/summary_csv", "csv")
     val back = spark.read.parquet(s"$tmp/summary_pq")
-    assert(back.count() == 10)
+    assert(back.count() == 4)
     val csv = spark.read.option("header", "true").csv(s"$tmp/summary_csv")
-    assert(csv.count() == 10)
+    assert(csv.count() == 4)
   }
 }

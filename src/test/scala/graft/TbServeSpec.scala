@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkInternals
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -138,25 +136,14 @@ class TbServeSpec extends AnyFunSuite {
   test("writePayloads stays within its Spark-job budget and leaves the cache as found") {
     val products = TbPipeline.run(spark, tbCsv, popCsv)
     val sc = spark.sparkContext
-    val group = "tbserve-spec-payload-jobs"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
     def cacheState = (SparkInternals.cachedPlans(spark), sc.getPersistentRDDs.keySet)
     products.countrySummary.count() // materialize the pipeline's own cache first
     val before = cacheState
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "writePayloads")
-      try TbServe.writePayloads(spark, products,
+    val jobs = SparkInternals.jobsStarted(sc, "tbserve-spec-payload-jobs") {
+      TbServe.writePayloads(spark, products,
         Files.createTempDirectory("graft_tbserve_jobs").toString)
-      finally sc.clearJobGroup()
-      SparkInternals.drainListenerBus(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get > 0 && jobs.get <= MaxPayloadJobs, s"${jobs.get} jobs")
+    }
+    assert(jobs > 0 && jobs <= MaxPayloadJobs, s"$jobs jobs")
     assert(cacheState === before)
   }
 }
