@@ -483,14 +483,16 @@ object ScaleProbe {
       import spark.implicits._
       val ev = Tables.events(spark, dir)
       val (nPairs, tProj) = timeIt {
-        ops.EventQueries.coEngagementEdges(ev, minShared = 22L).count()
+        operators.Graph.coEngagementEdgesShared(ev, minShared = 22L)
+          .select("src", "dst").count()
       }
       val e = ops.Memo.of(spark, s"kcsplit_edges:$dir") {
-        ops.EventQueries.coEngagementEdges(ev, minShared = 22L)
+        operators.Graph.coEngagementEdgesShared(ev, minShared = 22L)
+          .select("src", "dst")
       }
       val (_, tMat) = timeIt { e.count() } // memo materialization
       val (nCore, tPeel) = timeIt {
-        ops.TextQueries.kCore(e, k = 70, iters = 6).count()
+        operators.Graph.kCore(e, k = 70, iters = 6).count()
       }
       println(f"kcore-split @ $dir: projection $nPairs%d directed rows " +
         f"in $tProj%.2f s; memo materialize $tMat%.2f s; " +
@@ -533,7 +535,7 @@ object ScaleProbe {
         "q36_simhash_pairs" -> (() =>
           operators.Dedup.simHashPairs(docs, maxHamming = 6).count()),
         "q39_dedup_clusters" -> (() =>
-          operators.Dedup.connectedComponents(
+          operators.Graph.connectedComponents(
             operators.Dedup.ngramJaccardPairs(docs, k = 3, threshold = 0.6)
               .select($"d1", $"d2")).count()),
         "q49_dedup_corpus" -> (() =>
@@ -591,7 +593,7 @@ object ScaleProbe {
         // graph is s disjoint copies and the probe measures the
         // projection + 6 peel rounds' engine overhead, not the
         // quadratic densification shared keys would cause (that
-        // regime is what coEngagementEdges' maxUsersPerKey caps).
+        // regime is what coEngagementEdgesShared's maxUsersPerKey caps).
         // The edge frame is MATERIALIZED before the peel, exactly as
         // q198 memoizes it — the first ladder run skipped this and
         // paid the projection SIX times (one per round's lineage;
@@ -608,11 +610,12 @@ object ScaleProbe {
                   + lit(i * 1000L)).cast("string"),
                 lit("}")).as("props"))
           }.reduce(_ unionByName _).repartition(cpus * 2)
-          val e = ops.EventQueries.coEngagementEdges(scaled, minShared = 22L)
+          val e = operators.Graph.coEngagementEdgesShared(scaled, minShared = 22L)
+            .select("src", "dst")
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try {
             e.count()
-            ops.TextQueries.kCore(e, k = 70, iters = 6).count()
+            operators.Graph.kCore(e, k = 70, iters = 6).count()
           } finally { e.unpersist() }
         }),
         // r18: the full decomposition over the same scaled graph —
@@ -630,11 +633,12 @@ object ScaleProbe {
                   + lit(i * 1000L)).cast("string"),
                 lit("}")).as("props"))
           }.reduce(_ unionByName _).repartition(cpus * 2)
-          val e = ops.EventQueries.coEngagementEdges(scaled, minShared = 22L)
+          val e = operators.Graph.coEngagementEdgesShared(scaled, minShared = 22L)
+            .select("src", "dst")
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try {
             e.count()
-            ops.TextQueries.coreness(e, iters = 12).count()
+            operators.Graph.coreness(e, iters = 12).count()
           } finally { e.unpersist() }
         }),
         // r18: the truss peel on its thinner (shared>=32) projection —
@@ -650,11 +654,12 @@ object ScaleProbe {
                   + lit(i * 1000L)).cast("string"),
                 lit("}")).as("props"))
           }.reduce(_ unionByName _).repartition(cpus * 2)
-          val e = ops.EventQueries.coEngagementEdges(scaled, minShared = 32L)
+          val e = operators.Graph.coEngagementEdgesShared(scaled, minShared = 32L)
+            .select("src", "dst")
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try {
             e.count()
-            ops.TextQueries.kTruss(e, k = 6, iters = 7).count()
+            operators.Graph.kTruss(e, k = 6, iters = 7).count()
           } finally { e.unpersist() }
         }),
         "q41_ann_topk" -> (() =>
@@ -684,7 +689,7 @@ object ScaleProbe {
         // volume scales with DOCS, not with length² (the r6 shape's
         // pathology); content-unique copies keep vocabularies disjoint
         "q101_pr_edges" -> (() =>
-          ops.TextQueries.coOccurrenceEdges(docs,
+          operators.Graph.coOccurrenceEdges(docs,
             ops.TextQueries.PageRankMaxTermsPerDoc).count()),
         // r7: linear-shuffle substring dedup — window rows ∝ corpus
         // tokens (never pairs), so time should track data volume;
@@ -833,8 +838,8 @@ object ScaleProbe {
         // components; degree orientation keeps wedge volume O(m^1.5)
         // even on the hub-heavy shared-vocabulary shape
         "q118_triangles" -> (() =>
-          ops.TextQueries.triangleCensus(
-            ops.TextQueries.coOccurrenceEdges(docs,
+          operators.Graph.triangleCensus(
+            operators.Graph.coOccurrenceEdges(docs,
               ops.TextQueries.PageRankMaxTermsPerDoc))
             .select($"n_triangles").as[Long].collect()(0)),
         // r8 widening: inverted index — explode + combinable count +
@@ -1150,10 +1155,10 @@ object ScaleProbe {
     }
 
     // deep-graph CC through the entry point: a 50k-node chain (diameter
-    // 50k) exhausts the min-label rounds, and connectedComponents hands
-    // the graph over to star contraction
+    // 50k) stalls the min-label changed count in round 1, and
+    // connectedComponents hands the graph over to star contraction
     val chain = spark.range(1L, 50000L).select($"id".as("d1"), ($"id" - 1).as("d2"))
-    val (cc, sec) = timeIt(operators.Dedup.connectedComponents(chain).count())
+    val (cc, sec) = timeIt(operators.Graph.connectedComponents(chain).count())
     println(f"cc_50k_chain           $sec%8.2f s   (nodes=$cc)")
     spark.stop()
   }

@@ -8,8 +8,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** `h_index(vals array<bigint>) -> bigint`: the largest h such that at
   * least h elements of `vals` are ≥ h (0 for an empty array) — the
-  * h-operator of the distributed coreness fixpoint ([[graft.ops
-  * .TextQueries.coreness]], Montresor et al. 2011), computed by ONE
+  * h-operator of the distributed coreness fixpoint
+  * ([[graft.operators.Graph.coreness]], Montresor et al. 2011), computed by ONE
   * counting pass instead of the rank-window form
   * `max(least(row_number over (order by v desc), v))`:
   * each value clamps into a [0, n] bucket (h ≤ n, so larger values

@@ -505,62 +505,6 @@ object Dedup {
       .select("d1", "d2", "jaccard")
   }
 
-  /** Connected components over a near-dup pair list: label every
-    * clustered doc with the smallest doc_id reachable from it —
-    * the grouping step that turns pairwise near-dups into dedup
-    * groups (keep `component_id`, drop the rest).
-    *
-    * Iterative min-label propagation to a fixpoint; `localCheckpoint`
-    * each round truncates the exploding lineage (without it, iteration
-    * i re-executes rounds 1..i-1 and the job goes quadratic). Rounds
-    * needed = graph diameter; near-dup clusters are shallow (dups of a
-    * common original), so convergence is fast. A deeper graph hands
-    * over after `maxIter` rounds: the cached symmetric edges go to
-    * [[connectedComponentsStars]] (same contract, rounds independent
-    * of diameter), which still throws IllegalStateException when its
-    * own rounds run out. */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    val edges = pairs
-      .select(col("d1").as("a"), col("d2").as("b"))
-      .union(pairs.select(col("d2").as("a"), col("d1").as("b")))
-      .distinct().cache()
-    // seed with round 1's fixpoint value directly — label₀(u) =
-    // min(u, min Γ(u)) is what the first propagation round would
-    // compute from identity labels, so starting here saves one full
-    // join+materialize round
-    var labels = edges.groupBy(col("a").as("node"))
-      .agg(least(min(col("b")), col("a")).as("label"))
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val neighborMin = edges.join(labels, edges("b") === labels("node"))
-        .groupBy(edges("a").as("n2")).agg(min("label").as("nlabel"))
-      // Carry the previous label through the propagation join so
-      // convergence is read off the SAME materialized result — the
-      // eager localCheckpoint is the round's only distributed job; the
-      // changed-count below scans checkpointed partitions instead of
-      // re-running a second join against the old labels.
-      val updated = labels
-        .join(neighborMin, labels("node") === neighborMin("n2"), "left")
-        .select(col("node"), col("label").as("old"),
-          least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"))
-        .localCheckpoint()
-      val changed = updated.filter(col("label") =!= col("old")).count()
-      labels = updated.select("node", "label")
-      converged = changed == 0
-      i += 1
-    }
-    // A non-fixpoint exit would leave labels that look valid but are
-    // not all component minima: hand the graph to star contraction.
-    // Its first localCheckpoint is eager, so `edges` can go after it.
-    try {
-      if (converged)
-        labels.select(col("node").as("doc_id"), col("label").as("component_id"))
-      else
-        connectedComponentsStars(edges.select(col("a").as("d1"), col("b").as("d2")))
-    } finally edges.unpersist()
-  }
-
   /** End-to-end corpus dedup — the operator a pipeline actually calls:
     * exact dedup first (mandatory pre-pass, see [[exactDedup]]), then
     * MinHash-LSH near-dup pairs on the survivors, connected
@@ -569,9 +513,9 @@ object Dedup {
     * columns.
     *
     * Each stage is the scale-shaped variant: O(n) hash pass → bucketed
-    * LSH (never O(n²)) → iterative CC ([[connectedComponents]] hands
-    * deep/adversarial duplicate graphs over to star contraction after
-    * `maxIter` rounds). */
+    * LSH (never O(n²)) → iterative CC ([[Graph.connectedComponents]]
+    * hands deep/adversarial duplicate graphs over to star contraction
+    * once its changed count stops halving). */
   def dedupCorpus(docs: DataFrame, k: Int = 3, numHashes: Int = 16,
                   bands: Option[Int] = None, threshold: Double = 0.6): DataFrame = {
     // exact pass: survivors = smallest doc_id per distinct text. The
@@ -594,7 +538,7 @@ object Dedup {
       .select(col("doc_id") +: others.map(c => col("_rep")(c).as(c)): _*)
     val pairs = minHashPairs(exactSurvivors, k, numHashes, bands, threshold)
       .select("d1", "d2")
-    val comp = connectedComponents(pairs)
+    val comp = Graph.connectedComponents(pairs)
     // unclustered docs survive; clustered ones only as the component min
     exactSurvivors.join(comp, Seq("doc_id"), "left")
       .filter(col("component_id").isNull || col("component_id") === col("doc_id"))
@@ -967,88 +911,6 @@ object Dedup {
       .join(broadcast(benchSh), Seq("shingle"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_overlap"))
       .filter(col("n_overlap") >= minOverlap)
-  }
-
-  /** Alternating large-star / small-star connected components
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — same contract as [[connectedComponents]]: every node
-    * of `pairs` labeled with the minimum reachable id.
-    *
-    * Why both exist: min-label propagation converges in O(diameter)
-    * rounds — fine for shallow near-dup clusters, quadratic pain on
-    * chain-shaped graphs. Star contraction converges in O(log²) rounds
-    * regardless of diameter, at the cost of two shuffles per round —
-    * so [[connectedComponents]] hands over to it after `maxIter`
-    * min-label rounds.
-    *
-    *   large-star: every neighbor v > u re-attaches to
-    *     m = min(Γ(u) ∪ {u});
-    *   small-star: every neighbor v ≤ u (plus u) attaches to the
-    *     same m over the small side.
-    *
-    * Both steps only ever group by node and join ids — no payloads,
-    * no driver state; convergence is an edge-multiset hash read off
-    * the round's checkpointed result (one extra cheap action over
-    * materialized partitions, not a recompute). */
-  def connectedComponentsStars(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
-    def canon(df: DataFrame): DataFrame =
-      df.select(
-        greatest(col("a"), col("b")).as("a"), least(col("a"), col("b")).as("b"))
-        .filter(col("a") =!= col("b")).distinct()
-
-    // edges directed (a = larger, b = smaller) between rounds
-    var edges = canon(pairs.select(col("d1").as("a"), col("d2").as("b")))
-      .localCheckpoint()
-    def signature(df: DataFrame): (Long, Long) = {
-      // bit_xor fold: order-independent, no ANSI long-overflow (edges
-      // are distinct, so xor cancellation can't mask a real change
-      // that count doesn't already catch)
-      val r = df.agg(
-        count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(a, b))"), lit(0L))).first()
-      (r.getLong(0), r.getLong(1))
-    }
-    var sig = signature(edges)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      // large-star over the symmetrized neighborhood
-      val sym = edges.select(col("a"), col("b"))
-        .union(edges.select(col("b").as("a"), col("a").as("b")))
-      val mins = sym.groupBy("a")
-        .agg(least(min(col("b")), col("a")).as("m"))
-        .select(col("a").as("u"), col("m"))
-      val afterLarge = canon(
-        sym.join(mins, sym("a") === mins("u"))
-          .filter(col("b") > col("a"))
-          .select(col("b").as("a"), col("m").as("b")))
-      // small-star over the (larger → smaller) directed edges
-      val minsS = afterLarge.groupBy(col("a").as("u"))
-        .agg(min(col("b")).as("m"))
-      val afterSmall = canon(
-        afterLarge.join(minsS, afterLarge("a") === minsS("u"))
-          .select(col("b").as("a"), col("m").as("b"))
-          .union(afterLarge.select(col("a"), col("b")).join(
-            minsS, col("a") === minsS("u")).select(col("a"), col("m").as("b"))))
-        .localCheckpoint()
-      val newSig = signature(afterSmall)
-      converged = newSig == sig
-      sig = newSig
-      edges = afterSmall
-      i += 1
-    }
-    // A non-fixpoint edge set here emits MULTIPLE (doc_id, component_id)
-    // rows per node, and dedupCorpus's `component_id === doc_id` filter
-    // would then keep/drop duplicates arbitrarily. Fail fast instead of
-    // returning a silently-corrupt labeling.
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponentsStars: no fixpoint after $maxIter rounds; " +
-        "the star projection would emit multiple labels per node")
-    // fixpoint: stars (x, m) with m the component min
-    edges.select(col("a").as("doc_id"), col("b").as("component_id"))
-      .union(edges.select(col("b").as("doc_id"), col("b").as("component_id")))
-      .distinct()
   }
 
   /** 64-bit SimHash over distinct k-shingles: per bit, majority vote of

@@ -4,8 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: image/audio/video as opaque `binary`
-  * columns with typed metadata, plus decode / feature-extract /
-  * resize / frame-sample stages.
+  * columns with typed metadata, plus decode and near-dup hash stages.
   *
   * IMAGE and AUDIO codecs are REAL: `javax.imageio` ships
   * PNG/BMP/JPEG/GIF readers and `javax.sound.sampled` ships
@@ -14,12 +13,11 @@ import org.apache.spark.sql.functions._
   * [[audioHashes]] / [[audioNearDupPairs]] decode actual payload
   * bytes via native Catalyst expressions ([[graft.functions.ImageCore]]
   * / [[graft.functions.AudioCore]]) — no external libraries, no UDF
-  * closures. VIDEO (and compressed audio like MP3/AAC) stays STUBBED:
-  * the JDK has no such codecs and this container adds none; each
-  * `*Stub` derives a deterministic fake from the bytes (documented
-  * per function) so pipelines exercise the full dataflow; swapping a
-  * stub for a real decoder is a drop-in replacement of one column
-  * expression. [[decodeImageStub]] remains for fixtures whose
+  * closures. VIDEO (and compressed audio like MP3/AAC) has no
+  * decoder: the JDK has no such codecs and the build adds none.
+  * [[decodeImageStub]] derives deterministic fake metadata from the
+  * bytes (swapping it for a real decoder is a drop-in replacement of
+  * one column expression); it remains for fixtures whose
   * payloads are NOT image bytes (the parquet fixtures are text-
   * derived) — the real paths return null metadata for those by
   * design.
@@ -252,28 +250,6 @@ object Multimodal {
       .withColumn("width", (pmod(xxhash64(col("payload")), lit(1920)) + 1).cast("int"))
       .withColumn("height", (pmod(xxhash64(col("payload"), lit(1)), lit(1080)) + 1).cast("int"))
       .withColumn("channels", lit(3))
-
-  /** STUB feature extraction: a deterministic 8-dim pseudo-embedding
-    * from stride-hashed byte windows — the batch shape (fixed-width
-    * array<double> per asset) is exactly what a real vision encoder
-    * emits, so similarity search composes on top unchanged. */
-  def featureExtractStub(assets: DataFrame, dim: Int = 8): DataFrame = {
-    val feats = (0 until dim).map { i =>
-      (pmod(xxhash64(col("payload"), lit(i)), lit(2000000)).cast("double") / 1000000.0 - 1.0)
-    }
-    assets.withColumn("features", array(feats: _*))
-  }
-
-  /** STUB video frame sampling: treats the payload as `frameSize`-byte
-    * frames, keeps every `stride`-th frame's offset + fingerprint —
-    * the explode shape of real frame sampling. */
-  def frameSampleStub(assets: DataFrame, frameSize: Int = 64, stride: Int = 4): DataFrame =
-    assets
-      .withColumn("n_frames", greatest(floor(length(col("payload")) / frameSize), lit(1)).cast("int"))
-      .withColumn("frame_idx", explode(expr(s"sequence(0, n_frames - 1, $stride)")))
-      .withColumn("frame_fp",
-        xxhash64(expr(s"substring(payload, frame_idx * $frameSize + 1, $frameSize)")))
-      .select("asset_id", "modality", "frame_idx", "frame_fp")
 
   /** Metadata-only projection: never touches payload bytes — the
     * binary column is pruned out of the scan (asserted in spec). */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{AsOf, Maintenance, Multimodal, Sketches}
+import graft.operators.{AsOf, Graph, Maintenance, Multimodal, Sketches}
 import graft.streaming.EventStreams
 
 /** Event-time window inventory over `events`, plus multimodal
@@ -1256,141 +1256,11 @@ object EventQueries {
       .orderBy("t1", "t2")
   }
 
-  /** User co-engagement graph: an undirected edge between two users
-    * for every pair sharing at least `minShared` distinct `props.k`
-    * engagement keys — the standard bipartite user–item projection
-    * (users, keys, the DISTINCT (user, key) incidence frame; the
-    * share floor is what keeps the projection from degenerating into
-    * the complete graph). Emitted directed-symmetric (both
-    * directions, no self-loops), the q101 edge convention every graph
-    * operator here consumes.
-    *
-    * The projection is PREFIX-FILTERED (r18, the q197 machinery in
-    * its constant-overlap form — Chaudhuri et al., SSJoin, ICDE'06):
-    * a pair needs |K_u ∩ K_v| ≥ c, so each user indexes only the
-    * first |K_u| − c + 1 keys of the shared (key-df asc, key asc)
-    * canonical order — any qualifying pair's canonically-smallest
-    * common key sits inside BOTH prefixes, so the meet is lossless —
-    * and candidates verify EXACTLY by one in-row `array_intersect`
-    * of the two full key arrays. vs the naive self-join + pair-count
-    * aggregate this replaces: the naive form shuffles the FULL meet
-    * volume Σ_k |U_k|² through a hash aggregate (measured 22.9 s of
-    * q198's 27.8 s single-pass at sf0.1 — the fixture's 100-key
-    * universe makes every key hot), while here the join moves only
-    * prefix meets, `distinct` replaces the count (cheaper: no
-    * per-pair counter state, map-side dedup), and the intersection
-    * count happens once per CANDIDATE PAIR on two ≤|K|-element
-    * arrays instead of once per meet row. Users with fewer than c
-    * keys can never qualify and drop before the join.
-    *
-    * Scale: per-key fan-out is still the quadratic axis —
-    * `maxUsersPerKey` caps it ([[graft.operators.Dedup]]'s
-    * `maxShingleDocFreq` twin): keys engaging more than the cap drop
-    * from the incidence frame before anything else (a key half the
-    * user base touches is boilerplate affinity, not signal — and it
-    * alone would contribute |U|²/8 pair rows). None preserves exact
-    * projection semantics for the oracle. */
-  def coEngagementEdges(events: DataFrame, minShared: Long,
-                        maxUsersPerKey: Option[Int] = None): DataFrame =
-    coEngagementEdgesShared(events, minShared, maxUsersPerKey)
-      .select("src", "dst")
-
-  /** [[coEngagementEdges]] with the exact shared-key count attached:
-    * (src, dst, n_shared) where n_shared = |K_u ∩ K_v| ≥ minShared.
-    * The count is the verification intersection the projection
-    * already computes — emitting it makes ONE projection serve every
-    * floor above its own (r19): `n_shared ≥ c'` on a floor-c frame
-    * equals the floor-c' projection exactly for any c' ≥ c, because
-    * the prefix filter is lossless at c and the attached count is the
-    * exact intersection — which is how q202's floor-32 graph is now
-    * derived from the q198/q201 floor-22 memo instead of paying a
-    * second projection join (equivalence spec-pinned). */
-  def coEngagementEdgesShared(events: DataFrame, minShared: Long,
-                              maxUsersPerKey: Option[Int] = None): DataFrame = {
-    require(minShared >= 1, s"minShared must be positive, got $minShared")
-    graft.functions.SortedIntersectCount.register(events.sparkSession)
-    val uk = events.select(col("user_id"),
-        get_json_object(col("props"), "$.k").cast("long").as("k"))
-      .filter(col("k").isNotNull)
-      .distinct()
-    val pruned = maxUsersPerKey match {
-      case None => uk
-      case Some(cap) =>
-        val hot = uk.groupBy("k").agg(count(lit(1)).as("nu"))
-          .filter(col("nu") > cap).select("k")
-        uk.join(hot, Seq("k"), "left_anti")
-    }
-    // canonical (key-df asc, key asc) order per user; users below the
-    // floor can never reach c shared keys
-    val kdf = pruned.groupBy("k").agg(count(lit(1)).as("kdf"))
-    val arrs = pruned.join(kdf, "k")
-      .groupBy("user_id")
-      .agg(array_sort(collect_list(struct(col("kdf"), col("k")))).as("ks"))
-      .withColumn("nk", size(col("ks")).cast("long"))
-      .filter(col("nk") >= minShared)
-    val prefixes = arrs.select(col("user_id"),
-        explode(expr(s"slice(ks, 1, int(nk - $minShared + 1))")).as("p"))
-      .select(col("user_id"), col("p.k").as("k"))
-    // r22: the candidate `distinct` is the projection's biggest
-    // exchange (~14M prefix-meet rows at sf0.1) — packed to one
-    // BIGINT per pair when the probed id bound allows
-    // ([[graft.operators.PairPack]]; guide §2.3 "narrower types").
-    // The probe runs once per projection build and the memoized
-    // coengShared22 frame is that build's only query-path caller.
-    val cands = graft.operators.PairPack.distinctPairs(
-      prefixes.as("a").join(prefixes.as("b"),
-          col("a.k") === col("b.k") && col("a.user_id") < col("b.user_id"))
-        .select(col("a.user_id").as("u"), col("b.user_id").as("v")),
-      "u", "v", packed = graft.operators.PairPack.fits32(events, "user_id"))
-    // r21: key arrays re-sorted BY VALUE once per user (tiny frame, ~
-    // |users| rows) so verification is one allocation-free merge per
-    // candidate pair (`sorted_intersect_count`) instead of
-    // size(array_intersect)'s per-pair hash set + result array —
-    // measured as ~7 s of the 12.8 s cold projection at sf0.1
-    // (1.1M pairs × two ~100-element arrays). Same count exactly:
-    // the keys are distinct per user, and the kernel counts distinct
-    // matches on any sorted input.
-    val flat = arrs.select(col("user_id"),
-      array_sort(expr("transform(ks, s -> s.k)")).as("kk"))
-    val p = cands
-      .join(flat.select(col("user_id").as("u"), col("kk").as("k1")), "u")
-      .join(flat.select(col("user_id").as("v"), col("kk").as("k2")), "v")
-      .withColumn("n_shared", expr("sorted_intersect_count(k1, k2)"))
-      .filter(col("n_shared") >= minShared)
-      .select("u", "v", "n_shared")
-    // r22b: both directions emitted IN-ROW (explode of a 2-element
-    // array) instead of `p.unionAll(p.select(swapped))` — the union
-    // referenced the whole projection twice, and with no cross-subplan
-    // CSE each branch re-ran the verification stage (the two broadcast
-    // joins + sorted_intersect_count over every candidate pair; AQE
-    // stage reuse dedups the candidate EXCHANGE but not the
-    // post-shuffle operators). One explode row-doubles the SAME pass;
-    // row multiset identical (spec-pinned).
-    p.select(explode(array(
-        struct(col("u").as("src"), col("v").as("dst"), col("n_shared")),
-        struct(col("v").as("src"), col("u").as("dst"), col("n_shared"))))
-        .as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"),
-        col("e.n_shared").as("n_shared"))
-  }
-
-  /** k-core of the user co-engagement graph ([[coEngagementEdges]] at
-    * the shared≥22 floor, [[TextQueries.kCore]] at k=70 for 6
-    * synchronous rounds): the dense engagement nucleus — the cohort
-    * whose members each share deep engagement with ≥ 70 OTHER
-    * nucleus members, the standard community-backbone signal (and
-    * the graph family's density axis, next to q101/q118/q181). On
-    * the sf0.01 fixture the peel genuinely cascades: 150 users →
-    * 121 survivors over 4 rounds (rounds 5–6 are fixpoint no-ops,
-    * measured while dialing), so the oracle's 6 unrolled rounds
-    * certify the synchronous-update algebra, not just a degree
-    * filter. Output deg_in_core is each survivor's degree within the
-    * core-inducing round — integer-exact on both engines. */
   /** The ONE co-engagement projection the whole graph family reads
     * (r19): the floor-22 frame WITH its exact n_shared column,
     * memoized — q198/q201 project it to (src, dst), q202 derives its
     * floor-32 graph as `n_shared >= 32` (exact, see
-    * [[coEngagementEdgesShared]]) instead of paying a second
+    * [[Graph.coEngagementEdgesShared]]) instead of paying a second
     * projection join. The projection join is the expensive leg and
     * every peel round's lineage references it — memoized so the peel
     * rounds (and a Bench pass's repeats) pay it once, the q181
@@ -1426,20 +1296,32 @@ object EventQueries {
   private def coengShared22(spark: SparkSession, dir: String): DataFrame =
     Memo.of(spark, s"coeng_edges_shared:$dir:minShared=22") {
       val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      coEngagementEdgesShared(Tables.events(spark, dir), minShared = 22L)
+      Graph.coEngagementEdgesShared(Tables.events(spark, dir), minShared = 22L)
         .localCheckpoint(true)
         .repartition(p, col("src"))
         .sortWithinPartitions("src", "dst")
     }
 
+  /** k-core of the user co-engagement graph
+    * ([[Graph.coEngagementEdgesShared]] at the shared≥22 floor,
+    * [[Graph.kCore]] at k=70 for 6 synchronous rounds): the dense engagement nucleus — the cohort
+    * whose members each share deep engagement with ≥ 70 OTHER
+    * nucleus members, the standard community-backbone signal (and
+    * the graph family's density axis, next to q101/q118/q181). On
+    * the sf0.01 fixture the peel genuinely cascades: 150 users →
+    * 121 survivors over 4 rounds (rounds 5–6 are fixpoint no-ops,
+    * measured while dialing), so the oracle's 6 unrolled rounds
+    * certify the synchronous-update algebra, not just a degree
+    * filter. Output deg_in_core is each survivor's degree within the
+    * core-inducing round — integer-exact on both engines. */
   def q198KCore(spark: SparkSession, dir: String): DataFrame = {
     val e = coengShared22(spark, dir).select("src", "dst")
-    TextQueries.kCore(e, k = 70, iters = 6)
+    Graph.kCore(e, k = 70, iters = 6)
       .select(col("v").as("user_id"), col("deg").as("deg_in_core"))
   }
 
   /** Full coreness decomposition over the same co-engagement graph
-    * ([[TextQueries.coreness]], 12 h-index rounds — the sf0.01
+    * ([[Graph.coreness]], 12 h-index rounds — the sf0.01
     * fixture converges in 11, measured while dialing, so round 12 is
     * the fixpoint margin): every user's core NUMBER in one pass,
     * where q198 answers one fixed k. The two queries share the
@@ -1450,12 +1332,12 @@ object EventQueries {
     * independently). All integer: degrees, ranks, h-indexes. */
   def q201Coreness(spark: SparkSession, dir: String): DataFrame = {
     val e = coengShared22(spark, dir).select("src", "dst")
-    TextQueries.coreness(e, iters = 12)
+    Graph.coreness(e, iters = 12)
       .select(col("v").as("user_id"), col("c").as("coreness"))
   }
 
   /** k-truss backbone of the co-engagement graph
-    * ([[TextQueries.kTruss]] at k=6, 7 rounds, over the shared≥32
+    * ([[Graph.kTruss]] at k=6, 7 rounds, over the shared≥32
     * floor — much thinner than q198/q201's floor-22 graph on purpose:
     * the truss certifies triangle embedding, the deliberately-dense
     * floor-22 fixture leaves nothing to peel, and the floor-32 graph
@@ -1471,7 +1353,7 @@ object EventQueries {
     // — monotone and exact, one projection for the whole family
     val e = coengShared22(spark, dir)
       .filter(col("n_shared") >= 32L).select("src", "dst")
-    TextQueries.kTruss(e, k = 6, iters = 7)
+    Graph.kTruss(e, k = 6, iters = 7)
       .select(col("a").as("u1"), col("b").as("u2"), col("support"))
   }
 
@@ -1741,7 +1623,7 @@ object EventQueries {
   /** One h-index round of the q201 oracle: each node's new value is
     * max(least(rank, neighbor c)) over its neighbors' descending
     * current values — the identical arithmetic the engine round runs
-    * ([[TextQueries.coreness]]). */
+    * ([[Graph.coreness]]). */
   private def corIterSql(prev: String, next: String): String =
     s"""$next AS MATERIALIZED (
        |  SELECT src AS v, max(least(rn, cv)) AS c FROM (
@@ -1797,7 +1679,7 @@ object EventQueries {
             .mkString(",\n")}
          |SELECT v AS user_id, c AS coreness FROM c12""".stripMargin,
 
-    // the coEngagementEdges projection (DISTINCT user/key incidence,
+    // the co-engagement projection (DISTINCT user/key incidence,
     // shared>=22 pair floor, symmetric emit) then kCore's 6 rounds
     // unrolled — each round MATERIALIZED, the q181/q101 convention
     "q198_kcore" ->

@@ -595,7 +595,7 @@ object Relational {
     * previous delta; depth is log₃(max id), so the loop count is tiny
     * even at 100 TB of ids — the dangerous shape would be a deep-chain
     * recursion (depth ∝ n), which is exactly why the dedup family's
-    * [[graft.operators.Dedup.connectedComponentsStars]] exists instead
+    * [[graft.operators.Graph.connectedComponentsStars]] exists instead
     * of a recursive-CTE closure. */
   val q85RecursiveSql: String =
     """WITH RECURSIVE anc(doc_id, anc_id, depth) AS (

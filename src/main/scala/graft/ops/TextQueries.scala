@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{Dedup, Sharding, TextAnalysis}
+import graft.operators.{Dedup, Graph, Sharding, TextAnalysis}
 
 /** Text-analysis / dedup operator inventory over the `documents`
   * fixture, oracle-paired where the semantics are SQL-expressible.
@@ -248,7 +248,7 @@ object TextQueries {
       .join(survivorIds.withColumnRenamed("doc_id", "d1"), Seq("d1"), "left_semi")
       .join(survivorIds.withColumnRenamed("doc_id", "d2"), Seq("d2"), "left_semi")
       .select("d1", "d2")
-    val comp = Dedup.connectedComponents(pairs)
+    val comp = Graph.connectedComponents(pairs)
     exact.join(comp, Seq("doc_id"), "left")
       .filter(col("component_id").isNull || col("component_id") === col("doc_id"))
       .select(col("doc_id"), col("source"))
@@ -269,7 +269,7 @@ object TextQueries {
     * iterative join chain worth paying once per session. */
   private def dedupComponents(spark: SparkSession, dir: String): DataFrame =
     Memo.of(spark, s"dedup_components:$dir:k=3:t=0.6") {
-      Dedup.connectedComponents(
+      Graph.connectedComponents(
         exactJaccardPairs(spark, dir, threshold = 0.6).select(col("d1"), col("d2")))
     }
 
@@ -617,417 +617,43 @@ object TextQueries {
     Sharding.temperatureMix(Tables.documents(spark, dir), budget = 200L,
       groupCol = "lang")
 
-  /** Iterative graph analytics: PageRank over the term co-occurrence
-    * graph, in deterministic FIXED-POINT arithmetic. Floating-point
-    * PageRank sums in partition order — unusable under a cross-engine
-    * hash gate; here ranks are integers scaled by 10¹², every
-    * contribution and damping step is integer floor division, so
-    * three iterations produce bit-identical BIGINTs on any engine or
-    * cluster shape (the mass lost to flooring is deterministic too).
-    *
-    * Scale shape: each iteration is one join (edges ⋈ ranks, both
-    * keyed on the term) + one map-side-combinable sum — the standard
-    * distributed PageRank step; iteration count is fixed (3), not
-    * convergence-driven, so the job graph is static. The co-occurrence
-    * edge build is the expensive leg and runs once, over each doc's
-    * TOP-[[PageRankMaxTermsPerDoc]] terms by tf (ties broken on the
-    * term string, so the kept set is engine-reproducible): uncapped,
-    * the per-doc term self-join is O(distinct-terms²) per document —
-    * a web-scale doc with 10⁴ distinct terms would contribute 10⁸
-    * edge rows, the same pathology [[Dedup.ngramJaccardPairs]] caps
-    * with `maxShingleDocFreq`. The cap bounds every doc's
-    * contribution at N·(N−1) rows AND shrinks the persisted edge
-    * frame ~50x at sf0.1, which un-squeezes executor storage memory
-    * for every query sharing the pass (the round-6 dedup-family
-    * drift). Capping is also the right GRAPH: co-occurrence edges
-    * from a document's rare tail are noise; tf-top terms are the
-    * document's actual topical vocabulary (standard practice in
-    * TextRank-style keyword graphs). */
+  /** Per-doc term cap of the co-occurrence graph q101/q118/q181 read
+    * ([[Graph.coOccurrenceEdges]]). The edge build is the expensive
+    * leg and runs once, over each doc's TOP-[[PageRankMaxTermsPerDoc]]
+    * terms by tf (ties broken on the term string, so the kept set is
+    * engine-reproducible): uncapped, the per-doc term self-join is
+    * O(distinct-terms²) per document — a web-scale doc with 10⁴
+    * distinct terms would contribute 10⁸ edge rows, the same
+    * pathology [[Dedup.ngramJaccardPairs]] caps with
+    * `maxShingleDocFreq`. The cap bounds every doc's contribution at
+    * N·(N−1) rows AND shrinks the persisted edge frame ~50x at sf0.1,
+    * which un-squeezes executor storage memory for every query
+    * sharing the pass (the round-6 dedup-family drift). Capping is
+    * also the right GRAPH: co-occurrence edges from a document's rare
+    * tail are noise; tf-top terms are the document's actual topical
+    * vocabulary (standard practice in TextRank-style keyword graphs). */
   val PageRankMaxTermsPerDoc = 16
 
-  /** q101's co-occurrence edge build, capped: each doc contributes at
-    * most maxTermsPerDoc·(maxTermsPerDoc−1) directed edges regardless
-    * of its length (the bounded-blowup property the spec pins with an
-    * adversarially long doc). Public for that spec; q101 memoizes it. */
-  def coOccurrenceEdges(docs: DataFrame, maxTermsPerDoc: Int): DataFrame = {
-    val tf = docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    val t = tf
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
-          .orderBy(col("tf").desc, col("term"))))
-      .filter(col("rk") <= maxTermsPerDoc)
-      .select("doc_id", "term")
-    t.as("a").join(t.as("b"),
-        col("a.doc_id") === col("b.doc_id") && col("a.term") =!= col("b.term"))
-      .select(col("a.term").as("src"), col("b.term").as("dst"))
-      .distinct()
-  }
-
-  /** Triangle census of the term co-occurrence graph — the standard
-    * graph-cohesion statistic (clustering coefficient's numerator;
-    * community density): one row of (n_nodes, n_edges, n_triangles)
-    * BIGINTs over the same capped edge frame q101 ranks.
-    *
-    * The plan is DEGREE ORIENTATION, the classic distributed
-    * triangle-count move: orient every undirected edge from its
-    * (degree, name)-smaller endpoint to its larger one — a total
-    * order, so each triangle {a,b,c} has EXACTLY one source node a
-    * with both out-edges a→b, a→c, and closes through the single
-    * oriented edge b→c. Counting is then wedges-from-a semi-joined
-    * against the oriented edge set: no double counting, no /6
-    * correction, and — the scale property — each node generates
-    * C(outdeg, 2) wedges where orientation bounds out-degree by
-    * O(√m) on ANY graph (a hub of degree 10⁶ has out-degree only
-    * toward HIGHER-degree nodes, of which there are few) — total
-    * wedge work O(m^1.5) instead of the Σdeg² blowup a naive
-    * wedge-on-any-node join pays on a skewed graph. All joins are
-    * equi-joins on term strings; nothing global but the final count.
-    *
-    * Per-round memo note: the oriented edge frame has three consumers
-    * (two wedge legs + the closing semi-join); built once via the
-    * shared q101 edge memo plus one derived persist-free aggregation
-    * chain — the wedge join itself consumes the SAME frame twice, so
-    * it rides the q101 edge memo's materialization. */
-  def q118Triangles(spark: SparkSession, dir: String): DataFrame = {
-    val e = Memo.of(spark, s"pr_edges:$dir:cap=$PageRankMaxTermsPerDoc") {
-      coOccurrenceEdges(Tables.documents(spark, dir), PageRankMaxTermsPerDoc)
+  /** The capped co-occurrence graph q101/q118/q181 share. The edge
+    * build (per-doc term self-join + distinct) is the expensive leg
+    * and has several consumers in one plan (PageRank's degrees and
+    * every round's join); Catalyst has no cross-subplan CSE, so
+    * without a persist each consumer re-runs the self-join — memoized
+    * like the other multi-consumer legs (cleared per bench pass). */
+  private def coOccurrenceGraph(spark: SparkSession, dir: String): DataFrame =
+    Memo.of(spark, s"pr_edges:$dir:cap=$PageRankMaxTermsPerDoc") {
+      Graph.coOccurrenceEdges(Tables.documents(spark, dir), PageRankMaxTermsPerDoc)
     }
-    triangleCensus(e)
-  }
 
-  /** The operator core over any directed-symmetric (src, dst) edge
-    * frame (both directions present, no self-loops) — q118 binds it
-    * to the q101 co-occurrence graph; the spec drives crafted graphs
-    * through it. */
-  def triangleCensus(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    // undirected edge list: one row per unordered pair
-    val und = edges.filter(col("src") < col("dst"))
-      .select(col("src").as("a"), col("dst").as("b"))
-    val deg = edges.groupBy(col("src").as("v"))
-      .agg(count(lit(1)).as("deg"))
-    // orient by the (deg, name) total order; carry the order key of
-    // both endpoints so the wedge join can compare b <ord c locally
-    val oriented = und
-      .join(deg.select(col("v").as("a"), col("deg").as("da")), "a")
-      .join(deg.select(col("v").as("b"), col("deg").as("db")), "b")
-      .select(
-        when(col("da") < col("db") ||
-            (col("da") === col("db") && col("a") < col("b")), col("a"))
-          .otherwise(col("b")).as("lo"),
-        when(col("da") < col("db") ||
-            (col("da") === col("db") && col("a") < col("b")), col("b"))
-          .otherwise(col("a")).as("hi"),
-        least(col("da"), col("db")).as("dlo"),
-        greatest(col("da"), col("db")).as("dhi"))
-    val o = Memo.of(spark,
-      "triangle_oriented:" + Memo.frameKey(edges))(oriented)
-    o.count() // populate before the 3-consumer plan (the q105 lesson)
-    val wedges = o.as("x").join(o.as("y"), col("x.lo") === col("y.lo"))
-      .filter(col("x.dhi") < col("y.dhi") ||
-        (col("x.dhi") === col("y.dhi") && col("x.hi") < col("y.hi")))
-      .select(col("x.hi").as("b"), col("y.hi").as("c"))
-    val tri = wedges.join(o.select(col("lo").as("b"), col("hi").as("c")),
-      Seq("b", "c"), "left_semi")
-    und.agg(count(lit(1)).as("n_edges"))
-      .crossJoin(broadcast(deg.agg(count(lit(1)).as("n_nodes"))))
-      .crossJoin(broadcast(tri.agg(count(lit(1)).as("n_triangles"))))
-      .select(col("n_nodes"), col("n_edges"), col("n_triangles"))
-  }
+  /** Triangle census ([[Graph.triangleCensus]]) of the term
+    * co-occurrence graph: one row of (n_nodes, n_edges, n_triangles)
+    * BIGINTs over the same capped edge frame q101 ranks, read from the
+    * shared q101 edge memo. */
+  def q118Triangles(spark: SparkSession, dir: String): DataFrame =
+    Graph.triangleCensus(coOccurrenceGraph(spark, dir))
 
-  /** Synchronous label-propagation iterations for community
-    * detection (Raghavan et al. 2007) — completes the graph family
-    * (q39 CC = connectivity, q101 PageRank = centrality, q118
-    * triangles = cohesion; LPA = mesoscale structure, the "which
-    * topical cluster" signal mixing and near-dup triage consume).
-    * Deterministic synchronous variant: every node simultaneously
-    * adopts the most frequent label among its NEIGHBORS (count desc,
-    * label asc — a total order, so the fixed-point-free oscillation
-    * classic async LPA avoids by randomization is here simply
-    * deterministic and the oracle unrolls the fixed iteration count,
-    * the q101 convention). Labels init to the node's own term. Each
-    * iteration is one edge join + one combinable count + one
-    * `min_by((−count, label))` argmax — |edges|-row shuffles, and the
-    * capped edge build keeps |edges| ∝ docs. */
+  /** Rounds of q181's label propagation ([[Graph.lpaCommunities]]). */
   val LpaIters = 4
-
-  /** Synchronous k-core peel over a directed-symmetric (src, dst)
-    * edge frame (both directions present, no self-loops — the q101
-    * convention): each round simultaneously drops every node whose
-    * degree among the CURRENT survivors is < k, for a FIXED `iters`
-    * rounds — the q181/q107 convention that lets the oracle unroll
-    * the exact same rounds, so engine and oracle agree at ANY round
-    * count and the fixpoint claim ("this is the true k-core") is
-    * pinned separately by the crafted-graph spec, which also drives
-    * the cascade (peeling one layer exposes the next — the behavior a
-    * single degree filter cannot reproduce). k-core completes the
-    * graph family's density axis: CC = connectivity, PageRank =
-    * centrality, triangles = cohesion, LPA = mesoscale, k-core = the
-    * degeneracy backbone (Seidman 1983; Batagelj & Zaveršnik 2003) —
-    * the standard "dense engagement nucleus" signal.
-    *
-    * Each round references the survivor set ONCE (one dst-side
-    * semi-join + one map-side-combinable degree count, ids only) —
-    * NOT the textbook both-endpoints membership test, whose second
-    * reference would DOUBLE the unresolved logical plan per round
-    * (2^iters copies of the upstream edge build; measured as a
-    * planner hang at 6 rounds before this form). The src-side test
-    * is redundant by MONOTONICITY: survivor sets only shrink, so a
-    * node dropped at round i has degree < k against a SUPERSET of
-    * every later survivor set and can never re-qualify — the
-    * single-reference round computes the identical set, and the
-    * oracle's two-sided unrolled SQL certifies exactly that
-    * equivalence on the fixture. Synchronous peel converges in
-    * O(diameter)-ish rounds on real graphs (not the |V| rounds
-    * sequential peel implies); production picks `iters` from the
-    * ladder and verifies convergence by comparing round R to R−1,
-    * exactly what the spec does. Output: (v, deg) — degree within
-    * the final survivor set's inducing round. */
-  def kCore(edges: DataFrame, k: Int, iters: Int): DataFrame = {
-    require(k >= 1, s"k must be positive, got $k")
-    require(iters >= 1, s"iters must be positive, got $iters")
-    var surv = edges.select(col("src").as("v")).distinct()
-      .withColumn("deg", lit(0L))
-    for (_ <- 1 to iters) {
-      surv = edges
-        .join(surv.select(col("v").as("dst")), Seq("dst"), "left_semi")
-        .groupBy(col("src").as("v"))
-        .agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k)
-    }
-    surv
-  }
-
-  /** Full coreness decomposition (every node's core NUMBER, not one
-    * fixed-k membership) via the distributed h-index fixpoint
-    * (Montresor, De Pellegrini & Miorandi, "Distributed k-core
-    * decomposition", 2011; Lü et al. 2016 for the h-operator
-    * convergence proof): start every node at its degree, then each
-    * round replace c(v) with the H-INDEX of its neighbors' current
-    * values — the largest h such that ≥ h neighbors hold c ≥ h.
-    * Estimates only ever DECREASE and the fixpoint is exactly the
-    * coreness, so `{v : c(v) ≥ k}` at convergence equals [[kCore]]'s
-    * k-core for every k simultaneously (the cross-operator law the
-    * spec pins). Fixed `iters`, the [[kCore]]/q181 convention — the
-    * oracle unrolls the identical rounds, so engine and oracle agree
-    * at ANY round count and convergence is asserted separately.
-    *
-    * Each round references the carried frame ONCE (the kCore lesson):
-    * one dst-side join, then the h-index as the [[graft.functions
-    * .HIndex]] counting kernel over the per-node neighbor-value
-    * multiset (r22 — the rank-window spelling `max(least(rank, c))`
-    * it replaces is equivalent by the classic h-index identity,
-    * spec-pinned, and paid a per-round in-partition Sort the counting
-    * form does not need). The aggregation groups by node —
-    * per-group state is the node's degree, bounded wherever the edge
-    * build caps fan-out (q101's per-doc cap; the co-engagement
-    * `maxUsersPerKey`); an uncapped hub makes exactly the one-reducer
-    * group those caps exist for.
-    *
-    * FRONTIER RECOMPUTE: TESTED AND REFUTED (r19, the q127
-    * convention of recording the measured road not taken). The
-    * [[kTruss]] incremental lever looks like it should transfer —
-    * v's h-index is a pure function of its neighbors' values, so
-    * only nodes with a CHANGED neighbor need recomputing — and an
-    * exact frontier variant (recompute `{v : ∃ neighbor in
-    * changed}`, carry the rest, per-round localCheckpoint to cut the
-    * three-way carried-frame reference) passed the randomized
-    * equivalence spec. But on the deployed co-engagement graph the
-    * frontier never shrinks: measured at sf0.01, `changed` falls
-    * 134 → 120 → … → 1 while the frontier holds 150/150 of the nodes
-    * through round 9 — the graph is DENSE (that is the point of a
-    * floor-22 projection), so one changed node frontiers almost
-    * everyone, the window volume never drops, and the variant's 24
-    * per-round materializations turned a 9.1 s q201 into 14.0 s at
-    * sf0.1 (driver-shape bench). Edge-axis incrementality (kTruss)
-    * pays because REMOVALS localize; node-value ripples on a dense
-    * graph do not. The lazy single-plan synchronous form below is
-    * the measured winner. */
-  def coreness(edges: DataFrame, iters: Int): DataFrame = {
-    require(iters >= 1, s"iters must be positive, got $iters")
-    // r22: the h-operator is the counting kernel [[graft.functions
-    // .HIndex]] over the per-node neighbor-value multiset, replacing
-    // the rank-window spelling `max(least(row_number over (src, cv
-    // desc), cv))` — the window form paid an in-partition Sort of the
-    // full edge-join frame EVERY round (12 Sort nodes in q201's
-    // before-plan) purely to rank values the h-index only needs
-    // counted; the kernel is order-insensitive, so the round is one
-    // broadcast-able join + one hash aggregate over the cache's
-    // src-partitioning, no sort anywhere (guide §2.4). Equivalence is
-    // the classic h-index identity, spec-pinned against the window
-    // spelling on randomized graphs (Round22Spec). collect_list's
-    // per-group state is the node's degree — the same bound the
-    // window's per-partition volume carried (see above).
-    graft.functions.HIndex.register(edges.sparkSession)
-    var c = edges.groupBy(col("src").as("v")).agg(count(lit(1)).as("c"))
-    for (_ <- 1 to iters) {
-      c = edges
-        .join(c.select(col("v").as("dst"), col("c").as("cv")), "dst")
-        .groupBy(col("src").as("v"))
-        .agg(expr("h_index(collect_list(cv))").as("c"))
-    }
-    c
-  }
-
-  /** k-truss peel — the EDGE-density axis of the graph family
-    * (Cohen, "Trusses: cohesive subgraphs for social network
-    * analysis", 2008): each round simultaneously drops every edge in
-    * fewer than k−2 triangles among the CURRENT survivors, for a
-    * fixed `iters` rounds (the kCore/q181 convention — the oracle
-    * unrolls identical rounds, equality holds at any count,
-    * convergence pinned separately). Where k-core certifies node
-    * degrees, k-truss certifies that connections are EMBEDDED in
-    * triangles — the standard community-backbone refinement
-    * (a hub wired to k strangers survives the k-core and dies here).
-    *
-    * Per-edge support is |N(a) ∩ N(b)| computed as ONE in-row
-    * `array_intersect` of the two endpoints' sorted adjacency arrays
-    * — deliberately NOT the q118 wedge self-join: per round this
-    * joins |E| rows against the |V|-row adjacency frame and does
-    * bounded in-row work (arrays bounded by max degree, which the
-    * edge-build caps bound), where the wedge join materializes a row
-    * PER TRIANGLE PER EDGE — Σ-triangle volume that explodes on the
-    * dense graphs truss analysis targets. A truss round inherently
-    * references the carried edge frame THREE ways (two adjacency
-    * sides + the edge list), so the kCore single-reference trick
-    * cannot apply; the plan-doubling trap is cut at the LINEAGE layer
-    * instead: each round ends in an eager `localCheckpoint`, so the
-    * next round plans against a materialized leaf (the documented
-    * iterative-algorithm discipline; production swaps in reliable
-    * checkpointing when executor loss matters). Output: surviving
-    * (a, b, support) with support as evaluated in the final round. */
-  def kTruss(edges: DataFrame, k: Int, iters: Int): DataFrame = {
-    require(k >= 3, s"k must be at least 3, got $k")
-    require(iters >= 1, s"iters must be positive, got $iters")
-    graft.functions.SortedIntersectCount.register(edges.sparkSession)
-    // INCREMENTAL recompute (exact): an edge's support |N(a) ∩ N(b)|
-    // can only change between rounds if a or b LOST an edge — i.e. is
-    // an endpoint of a removed edge — because an untouched endpoint's
-    // neighborhood is identical in the new survivor set. So round 1
-    // computes every support; later rounds recompute only edges
-    // incident to the previous round's removal endpoints and carry
-    // every other edge's support forward (the carried value equals
-    // the fresh value by the neighborhood-identity argument, so the
-    // output — supports included — is bit-identical to the full
-    // synchronous recompute the oracle replays; the randomized spec
-    // pins it against an independent reference peel). Rounds after
-    // convergence touch nothing and cost only empty joins.
-    var und = edges.filter(col("src") < col("dst"))
-      .select(col("src").as("a"), col("dst").as("b"), lit(0L).as("support"))
-      .localCheckpoint(true)
-    var removedV: DataFrame = null // (rv) — last round's removal endpoints
-    var i = 1
-    var converged = false
-    while (i <= iters && !converged) {
-      // r21: touched/untouched via TWO broadcastable left joins that
-      // flag each edge's endpoints against removedV, instead of four
-      // semi/anti joins — same partition of und (removedV is distinct,
-      // so the left joins are row-preserving), half the join legs per
-      // round (guide §2.4). removedV is a checkpointed leaf, so the
-      // two references to `flagged` (touched below, untouched at the
-      // union) re-run only broadcast-join work over leaves.
-      val flagged =
-        if (i == 1) null
-        else und
-          .join(removedV.select(col("rv").as("a"), lit(true).as("_fa")),
-            Seq("a"), "left")
-          .join(removedV.select(col("rv").as("b"), lit(true).as("_fb")),
-            Seq("b"), "left")
-          .withColumn("_tt",
-            coalesce(col("_fa"), lit(false)) || coalesce(col("_fb"), lit(false)))
-      val touched =
-        if (i == 1) und
-        else flagged.filter(col("_tt")).select("a", "b")
-      val untouched =
-        if (i == 1) und.limit(0)
-        else flagged.filter(!col("_tt")).select("a", "b", "support")
-      val sym = und.select(col("a").as("v"), col("b").as("w"))
-        .unionAll(und.select(col("b").as("v"), col("a").as("w")))
-      // r19: only TOUCHED edges read adjacency arrays, so build them
-      // only for touched endpoints — the removal endpoints plus their
-      // surviving partners (a superset of every touched edge's ends,
-      // derived from removedV so the touched subplan isn't re-run).
-      // EXACT: rec's inner joins find every array they ask for; the
-      // arrays themselves are still built from the FULL survivor set.
-      // This was the last full-|E| leg in the post-convergence margin
-      // rounds: the collect_list shuffle now carries only the
-      // frontier's rows, so an empty removal round costs empty work
-      // in the adj build too, not just the support legs.
-      val needed =
-        if (i == 1) null
-        else sym.join(removedV, col("v") === col("rv"), "left_semi")
-          .select(col("w").as("v"))
-          .unionAll(removedV.select(col("rv").as("v")))
-          .distinct()
-      val symNeeded = if (i == 1) sym else sym.join(needed, Seq("v"), "left_semi")
-      val adj = symNeeded.groupBy("v")
-        .agg(sort_array(collect_list(col("w"))).as("nb"))
-      // r21: checkpoint the recomputed supports ONCE and derive kept/
-      // dropped from the leaf — previously `und` (via kept) and
-      // `removedV` (via dropped) each re-ran the whole rec subplan
-      // (adjacency build + two array joins), doubling every round's
-      // expensive leg (measured: 19 jobs and ~4.5 s per round at
-      // sf0.1; the rec-leaf form halves the compute and most of the
-      // jobs). Exact: same rows, computed once.
-      // r21: adjacency arrays are sort_array output, so on BIGINT node
-      // ids the support |N(a) ∩ N(b)| is one allocation-free merge per
-      // edge (`sorted_intersect_count` — same count as
-      // size(array_intersect) on sorted distinct-neighbor arrays); the
-      // kernel is long-typed, so other id types (spec graphs use
-      // strings) keep the builtin.
-      val supportExpr =
-        if (edges.schema("src").dataType ==
-            org.apache.spark.sql.types.LongType)
-          expr("sorted_intersect_count(na, nbb)")
-        else size(array_intersect(col("na"), col("nbb"))).cast("long")
-      val rec = touched
-        .join(adj.select(col("v").as("a"), col("nb").as("na")), "a")
-        .join(adj.select(col("v").as("b"), col("nb").as("nbb")), "b")
-        .withColumn("support", supportExpr)
-        .select("a", "b", "support")
-        .localCheckpoint(true)
-      val kept = rec.filter(col("support") >= k - 2)
-      val dropped = rec.filter(col("support") < k - 2)
-      und = untouched.select("a", "b", "support").unionAll(kept)
-        .localCheckpoint(true)
-      removedV = dropped.select(col("a").as("rv"))
-        .unionAll(dropped.select(col("b").as("rv")))
-        .distinct().localCheckpoint(true)
-      // r19 EARLY EXIT — exact under the fixed-iters contract: a
-      // round with no removals leaves und (supports included)
-      // bit-identical, so every later round is the identity and the
-      // output equals the full `iters` unroll the oracle replays at
-      // ANY remaining count. The emptiness probe is a limit-1 action
-      // on the just-checkpointed removal frame (~free), and it
-      // deletes the margin rounds' whole cost — at sf0.1 the truss
-      // converges in round 3 of 7, so 4 of 7 rounds vanish. Only
-      // kTruss gets this: it already materializes per round; kCore/
-      // coreness are single lazy plans where a per-round action
-      // would force exactly the materialization the coreness
-      // frontier refutation priced.
-      converged = removedV.isEmpty
-      i += 1
-    }
-    und
-  }
-
-  def lpaCommunities(edges: DataFrame, iters: Int): DataFrame = {
-    require(iters >= 1, s"iters must be positive, got $iters")
-    var labels = edges.select(col("src").as("v")).distinct()
-      .withColumn("lbl", col("v"))
-    for (_ <- 1 to iters) {
-      labels = edges
-        .join(labels.select(col("v").as("dst"), col("lbl")), "dst")
-        .groupBy(col("src"), col("lbl"))
-        .agg(count(lit(1)).as("c"))
-        .groupBy(col("src").as("v"))
-        .agg(min_by(col("lbl"),
-          struct((-col("c")).as("nc"), col("lbl"))).as("lbl"))
-    }
-    labels
-  }
 
   /** Community sizes after [[LpaIters]] rounds over the q101 capped
     * co-occurrence graph: (community = the surviving label, n_terms).
@@ -1038,14 +664,10 @@ object TextQueries {
     * community (any community algorithm agrees there); the
     * structure-recovery behavior is pinned by the hand-derived
     * bridged-cliques spec. */
-  def q181LpaCommunities(spark: SparkSession, dir: String): DataFrame = {
-    val e = Memo.of(spark, s"pr_edges:$dir:cap=$PageRankMaxTermsPerDoc") {
-      coOccurrenceEdges(Tables.documents(spark, dir), PageRankMaxTermsPerDoc)
-    }
-    lpaCommunities(e, LpaIters)
+  def q181LpaCommunities(spark: SparkSession, dir: String): DataFrame =
+    Graph.lpaCommunities(coOccurrenceGraph(spark, dir), LpaIters)
       .groupBy(col("lbl").as("community"))
       .agg(count(lit(1)).as("n_terms"))
-  }
 
   /** Inverted index with bounded posting heads: term → (df, first 40
     * doc ids) for df ≥ 3 — the hot-key cap lives on posting LENGTH via
@@ -1237,46 +859,10 @@ object TextQueries {
       k = 3, minPermille = 800L, minShingles = 10L,
       maxShingleDocFreq = Some(3))
 
-  def q101PageRank(spark: SparkSession, dir: String): DataFrame = {
-    val SCALE = 1000000000000L
-    // the edge build (per-doc term self-join + distinct) is the
-    // expensive leg and has FOUR consumers in one plan (deg + three
-    // iteration joins); Catalyst has no cross-subplan CSE, so without
-    // a persist each consumer re-runs the self-join — memoized like
-    // the other multi-consumer legs (cleared per bench pass)
-    val e = Memo.of(spark, s"pr_edges:$dir:cap=$PageRankMaxTermsPerDoc") {
-      coOccurrenceEdges(Tables.documents(spark, dir), PageRankMaxTermsPerDoc)
-    }
-    // r22b: each iteration used to reference the carried rank frame
-    // TWICE (once feeding contribs, once as the join's left side), so
-    // with no cross-subplan CSE the plan DOUBLED per step — 2³ copies
-    // of the deg/contrib subtree, 143 Exchange nodes in the initial
-    // plan (AQE reuses the identical exchanges at runtime but re-runs
-    // every post-shuffle operator per copy, the q109 lesson at the
-    // join level). The static (term, deg, n) base is now an eagerly
-    // checkpointed LEAF (|terms| rows, one tiny job) and the update
-    // joins contribs back to it, so the carried frame is referenced
-    // ONCE per step: 42 Exchanges, measured 4.8 -> 2.0 s on the
-    // iteration leg at sf0.1, exceptAll-diff 0 (identical integer
-    // arithmetic, and the oracle replays the unrolled rounds).
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val nn = deg.agg(count(lit(1)).as("n"))
-    val base = deg.crossJoin(broadcast(nn))
-      .select(col("src").as("term"), col("deg"), col("n"))
-      .localCheckpoint(true)
-    var r = base.select(col("term"), col("deg"), col("n"),
-      expr(s"${SCALE}L div n").as("rank"))
-    for (_ <- 1 to 3) {
-      val contribs = e.join(r.select(col("term").as("src"),
-          expr("rank div deg").as("contrib")), "src")
-        .groupBy(col("dst")).agg(sum(col("contrib")).as("s"))
-      r = base.join(contribs, base("term") === contribs("dst"), "left")
-        .select(col("term"), col("deg"), col("n"),
-          expr(s"(15 * (${SCALE}L div n)) div 100 + (85 * coalesce(s, 0L)) div 100")
-            .as("rank"))
-    }
-    r.select(col("term"), col("deg"), col("rank"))
-  }
+  /** Fixed-point PageRank ([[Graph.pageRank]]) over the capped term
+    * co-occurrence graph: (term, deg, rank). */
+  def q101PageRank(spark: SparkSession, dir: String): DataFrame =
+    Graph.pageRank(coOccurrenceGraph(spark, dir))
 
   /** [[q111EditDistancePairs]]' blocking dials: pairs form only inside
     * a 24-char-prefix block of ≤ 64 docs, and distance runs on 200-char

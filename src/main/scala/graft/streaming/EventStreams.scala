@@ -202,16 +202,6 @@ object EventStreams extends Serializable {
                         watermark: String = "2 hours"): DataFrame =
     tumblingAgg(readEventStream(spark, dir).withWatermark("ts", watermark), width)
 
-  /** Streaming exact dedup: one event per event_id within the
-    * watermark horizon — state stays bounded (ids older than the
-    * watermark are evicted), which is what makes streaming dedup
-    * viable on an unbounded source. */
-  def streamingDedup(spark: SparkSession, dir: String,
-                     watermark: String = "2 hours"): DataFrame =
-    readEventStream(spark, dir)
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("event_id")
-
   /** Stream–static enrichment join: the static side is re-read per
     * micro-batch and broadcast; no stream state involved. */
   def streamStaticJoin(stream: DataFrame, dim: DataFrame,

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.Graph
 import graft.ops.{EventQueries, Relational, TextQueries}
 
 /** Contracts for the round-7 widening queries (q110–q114): the
@@ -335,11 +336,11 @@ class AnalyticsWideningSpec extends AnyFunSuite {
       (und ++ und.map(_.swap)).toDF("src", "dst")
     }
     // triangle abc plus pendant edge c-d: one triangle
-    val g1 = TextQueries.triangleCensus(
+    val g1 = Graph.triangleCensus(
       sym(("a", "b"), ("a", "c"), ("b", "c"), ("c", "d"))).collect()(0)
     assert((g1.getLong(0), g1.getLong(1), g1.getLong(2)) == ((4L, 4L, 1L)))
     // K4: C(4,3) = 4 triangles
-    val k4 = TextQueries.triangleCensus(
+    val k4 = Graph.triangleCensus(
       sym(("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"),
         ("c", "d"))).collect()(0)
     assert((k4.getLong(0), k4.getLong(1), k4.getLong(2)) == ((4L, 6L, 4L)))
@@ -347,7 +348,7 @@ class AnalyticsWideningSpec extends AnyFunSuite {
     // triangles — and orientation kills even the wedges (the hub is
     // the highest-degree node, so every edge points AT it and no node
     // has out-degree 2)
-    val star = TextQueries.triangleCensus(
+    val star = Graph.triangleCensus(
       sym(("h", "a"), ("h", "b"), ("h", "c"), ("h", "d"), ("h", "e")))
       .collect()(0)
     assert((star.getLong(0), star.getLong(1), star.getLong(2)) == ((6L, 5L, 0L)))

@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Dedup, TextAnalysis}
+import org.apache.spark.sql.SparkInternals
+
+import graft.operators.{Dedup, Graph, TextAnalysis}
 
 class DedupTextSpec extends AnyFunSuite {
   import SparkTestSession.{spark, sf}
@@ -276,27 +278,50 @@ class DedupTextSpec extends AnyFunSuite {
     import spark.implicits._
     // chain 1-2-3-4 plus isolated pair 10-11: two components
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("d1", "d2")
-    val comp = Dedup.connectedComponents(pairs)
+    val comp = Graph.connectedComponents(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comp == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
-  test("connected components fail loudly when rounds run out, converge when they suffice") {
+  test("connected components hand a chain to star, which fails loudly") {
     import spark.implicits._
     def labels(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val allZero = (0L to 59L).map(_ -> 0L).toMap
-    // a 60-node chain: diameter 59, far past the default 20 min-label
-    // rounds, so the labels come from the star-contraction handover
+    // a 60-node chain: diameter 59, min-label round 1 changes 58 of its
+    // 60 labels, so the labels come from the star-contraction handover
     val chain = (0L until 59L).map(i => (i + 1, i)).toDF("d1", "d2")
-    assert(labels(Dedup.connectedComponents(chain)) == allZero)
+    assert(labels(Graph.connectedComponents(chain)) == allZero)
     // star contraction itself still refuses a non-fixpoint labelling
     val e = intercept[IllegalStateException] {
-      Dedup.connectedComponentsStars(chain, maxIter = 1).collect()
+      Graph.connectedComponentsStars(chain, maxIter = 1).collect()
     }
     assert(e.getMessage.contains("no fixpoint after 1 rounds"))
-    // enough min-label rounds converge without the handover
-    assert(labels(Dedup.connectedComponents(chain, maxIter = 100)) == allZero)
+  }
+
+  test("connected components: job budget of the star handover") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    def jobs(tag: String)(body: => Unit): Int =
+      SparkInternals.jobsStarted(sc, s"dedup-spec-cc-$tag")(body)
+    // the chain stalls in round 1, so it pays star's jobs plus at most
+    // a few min-label rounds — not all 20 capped rounds
+    val chain = (0L until 59L).map(i => (i + 1, i)).toDF("d1", "d2")
+    val sym = chain.select($"d1".as("a"), $"d2".as("b"))
+      .union(chain.select($"d2".as("a"), $"d1".as("b"))).distinct()
+    val perRound = jobs("round")(Graph.minLabelRounds(sym).next())
+    val starChain = jobs("star-chain")(Graph.connectedComponentsStars(chain).collect())
+    val ccChain = jobs("cc-chain")(Graph.connectedComponents(chain).collect())
+    assert(perRound > 0 && ccChain <= starChain + 3 * perRound,
+      s"chain: cc $ccChain jobs, star $starChain, $perRound per min-label round")
+    // fixture near-dup clusters are shallow, so min-label reaches its
+    // fixpoint and starts no star round: a handover would pay every
+    // star job on top of the min-label rounds already run
+    val pairs = Dedup.ngramJaccardPairs(docs, k = 3, threshold = 0.6)
+      .select("d1", "d2").localCheckpoint()
+    val starPairs = jobs("star-pairs")(Graph.connectedComponentsStars(pairs).collect())
+    val ccPairs = jobs("cc-pairs")(Graph.connectedComponents(pairs).collect())
+    assert(ccPairs < starPairs, s"fixture pairs: cc $ccPairs jobs, star $starPairs")
   }
 
   test("star-contraction CC equals min-label CC (fixture, chain, random)") {
@@ -306,12 +331,12 @@ class DedupTextSpec extends AnyFunSuite {
     // fixture near-dup pairs (shallow clusters — the common case)
     val pairs = Dedup.ngramJaccardPairs(docs, k = 3, threshold = 0.6)
       .select("d1", "d2").cache()
-    assert(labels(Dedup.connectedComponentsStars(pairs)) ==
-      labels(Dedup.connectedComponents(pairs)))
+    assert(labels(Graph.connectedComponentsStars(pairs)) ==
+      labels(Graph.connectedComponents(pairs)))
     // a 60-node chain: diameter 59 — min-label needs many rounds, star
     // contraction must agree while converging in O(log^2) rounds
     val chain = (0L until 59L).map(i => (i + 1, i)).toDF("d1", "d2")
-    val chainStars = labels(Dedup.connectedComponentsStars(chain))
+    val chainStars = labels(Graph.connectedComponentsStars(chain))
     assert(chainStars == (0L to 59L).map(i => (i, 0L)).toSet)
     // random multi-component graph
     val rnd = new scala.util.Random(7)
@@ -319,15 +344,17 @@ class DedupTextSpec extends AnyFunSuite {
       .filter { case (a, b) => a != b }
       .map { case (a, b) => (math.max(a, b), math.min(a, b)) }
       .toDF("d1", "d2")
-    assert(labels(Dedup.connectedComponentsStars(edges)) ==
-      labels(Dedup.connectedComponents(edges, maxIter = 100)))
+    val sym = edges.select($"d1".as("a"), $"d2".as("b"))
+      .union(edges.select($"d2".as("a"), $"d1".as("b"))).distinct()
+    val minLabel = Graph.minLabelRounds(sym).dropWhile(_._2 > 0).next()._1
+    assert(labels(Graph.connectedComponentsStars(edges)) == labels(minLabel))
     pairs.unpersist()
   }
 
   test("dedup corpus: one representative survives per near-dup component") {
     import spark.implicits._
     val pairs = Dedup.ngramJaccardPairs(docs, k = 3, threshold = 0.6).select("d1", "d2")
-    val comp = Dedup.connectedComponents(pairs)
+    val comp = Graph.connectedComponents(pairs)
     val survivors = docs.join(comp, Seq("doc_id"), "left")
       .filter($"component_id".isNull || $"component_id" === $"doc_id")
     val expected = docs.count() -
@@ -349,7 +376,7 @@ class DedupTextSpec extends AnyFunSuite {
     val pairs = Dedup.minHashPairs(withDupes.join(
         Dedup.exactDedup(withDupes).select("doc_id"), Seq("doc_id"), "left_semi"))
       .select("d1", "d2")
-    val comp = Dedup.connectedComponents(pairs)
+    val comp = Graph.connectedComponents(pairs)
     val expected = withDupes.count() - 1 /* exact dup */ -
       comp.filter($"doc_id" =!= $"component_id").count()
     assert(out.count() == expected)

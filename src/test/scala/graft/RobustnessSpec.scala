@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Dedup, Similarity, SimilarityInt, TextAnalysis}
+import graft.operators.{Dedup, Graph, Similarity, SimilarityInt, TextAnalysis}
 import graft.ops.tb.{TbPipeline, TbSynth}
 
 /** Edge-case robustness: operators must degrade to empty results, not
@@ -76,7 +76,7 @@ class RobustnessSpec extends AnyFunSuite {
 
   test("connected components of an empty pair list is empty") {
     val noPairs = Seq.empty[(Long, Long)].toDF("d1", "d2")
-    assert(Dedup.connectedComponents(noPairs).count() == 0)
+    assert(Graph.connectedComponents(noPairs).count() == 0)
   }
 
   test("docs shorter than the shingle size are dropped, not crashed on") {
@@ -112,7 +112,7 @@ class RobustnessSpec extends AnyFunSuite {
     assert(TextAnalysis.withRedaction(empty).count() == 0)
     assert(TextAnalysis.mixBySourceQuota(docs, Map.empty).count() == 0,
       "no weights -> nothing kept")
-    assert(operators.Dedup.connectedComponentsStars(
+    assert(operators.Graph.connectedComponentsStars(
       docs.filter(lit(false)).select($"doc_id".as("d1"), $"doc_id".as("d2")))
       .count() == 0, "star CC on an empty edge set")
   }

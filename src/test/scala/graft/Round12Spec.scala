@@ -427,7 +427,7 @@ class Round12Spec extends AnyFunSuite {
     val und = Seq(("a","b"), ("a","c"), ("b","c"),
       ("x","y"), ("x","z"), ("y","z"), ("c","x"))
     val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
-    val got = graft.ops.TextQueries.lpaCommunities(edges, 4)
+    val got = graft.operators.Graph.lpaCommunities(edges, 4)
       .as[(String, String)].collect().sortBy(_._1).toSeq
     assert(got == Seq(("a","a"), ("b","a"), ("c","a"),
       ("x","c"), ("y","c"), ("z","c")))

@@ -272,13 +272,13 @@ class Round18Spec extends AnyFunSuite {
     }
   }
 
-  /** The r18 prefix-filtered projection ([[graft.ops.EventQueries
-    * .coEngagementEdges]]) against the naive self-join + pair-count
+  /** The r18 prefix-filtered projection ([[graft.operators.Graph
+    * .coEngagementEdgesShared]]) against the naive self-join + pair-count
     * form it replaced, on a hash-derived incidence frame — the
     * constant-overlap prefix lemma's losslessness pinned by exact
     * set equality (both directions, floor applied). */
   test("coEngagementEdges prefix form == naive projection join") {
-    import graft.ops.EventQueries
+    import graft.operators.Graph
     import org.apache.spark.sql.functions._
     val ev = spark.range(40).select(col("id").as("user_id"),
         explode(expr(
@@ -286,7 +286,8 @@ class Round18Spec extends AnyFunSuite {
           .as("kv"))
       .select(col("user_id"),
         concat(lit("{\"k\": "), col("kv"), lit("}")).as("props"))
-    val got = EventQueries.coEngagementEdges(ev, minShared = 5L)
+    val got = Graph.coEngagementEdgesShared(ev, minShared = 5L)
+      .select("src", "dst")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val uk = ev.select(col("user_id"),
       expr("cast(get_json_object(props, '$.k') as bigint)").as("k")).distinct()
@@ -299,22 +300,22 @@ class Round18Spec extends AnyFunSuite {
     assert(got === naive && got.nonEmpty)
   }
 
-  /** [[graft.ops.EventQueries.coEngagementEdges]] hot-key cap: a key
+  /** [[graft.operators.Graph.coEngagementEdgesShared]] hot-key cap: a key
     * every user engages is boilerplate affinity carrying |U|²/2 pair
     * rows and no signal — under `maxUsersPerKey` it must vanish from
     * the projection (the dedup family's maxShingleDocFreq twin),
     * while keys under the cap still project. Uncapped, the planted
     * hot key alone forces the complete graph. */
   test("coEngagementEdges: maxUsersPerKey drops boilerplate keys from the projection") {
-    import graft.ops.EventQueries
+    import graft.operators.Graph
     // 12 users all share key 999 (hot); users 0-3 also share key 1
     val rows = (0 until 12).map(u => (u.toLong, """{"k": 999}""")) ++
       (0 until 4).map(u => (u.toLong, """{"k": 1}"""))
     val ev = rows.toDF("user_id", "props")
-    val uncapped = EventQueries.coEngagementEdges(ev, minShared = 1L)
+    val uncapped = Graph.coEngagementEdgesShared(ev, minShared = 1L)
       .select("src", "dst").collect().length
     assert(uncapped === 12 * 11) // complete graph, both directions
-    val capped = EventQueries.coEngagementEdges(ev, minShared = 1L,
+    val capped = Graph.coEngagementEdgesShared(ev, minShared = 1L,
         maxUsersPerKey = Some(8))
       .select("src", "dst").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -324,7 +325,7 @@ class Round18Spec extends AnyFunSuite {
     assert(capped === want, "only the under-cap key-1 clique survives")
   }
 
-  /** [[graft.ops.TextQueries.kCore]] — synchronous peel semantics on
+  /** [[graft.operators.Graph.kCore]] — synchronous peel semantics on
     * hand-derivable graphs. Path v1–…–v6 at k=2: the peel must
     * CASCADE (round 1 drops both endpoints, round 2 the next layer,
     * round 3 empties it) and the fixed-iters contract means iters=2
@@ -336,54 +337,54 @@ class Round18Spec extends AnyFunSuite {
     * member at deg 4 — and the pendant-bearing clique node's deg must
     * read 4, not 5 (its chain edge is outside the core). */
   test("kCore: synchronous cascade on a path; true core on clique+pendant chain") {
-    import graft.ops.TextQueries
+    import graft.operators.Graph
     import org.apache.spark.sql.functions.col
     def sym(pairs: Seq[(String, String)]) =
       (pairs ++ pairs.map(p => (p._2, p._1))).toDF("src", "dst")
     val path = sym((1 to 5).map(i => (s"v$i", s"v${i + 1}")))
     def cores(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(cores(TextQueries.kCore(path, k = 2, iters = 2)) ===
+    assert(cores(Graph.kCore(path, k = 2, iters = 2)) ===
       Map("v3" -> 2L, "v4" -> 2L))
-    assert(TextQueries.kCore(path, k = 2, iters = 3).count() === 0)
+    assert(Graph.kCore(path, k = 2, iters = 3).count() === 0)
     val clique = for {
       a <- 1 to 5; b <- 1 to 5 if a < b
     } yield (s"c$a", s"c$b")
     val g = sym(clique ++ Seq(("c1", "p1"), ("p1", "p2"), ("p2", "p3")))
-    val core = cores(TextQueries.kCore(g, k = 4, iters = 8))
+    val core = cores(Graph.kCore(g, k = 4, iters = 8))
     assert(core === (1 to 5).map(i => s"c$i" -> 4L).toMap)
   }
 
-  /** [[graft.ops.TextQueries.coreness]] — the h-index fixpoint on the
+  /** [[graft.operators.Graph.coreness]] — the h-index fixpoint on the
     * hand-derivable clique+pendant-chain graph (clique members sit in
     * the 4-core, every chain node peels at k=2 so coreness 1 — note
     * p1's DEGREE is 2 but its coreness is 1, the distinction a degree
     * filter cannot make), the fixpoint margin (one more round changes
     * nothing), and the cross-operator LAW: `{v : coreness ≥ k}` must
-    * equal [[TextQueries.kCore]]'s k-core at every k. */
+    * equal [[Graph.kCore]]'s k-core at every k. */
   test("coreness: h-index fixpoint on crafted graphs; law vs kCore") {
-    import graft.ops.TextQueries
+    import graft.operators.Graph
     def sym(pairs: Seq[(String, String)]) =
       (pairs ++ pairs.map(p => (p._2, p._1))).toDF("src", "dst")
     val clique = for { a <- 1 to 5; b <- 1 to 5 if a < b } yield (s"c$a", s"c$b")
     val g = sym(clique ++ Seq(("c1", "p1"), ("p1", "p2"), ("p2", "p3")))
-    val cor = TextQueries.coreness(g, iters = 8).collect()
+    val cor = Graph.coreness(g, iters = 8).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val want = (1 to 5).map(i => s"c$i" -> 4L).toMap ++
       Map("p1" -> 1L, "p2" -> 1L, "p3" -> 1L)
     assert(cor === want)
-    val cor9 = TextQueries.coreness(g, iters = 9).collect()
+    val cor9 = Graph.coreness(g, iters = 9).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(cor9 === cor, "fixpoint margin: round 9 must equal round 8")
     for (k <- Seq(2, 4)) {
       val fromCoreness = cor.filter(_._2 >= k).keySet
-      val fromKCore = TextQueries.kCore(g, k = k, iters = 8)
+      val fromKCore = Graph.kCore(g, k = k, iters = 8)
         .collect().map(_.getString(0)).toSet
       assert(fromCoreness === fromKCore, s"coreness/kCore law violated at k=$k")
     }
   }
 
-  /** [[graft.ops.TextQueries.kTruss]] — truss semantics on
+  /** [[graft.operators.Graph.kTruss]] — truss semantics on
     * hand-derivable graphs. K5 + a pendant triangle {c1, c2, x}: at
     * k=4 the pendant's two x-edges have support 1 and peel round 1,
     * while every K5 edge sits in 3 triangles and survives as the true
@@ -394,21 +395,21 @@ class Round18Spec extends AnyFunSuite {
     * 2 finds its support collapsed to 0 and empties the graph —
     * pinning the synchronous re-evaluation the oracle unrolls. */
   test("kTruss: pendant-triangle peel on K5; synchronous cascade to empty") {
-    import graft.ops.TextQueries
+    import graft.operators.Graph
     def sym(pairs: Seq[(String, String)]) =
       (pairs ++ pairs.map(p => (p._2, p._1))).toDF("src", "dst")
     val clique = for { a <- 1 to 5; b <- 1 to 5 if a < b } yield (s"c$a", s"c$b")
     val g = sym(clique ++ Seq(("c1", "x"), ("c2", "x")))
-    val truss = TextQueries.kTruss(g, k = 4, iters = 5).collect()
+    val truss = Graph.kTruss(g, k = 4, iters = 5).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     val want = clique.map(e => e -> 3L).toMap
     assert(truss === want)
     val twoTri = sym(Seq(("a", "b"), ("a", "c"), ("b", "c"),
       ("b", "d"), ("c", "d")))
-    val r1 = TextQueries.kTruss(twoTri, k = 4, iters = 1).collect()
+    val r1 = Graph.kTruss(twoTri, k = 4, iters = 1).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(r1 === Map(("b", "c") -> 2L))
-    assert(TextQueries.kTruss(twoTri, k = 4, iters = 2).count() === 0)
+    assert(Graph.kTruss(twoTri, k = 4, iters = 2).count() === 0)
   }
 
   /** The r18 INCREMENTAL truss rounds (recompute only edges incident
@@ -418,7 +419,7 @@ class Round18Spec extends AnyFunSuite {
     * included, since the carried-value-equals-fresh-value claim is
     * exactly what could silently break. */
   test("kTruss incremental rounds == synchronous reference peel on random graphs") {
-    import graft.ops.TextQueries
+    import graft.operators.Graph
     val pairs = for {
       a <- 0 until 60; b <- (a + 1) until 60
       if (a * 1315423911L + b * 2654435761L) % 97 < 22
@@ -438,7 +439,7 @@ class Round18Spec extends AnyFunSuite {
     }
     val df = (pairs ++ pairs.map(p => (p._2, p._1))).toDF("src", "dst")
     for (k <- Seq(4, 6); it <- Seq(1, 2, 4)) {
-      val got = TextQueries.kTruss(df, k = k, iters = it).collect()
+      val got = Graph.kTruss(df, k = k, iters = it).collect()
         .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
       assert(got === reference(k, it), s"divergence at k=$k iters=$it")
     }

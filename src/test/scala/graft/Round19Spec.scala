@@ -481,7 +481,7 @@ class Round19Spec extends AnyFunSuite {
 
   // -------------------------------------- graph incremental levers
 
-  /** [[graft.ops.TextQueries.coreness]] against an independent
+  /** [[graft.operators.Graph.coreness]] against an independent
     * full-recompute h-index reference, on hash-derived random graphs
     * at EVERY intermediate round count — the randomized pin the
     * kTruss spec set as convention, written while A/B-ing the r19
@@ -489,7 +489,7 @@ class Round19Spec extends AnyFunSuite {
     * deployed graph and refuted — see coreness's scaladoc; this spec
     * stays as the random-graph correctness gate either way). */
   test("coreness rounds == synchronous reference on random graphs") {
-    import graft.ops.TextQueries
+    import graft.operators.Graph
     val pairs = for {
       a <- 0 until 50; b <- (a + 1) until 50
       if (a * 2654435761L + b * 1315423911L) % 89 < 18
@@ -513,7 +513,7 @@ class Round19Spec extends AnyFunSuite {
     }
     val df = (pairs ++ pairs.map(p => (p._2, p._1))).toDF("src", "dst")
     for (it <- Seq(1, 2, 3, 6)) {
-      val got = TextQueries.coreness(df, iters = it).collect()
+      val got = Graph.coreness(df, iters = it).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got === reference(it), s"divergence at iters=$it")
     }
@@ -525,7 +525,7 @@ class Round19Spec extends AnyFunSuite {
     * argument q202 now rides to reuse the q198/q201 memo instead of
     * paying its own projection join. */
   test("coEngagementEdgesShared: floor filter == direct projection") {
-    import graft.ops.EventQueries
+    import graft.operators.Graph
     val ev = spark.range(40).select(col("id").as("user_id"),
         explode(expr(
           "transform(sequence(1, 14), j -> pmod(xxhash64(id * 17 + j * 13), 24))"))
@@ -534,15 +534,17 @@ class Round19Spec extends AnyFunSuite {
         concat(lit("{\"k\": "), col("kv"), lit("}")).as("props"))
     def key(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val direct = key(EventQueries.coEngagementEdges(ev, minShared = 7L))
-    val derived = key(EventQueries.coEngagementEdgesShared(ev, minShared = 4L)
+    val direct = key(Graph.coEngagementEdgesShared(ev, minShared = 7L)
+      .select("src", "dst"))
+    val derived = key(Graph.coEngagementEdgesShared(ev, minShared = 4L)
       .filter(col("n_shared") >= 7L).select("src", "dst"))
     assert(direct === derived)
     assert(direct.nonEmpty, "fixture should project edges above the floor")
     // and the attached count IS the exact intersection: replaying the
     // floor at its own level must reproduce the base frame
-    val base = key(EventQueries.coEngagementEdgesShared(ev, minShared = 4L)
+    val base = key(Graph.coEngagementEdgesShared(ev, minShared = 4L)
       .filter(col("n_shared") >= 4L).select("src", "dst"))
-    assert(base === key(EventQueries.coEngagementEdges(ev, minShared = 4L)))
+    assert(base === key(Graph.coEngagementEdgesShared(ev, minShared = 4L)
+      .select("src", "dst")))
   }
 }

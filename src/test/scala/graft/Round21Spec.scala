@@ -62,7 +62,7 @@ class Round21Spec extends AnyFunSuite {
     } yield (a.toLong, b.toLong)).distinct
     val edges = edges0.toDF("src", "dst")
       .unionAll(edges0.map(_.swap).toDF("src", "dst"))
-    val got = ops.TextQueries.kTruss(edges, k = 4, iters = 8)
+    val got = operators.Graph.kTruss(edges, k = 4, iters = 8)
 
     // reference: recompute EVERY edge's support each round
     var und = edges0.toDF("a", "b")

@@ -59,7 +59,7 @@ class Round22Spec extends AnyFunSuite {
     * projection modulo the shift — pinning both that the packed path
     * is exact and that the bound probe actually disables it. */
   test("coEngagementEdgesShared: packed and fallback paths project identically") {
-    import graft.ops.EventQueries
+    import graft.operators.Graph
     val shift = 1L << 33
     def ev(offset: Long) = spark.range(40)
       .select((col("id") + lit(offset)).as("user_id"),
@@ -73,9 +73,9 @@ class Round22Spec extends AnyFunSuite {
         .map(r => (r.getLong(0) - off, r.getLong(1) - off, r.getLong(2)))
         .toSet
     val packed = key(
-      EventQueries.coEngagementEdgesShared(ev(0), minShared = 4L), 0L)
+      Graph.coEngagementEdgesShared(ev(0), minShared = 4L), 0L)
     val fallback = key(
-      EventQueries.coEngagementEdgesShared(ev(shift), minShared = 4L), shift)
+      Graph.coEngagementEdgesShared(ev(shift), minShared = 4L), shift)
     assert(packed.nonEmpty, "fixture should project edges above the floor")
     assert(packed === fallback)
   }
@@ -88,7 +88,7 @@ class Round22Spec extends AnyFunSuite {
     * the collected (user, key) pairs, independent of the prefix-filter
     * candidate scheme AND of the emit spelling. */
   test("coEngagementEdgesShared: symmetric emit equals brute force, both directions") {
-    import graft.ops.EventQueries
+    import graft.operators.Graph
     val ev = spark.range(40)
       .select(col("id").as("user_id"),
         explode(expr(
@@ -105,7 +105,7 @@ class Round22Spec extends AnyFunSuite {
       u <- keys.keys; v <- keys.keys if u != v
       n = (keys(u) & keys(v)).size.toLong if n >= minShared
     } yield (u, v, n)).toSet
-    val got = EventQueries.coEngagementEdgesShared(ev, minShared = minShared)
+    val got = Graph.coEngagementEdgesShared(ev, minShared = minShared)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(got.length === got.toSet.size, "no duplicate edge rows")
     assert(got.toSet === expected)
@@ -152,7 +152,7 @@ class Round22Spec extends AnyFunSuite {
   /** Ids in [2^31, 2^32) still pack (uv's sign bit set): the unsigned
     * unpack must round-trip them exactly. */
   test("coEngagementEdgesShared: packing round-trips ids with the sign bit set") {
-    import graft.ops.EventQueries
+    import graft.operators.Graph
     val off = (1L << 32) - 50L // ids 2^32-50 .. 2^32-11: still 32-bit
     val ev = spark.range(40)
       .select((col("id") + lit(off)).as("user_id"),
@@ -161,10 +161,10 @@ class Round22Spec extends AnyFunSuite {
           .as("kv"))
       .select(col("user_id"),
         concat(lit("{\"k\": "), col("kv"), lit("}")).as("props"))
-    val got = EventQueries.coEngagementEdgesShared(ev, minShared = 4L)
+    val got = Graph.coEngagementEdgesShared(ev, minShared = 4L)
       .collect().map(r => (r.getLong(0) - off, r.getLong(1) - off, r.getLong(2)))
       .toSet
-    val small = EventQueries.coEngagementEdgesShared(
+    val small = Graph.coEngagementEdgesShared(
         spark.range(40).select(col("id").as("user_id"),
             explode(expr(
               "transform(sequence(1, 14), j -> pmod(xxhash64(id * 17 + j * 13), 24))"))

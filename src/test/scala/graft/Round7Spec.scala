@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Dedup, Sharding, Similarity}
+import graft.operators.{Dedup, Graph, Sharding, Similarity}
 import graft.ops.TextQueries
 
 /** Round-7 contracts: the q101 per-doc term cap bounds edge blowup,
@@ -22,7 +22,7 @@ class Round7Spec extends AnyFunSuite {
     val longDoc = (0 until 500).map(i => f"t$i%03d").mkString(" ")
     val docs = Seq((1L, longDoc), (2L, "alpha beta alpha gamma"))
       .toDF("doc_id", "text")
-    val edges = TextQueries.coOccurrenceEdges(docs, n).collect()
+    val edges = Graph.coOccurrenceEdges(docs, n).collect()
     val fromLong = edges.count(r => r.getString(0).startsWith("t"))
     assert(fromLong == n * (n - 1),
       s"long doc must contribute exactly N*(N-1) = ${n * (n - 1)} edges, got $fromLong")
@@ -41,7 +41,7 @@ class Round7Spec extends AnyFunSuite {
     val words = (0 until n - 1).flatMap(i => Seq.fill(3)(f"k$i%02d")) ++ // tf=3 each
       Seq("aa", "bb", "cc") // tf=1: only 'aa' fits in the last slot
     val docs = Seq((1L, words.mkString(" "))).toDF("doc_id", "text")
-    val terms = TextQueries.coOccurrenceEdges(docs, n)
+    val terms = Graph.coOccurrenceEdges(docs, n)
       .select("src").distinct().as[String].collect().toSet
     assert(terms.contains("aa") && !terms.contains("bb") && !terms.contains("cc"),
       s"tie-break must keep 'aa' only, got ${terms.filterNot(_.startsWith("k"))}")

@@ -447,23 +447,13 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       s"payload must not be read for metadata-only access:\n$plan")
   }
 
-  test("multimodal stubs: deterministic decode/resize/features/frames") {
-    import spark.implicits._
+  test("multimodal stubs: deterministic decode") {
     val assets = Multimodal.assetsFromText(Tables.documents(spark, sf)).cache()
     val d1 = Multimodal.decodeImageStub(assets).select("asset_id", "width", "height")
       .collect().map(_.toSeq).toSet
     val d2 = Multimodal.decodeImageStub(assets).select("asset_id", "width", "height")
       .collect().map(_.toSeq).toSet
     assert(d1 == d2)
-
-    val feats = Multimodal.featureExtractStub(assets, dim = 8)
-    assert(feats.filter(size($"features") =!= 8).count() == 0)
-    // features bounded in [-1, 1)
-    assert(feats.filter(exists($"features", f => abs(f) > 1.0)).count() == 0)
-
-    val frames = Multimodal.frameSampleStub(assets, frameSize = 64, stride = 4)
-    assert(frames.count() >= assets.count()) // >= 1 frame per asset
-    assert(frames.filter($"frame_idx" % 4 =!= 0).count() == 0)
   }
 
   test("byte-budget repartitioning yields sane partition counts") {
