@@ -14,9 +14,25 @@ package graft
   * in the same state the bench sees when each plan is captured.
   * Capture is of the UNEXECUTED plan (AQE initial): the stable,
   * code-determined shape (Exchange count, join strategy, pushed
-  * filters), not the runtime-coalesced one.
+  * filters), not the runtime-coalesced one. Files are written
+  * [[canonical]], so dumps of unchanged code compare byte-equal.
   */
 object PlanDump {
+  /** `plan` with the fields that vary between runs of the same code
+    * masked: `plan_id=N`, `RDD[N]` ids, checkpoint call sites
+    * (`at Foo.scala:N`, which move with the code), and expression ids
+    * `#N`, renumbered in order of first appearance (AQE work and
+    * eager checkpoints allocate them in timing-dependent order). */
+  def canonical(plan: String): String = {
+    val masked = plan
+      .replaceAll("plan_id=\\d+", "plan_id=N")
+      .replaceAll("RDD\\[\\d+\\]", "RDD[N]")
+      .replaceAll("at [\\w$.]+\\.scala:\\d+", "at <call site>")
+    val ids = scala.collection.mutable.HashMap.empty[String, Int]
+    "#\\d+".r.replaceAllIn(masked,
+      m => "#" + ids.getOrElseUpdate(m.matched, ids.size))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -33,8 +49,8 @@ object PlanDump {
       .filter { case (n, _) => want.isEmpty || want.contains(n) }
       .foreach { case (name, fn) =>
         val df = fn(spark, sfDir)
-        val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val txt = canonical(df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
         java.nio.file.Files.write(
           java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"),
           txt.getBytes("UTF-8"))

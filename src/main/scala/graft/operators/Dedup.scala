@@ -730,65 +730,81 @@ object Dedup {
 
   /** The materialized form of the structures [[deltaDedup]] derives
     * from the corpus on every call: the distinct content-hash set
-    * (exact leg), the inverted shingle index, per-doc shingle counts,
-    * and per-shingle document frequencies (near leg + skew cap). A
-    * pipeline that ingests continuously persists these and APPENDS
-    * each batch's novel docs — per-batch cost then scales with the
-    * index read + the delta, never with re-shingling the corpus text
-    * (at 100 TB the difference between an ingest that stays flat and
-    * one that grows linearly with corpus age).
+    * (exact leg), the inverted shingle index, and per-shingle document
+    * frequencies (near leg + skew cap). A pipeline that ingests
+    * continuously persists these and APPENDS each batch's novel docs —
+    * per-batch cost then scales with the index read + the delta, never
+    * with re-shingling the corpus text (at 100 TB the difference
+    * between an ingest that stays flat and one that grows linearly
+    * with corpus age).
+    *
+    * Shingle rows `(c_id, nc, shingle)` are DENORMALIZED with their
+    * doc's shingle count (`nc`) — the same carry-through-the-join
+    * surgery as [[ngramJaccardPairs]]: the count is size(fh), free at
+    * projection time, and rides the batch join so [[deltaDedupIndexed]]
+    * never joins a per-doc counts table (at 100 TB that join
+    * re-shuffles corpus-sized rows every ingest batch; a per-row long
+    * does not).
     *
     * `dfs` (shingle, df) is what makes `maxShingleDocFreq` available
     * on the indexed path: the hot-shingle decision needs CORPUS-WIDE
     * document frequencies, and deriving them per batch would be a
     * corpus-sized groupBy — materialized as index rows, the per-batch
     * cost is a scan of the (distinct-shingle-sized) df table instead. */
-  case class DedupIndex(hashes: DataFrame, shingles: DataFrame,
-                        counts: DataFrame, dfs: DataFrame)
+  case class DedupIndex(hashes: DataFrame, shingles: DataFrame, dfs: DataFrame)
 
-  /** Index rows for `docs` — what an ingest appends per batch. An
-    * ingest accumulating per-batch index partitions sums the partial
-    * `dfs` rows across batches (df is additive over disjoint doc
-    * sets); `hashes` similarly needs a distinct over the union.
-    *
-    * Shingle rows are DENORMALIZED with their doc's shingle count
-    * (`nc`) — the same carry-through-the-join surgery as
-    * [[ngramJaccardPairs]]: the count is size(fh), free at projection
-    * time, and rides the batch join so [[deltaDedupIndexed]] never
-    * joins a counts table per batch (at 100 TB that join re-shuffles
-    * corpus-sized rows every ingest batch; a per-row long does not).
-    * The `counts` table remains as the stored per-doc statistic
-    * (derived, one distinct — the index-mirrors-corpus audit reads
-    * it), but the query path no longer consumes it. */
+  /** Index rows for `docs`, in memory (the specs' and the equivalence
+    * checks' form; [[writeDedupIndex]] is the persisted one). `dfs`
+    * is additive over disjoint doc sets and `hashes` needs a distinct
+    * over a union, so an index built in parts sums its partial `dfs`
+    * rows. */
   def buildDedupIndex(docs: DataFrame, k: Int = 3): DedupIndex = {
+    val shingles = indexShingles(docs, k)
+    DedupIndex(indexHashes(docs), shingles, docFreqs(shingles))
+  }
+
+  private def indexHashes(docs: DataFrame): DataFrame =
+    docs.select(md5(col("text")).as("content_md5")).distinct()
+
+  private def indexShingles(docs: DataFrame, k: Int): DataFrame = {
     graft.functions.ShingleHashes.register(docs.sparkSession)
-    val hashes = docs.select(md5(col("text")).as("content_md5")).distinct()
-    val shingles = docs
+    docs
       .withColumn("fh", expr(s"shingle_hashes(text, $k)"))
       .filter(size(col("fh")) > 0)
       .select(col("doc_id").as("c_id"),
         size(col("fh")).cast("long").as("nc"),
         explode(col("fh")).as("shingle"))
-    val counts = shingles.select("c_id", "nc").distinct()
-    val dfs = shingles.groupBy("shingle").agg(count(lit(1)).as("df"))
-    DedupIndex(hashes, shingles, counts, dfs)
   }
 
-  /** Persist a built index as the production artifact (r17): in a
-    * real pipeline the dedup index SHIPS with the corpus (the q185
+  private def docFreqs(shingles: DataFrame): DataFrame =
+    shingles.groupBy("shingle").agg(count(lit(1)).as("df"))
+
+  /** Persist the index of `docs` as the production artifact (r17): in
+    * a real pipeline the dedup index SHIPS with the corpus (the q185
     * cluster.idx convention) and every ingest batch consumes it as
     * cheap parquet scans — it is not rebuilt per batch. One parquet
-    * table per index frame; [[readDedupIndex]] is the consuming
-    * side. Overwrite mode: an index publish replaces the previous
-    * snapshot whole. */
-  def writeDedupIndex(index: DedupIndex, path: String): Unit = {
-    index.hashes.write.mode("overwrite").parquet(s"$path/hashes")
-    index.shingles.write.mode("overwrite").parquet(s"$path/shingles")
-    index.counts.write.mode("overwrite").parquet(s"$path/counts")
-    index.dfs.write.mode("overwrite").parquet(s"$path/dfs")
+    * table per [[DedupIndex]] frame under `path`; [[readDedupIndex]]
+    * is the consuming side. Overwrite mode: a publish replaces the
+    * previous snapshot whole.
+    *
+    * `leaf` names a sub-directory under each table, for an index
+    * appended in parts (the ingest writes `ingest_batch=<id>`), so
+    * each part overwrites only itself and the reader sees one table
+    * through partition discovery. `dfs` is derived from the shingle
+    * rows just written — a narrow parquet scan — so `docs` is
+    * shingled once per write. */
+  def writeDedupIndex(docs: DataFrame, path: String, k: Int = 3,
+                      leaf: String = ""): Unit = {
+    def at(table: String) = if (leaf.isEmpty) s"$path/$table" else s"$path/$table/$leaf"
+    indexHashes(docs).write.mode("overwrite").parquet(at("hashes"))
+    val shingles = indexShingles(docs, k)
+    shingles.write.mode("overwrite").parquet(at("shingles"))
+    docFreqs(docs.sparkSession.read.schema(shingles.schema).parquet(at("shingles")))
+      .write.mode("overwrite").parquet(at("dfs"))
   }
 
-  /** Read a persisted index back ([[writeDedupIndex]]'s layout).
+  /** Read a persisted index back ([[writeDedupIndex]]'s layout; an
+    * index written in leaves reads with the leaf's partition column).
     * Every consumer scan is a plain parquet read — deterministic
     * cost, no persist-layer memory/disk bimodality, and
     * [[deltaDedupIndexed]]'s multiple reads of `shingles` each prune
@@ -798,8 +814,32 @@ object Dedup {
     DedupIndex(
       spark.read.parquet(s"$path/hashes"),
       spark.read.parquet(s"$path/shingles"),
-      spark.read.parquet(s"$path/counts"),
       spark.read.parquet(s"$path/dfs"))
+
+  /** The leaves of the index at `path` (see [[writeDedupIndex]]) other
+    * than `skip`, the leaf being rewritten (a crash may have left it
+    * half-written). Empty before the first other leaf lands. A
+    * `shingles` leaf without a `dfs` partner was written before r7,
+    * when shingle rows carried no `nc` and no df partial was kept:
+    * read as-is it would feed NULL `nc` to the Jaccard filter, so this
+    * throws, naming the leaf, and the index must be rebuilt.
+    * Driver-side listings, no Spark job. */
+  def indexLeaves(spark: org.apache.spark.sql.SparkSession, path: String,
+                  skip: String): Set[String] = {
+    def leaves(table: String): Set[String] = {
+      val dir = new org.apache.hadoop.fs.Path(s"$path/$table")
+      val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+      if (!fs.exists(dir)) Set.empty
+      else fs.listStatus(dir).filter(_.isDirectory).map(_.getPath.getName).toSet - skip
+    }
+    val shingleLeaves = leaves("shingles")
+    val stale = shingleLeaves -- leaves("dfs")
+    if (stale.nonEmpty) throw new IllegalStateException(
+      s"dedup index $path: ${stale.toSeq.sorted.mkString(", ")} has shingle " +
+        "rows but no dfs rows (written before r7, without per-doc nc); " +
+        "rebuild the index")
+    shingleLeaves
+  }
 
   /** [[deltaDedup]] against a prebuilt index — produces the identical
     * novel set (spec-pinned equivalence) without touching corpus text.

@@ -362,7 +362,7 @@ object TextQueries {
   }
 
   /** The r7 indexed + CAPPED incremental dedup under the oracle gate:
-    * q62's split driven through [[Dedup.buildDedupIndex]] →
+    * q62's split driven through [[Dedup.writeDedupIndex]] →
     * [[Dedup.deltaDedupIndexed]] with the hot-shingle cap — the
     * materialized per-shingle dfs (corpus side) plus the batch's own
     * df, summed, decide hotness exactly as the direct operator's
@@ -436,8 +436,7 @@ object TextQueries {
         val corpus = docsRebalanced(spark, dir)
           .filter(col("doc_id") < 1000)
           .filter(pmod(col("doc_id"), lit(5)) =!= 0)
-        Dedup.writeDedupIndex(Dedup.buildDedupIndex(corpus, k = 3),
-          staging.getAbsolutePath)
+        Dedup.writeDedupIndex(corpus, staging.getAbsolutePath, k = 3)
         if (!staging.renameTo(root)) {
           // another process published first: keep theirs, drop ours
           if (!root.isDirectory)

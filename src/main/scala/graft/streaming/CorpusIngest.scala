@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, sum}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.storage.StorageLevel
 
@@ -36,6 +36,21 @@ object CorpusIngest {
                    maxShingleDocFreq: Option[Int] = None,
                    containmentPermille: Option[Long] = None): Unit = {
     val spark = batch.sparkSession
+    val leaf = s"ingest_batch=$batchId"
+    // Novelty is judged against the MATERIALIZED dedup index, not the
+    // corpus text: per-batch cost reads (hash set + shingle index),
+    // never re-shingles the accumulated corpus — the property that
+    // keeps batch latency flat as the corpus grows. Read before
+    // anything is pinned, so an index from before r7 fails the batch
+    // before it holds any memory.
+    //
+    // CRITICAL replay semantics: exclude THIS batch's partitions from
+    // the index read. A crash-replay of batch N would otherwise see
+    // its own previous output as "corpus", classify every doc as
+    // non-novel, and overwrite the partition with an empty set —
+    // silent data loss. The exclusion is a partition-pruned filter,
+    // so the replayed directories are never even scanned.
+    val existing = readIndexExcluding(spark, outDir, batchId)
     // The raw batch feeds the clean recipe and the report's input
     // count; the cleaned batch feeds the LSH candidate and hash
     // checkpoints, the batch-novel materialization and the report.
@@ -56,19 +71,6 @@ object CorpusIngest {
     // count all consume it — the LSH+CC chain must not run three times
     val batchNovel = Dedup.dedupCorpus(cleaned, k, numHashes, bands, threshold)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val corpusPath = s"$outDir/corpus"
-    // Novelty is judged against the MATERIALIZED dedup index, not the
-    // corpus text: per-batch cost reads (hash set + shingle index),
-    // never re-shingles the accumulated corpus — the property that
-    // keeps batch latency flat as the corpus grows.
-    //
-    // CRITICAL replay semantics: exclude THIS batch's partitions from
-    // the index read. A crash-replay of batch N would otherwise see
-    // its own previous output as "corpus", classify every doc as
-    // non-novel, and overwrite the partition with an empty set —
-    // silent data loss. The exclusion is a partition-pruned filter,
-    // so the replayed directories are never even scanned.
-    val existing = readIndexExcluding(spark, outDir, batchId)
     val novel = existing match {
       case Some(index) =>
         Dedup.deltaDedupIndexed(index, batchNovel, k, threshold,
@@ -76,26 +78,17 @@ object CorpusIngest {
           containmentPermille = containmentPermille)
       case None => batchNovel
     }
-    novel.write.mode("overwrite")
-      .parquet(s"$corpusPath/ingest_batch=$batchId")
-    // Index maintenance: derive this batch's index rows from the
+    val corpusPath = s"$outDir/corpus/$leaf"
+    novel.write.mode("overwrite").parquet(corpusPath)
+    // Index maintenance: this batch's index leaf is derived from the
     // DURABLE partition just written (not the in-memory plan), so the
-    // index always mirrors the corpus on disk; overwrite per batch id
-    // keeps the replay idempotence of the corpus writes.
-    val landed = spark.read.parquet(s"$corpusPath/ingest_batch=$batchId")
-    val idx = Dedup.buildDedupIndex(landed, k)
-    idx.hashes.write.mode("overwrite")
-      .parquet(s"$outDir/index/hashes/ingest_batch=$batchId")
-    idx.shingles.write.mode("overwrite")
-      .parquet(s"$outDir/index/shingles/ingest_batch=$batchId")
-    idx.counts.write.mode("overwrite")
-      .parquet(s"$outDir/index/counts/ingest_batch=$batchId")
-    // per-batch PARTIAL dfs (df over this batch's docs only): df is
-    // additive over disjoint doc sets, so the reader sums partials —
-    // appending stays batch-local work, the corpus-wide df is never
-    // recomputed from the shingle table
-    idx.dfs.write.mode("overwrite")
-      .parquet(s"$outDir/index/dfs/ingest_batch=$batchId")
+    // index always mirrors the corpus on disk; overwriting the batch's
+    // leaf keeps the replay idempotence of the corpus writes. Its
+    // `dfs` rows are a PARTIAL (df over this batch's docs only): df is
+    // additive over disjoint doc sets, so the reader sums partials and
+    // the corpus-wide df is never recomputed.
+    val landed = spark.read.parquet(corpusPath)
+    Dedup.writeDedupIndex(landed, s"$outDir/index", k, leaf)
     // Per-batch observability: the stage funnel an operator watches to
     // catch drift (a cleaning recipe suddenly rejecting everything, a
     // batch that is all duplicates). Batch-sized counts, idempotent
@@ -105,7 +98,7 @@ object CorpusIngest {
     Seq((pinned.count(), nCleaned, batchNovel.count(), landed.count()))
       .toDF("n_input", "n_cleaned", "n_batch_novel", "n_novel")
       .write.mode("overwrite")
-      .parquet(s"$outDir/reports/ingest_batch=$batchId")
+      .parquet(s"$outDir/reports/$leaf")
     batchNovel.unpersist(blocking = false)
     cleaned.unpersist(blocking = false)
     pinned.unpersist(blocking = false)
@@ -146,41 +139,6 @@ object CorpusIngest {
     path.getFileSystem(spark.sessionState.newHadoopConf()).exists(path)
   }
 
-  /** A directory is a READABLE parquet table only if it holds at least
-    * one footer — a dir whose every partition was excluded, compacted
-    * away, or devolved (the straddle spec's dfs case) exists but makes
-    * `spark.read.parquet` throw UNABLE_TO_INFER_SCHEMA. One recursive
-    * driver-side listing, same cost class as the existence probe. */
-  private def hasParquetData(spark: SparkSession, p: String): Boolean =
-    pathExists(spark, p) &&
-      graft.operators.Maintenance.listParquet(spark, p)._1 > 0
-
-  /** The first parquet data file under `dir`, if any (a driver-side
-    * listing that stops at the first match). */
-  private def firstParquetFile(fs: org.apache.hadoop.fs.FileSystem,
-                               dir: org.apache.hadoop.fs.Path)
-      : Option[org.apache.hadoop.fs.Path] = {
-    val it = fs.listFiles(dir, true)
-    var found: Option[org.apache.hadoop.fs.Path] = None
-    while (found.isEmpty && it.hasNext) {
-      val p = it.next().getPath
-      if (p.getName.endsWith(".parquet")) found = Some(p)
-    }
-    found
-  }
-
-  /** Whether `file`'s parquet schema has a top-level `field`, read from
-    * its footer on the driver — no Spark job, unlike a
-    * `spark.read.parquet(...).columns` schema inference. */
-  private def footerHasField(conf: org.apache.hadoop.conf.Configuration,
-                             file: org.apache.hadoop.fs.Path,
-                             field: String): Boolean = {
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
-    try reader.getFileMetaData.getSchema.containsField(field)
-    finally reader.close()
-  }
-
   /** The accumulated corpus, or None before the first batch lands.
     * Partition discovery folds every ingest_batch directory into one
     * table; the partition column itself is provenance, not content. */
@@ -193,87 +151,22 @@ object CorpusIngest {
     }
 
   /** The materialized dedup index as of BEFORE `batchId` (see the
-    * replay note in [[processBatch]]). "No corpus yet" is decided by
-    * the HASH table alone: every ingested doc has a content hash, so
-    * an empty-after-exclusion hash set means first batch (or its
-    * replay) — while an empty SHINGLE table beside a non-empty hash
-    * set is a legitimate index (docs shorter than k tokens) and must
-    * not disable the exact-dup filter. */
+    * replay note in [[processBatch]]), or None before another batch
+    * has landed. Each table reads through partition discovery with
+    * the batch's own leaf filtered out, and the per-batch `dfs`
+    * partials are summed into corpus-wide document frequencies. Throws
+    * IllegalStateException on an index from before r7
+    * ([[Dedup.indexLeaves]]). */
   private[graft] def readIndexExcluding(spark: SparkSession, outDir: String,
-                                 batchId: Long): Option[Dedup.DedupIndex] = {
-    val paths = Seq("hashes", "shingles", "counts", "dfs")
-      .map(t => s"$outDir/index/$t")
-    if (!paths.take(3).forall(hasParquetData(spark, _))) None
+                                        batchId: Long): Option[Dedup.DedupIndex] = {
+    val path = s"$outDir/index"
+    if (Dedup.indexLeaves(spark, path, skip = s"ingest_batch=$batchId").isEmpty) None
     else {
-      def tbl(p: String) = spark.read.parquet(p)
-        .filter(col("ingest_batch") =!= batchId)
-        .drop("ingest_batch")
-      val hashes = tbl(paths(0))
-      import org.apache.spark.sql.functions.{count => cnt, lit, sum => fsum}
-      // An index can STRADDLE the r7 denormalization: batches laid
-      // down before it store shingle rows without the carried per-doc
-      // count (`nc`) and wrote no `dfs` partials (the two shipped
-      // together), while later batches have both. The vintage is
-      // decided on the driver from the footer of each batch
-      // directory's first data file (a batch is written at once, so
-      // one file speaks for the directory): no Spark job per
-      // directory, so the read's job count does not grow with the
-      // number of batches ingested. The clean steady state (no legacy
-      // dirs) reads the table through ONE branch with no union, no
-      // nc-IS-NULL scan, and no legacy dfs leg: the straddle machinery
-      // must not tax every post-upgrade ingest batch forever.
-      val fsPath = new org.apache.hadoop.fs.Path(paths(1))
-      val conf = spark.sessionState.newHadoopConf()
-      val fs = fsPath.getFileSystem(conf)
-      val batchFiles = fs.listStatus(fsPath).toSeq
-        .filter(_.isDirectory).map(_.getPath)
-        .filter(_.getName.startsWith("ingest_batch="))
-        .filterNot(_.getName == s"ingest_batch=$batchId")
-        .flatMap(d => firstParquetFile(fs, d).map(d -> _))
-      if (batchFiles.isEmpty) None
-      else {
-        val (modernDirs, legacyDirs) = batchFiles
-          .partition { case (_, f) => footerHasField(conf, f, "nc") }
-        // legacy rows (the pre-r7 vintage) restore nc with a per-doc
-        // window over ONLY themselves — a doc's rows all land in one
-        // batch, so the legacy subset contains every row of its docs;
-        // post-r7 rows never pay the shuffle (lazy; runs only if a
-        // near-dup leg consumes it)
-        val legacy =
-          if (legacyDirs.isEmpty) None
-          else Some(spark.read.parquet(legacyDirs.map(_._1.toString): _*))
-        val legacyFilled = legacy.map(_.withColumn("nc",
-          cnt(lit(1)).over(
-            org.apache.spark.sql.expressions.Window.partitionBy("c_id"))))
-        val modern =
-          if (modernDirs.isEmpty) None
-          else Some(spark.read.parquet(modernDirs.map(_._1.toString): _*))
-        val shingles = (modern, legacyFilled) match {
-          case (Some(m), Some(l)) => m.unionByName(l)
-          case (Some(m), None) => m
-          case (None, Some(l)) => l
-          case (None, None) => throw new IllegalStateException("unreachable")
-        }
-        // corpus-wide df = sum of the per-batch partials PLUS the
-        // legacy dirs' own counts — partials exist only for post-r7
-        // batches, so summing them alone would undercount every
-        // shingle the legacy prefix contains; an index with no dfs
-        // table at all derives df wholly from the shingle rows (lazy,
-        // capped path only, same as before). With no legacy dirs the
-        // partials pass through un-unioned.
-        val dfs =
-          if (hasParquetData(spark, paths(3))) {
-            val partials = tbl(paths(3)).select(col("shingle"), col("df"))
-            legacy match {
-              case None => partials.groupBy("shingle").agg(fsum("df").as("df"))
-              case Some(l) => partials
-                .unionByName(l.groupBy("shingle").agg(cnt(lit(1)).as("df")))
-                .groupBy("shingle").agg(fsum("df").as("df"))
-            }
-          } else shingles.groupBy("shingle").agg(cnt(lit(1)).as("df"))
-        if (hashes.isEmpty) None
-        else Some(Dedup.DedupIndex(hashes, shingles, tbl(paths(2)), dfs))
-      }
+      val idx = Dedup.readDedupIndex(spark, path)
+      def excluding(t: DataFrame) =
+        t.filter(col("ingest_batch") =!= batchId).drop("ingest_batch")
+      Some(Dedup.DedupIndex(excluding(idx.hashes), excluding(idx.shingles),
+        excluding(idx.dfs).groupBy("shingle").agg(sum("df").as("df"))))
     }
   }
 

@@ -19,10 +19,12 @@ class CorpusIngestSpec extends AnyFunSuite {
   private val docSchema = fixtureDocs.schema
 
   /** Spark jobs one non-first [[CorpusIngest.processBatch]] may start
-    * on the fixture: measured at 71; 109 when each of the cleaned
-    * batch's four consumers re-ran the clean recipe and the index read
-    * inferred each shingle directory's schema with a Spark job. */
-  private val MaxBatchJobs = 71
+    * on the fixture: measured at 67; 71 while the index kept a per-doc
+    * counts table and the index read probed its hash set for emptiness,
+    * and 109 when each of the cleaned batch's four consumers re-ran
+    * the clean recipe and the index read inferred each shingle
+    * directory's schema with a Spark job. */
+  private val MaxBatchJobs = 67
 
   /** Land a wave as ONE parquet file directly in the landing dir (the
     * file stream source lists files, not nested write directories). */
@@ -171,27 +173,34 @@ class CorpusIngestSpec extends AnyFunSuite {
 
   test("the materialized index mirrors the written corpus after every batch") {
     val outDir = java.nio.file.Files.createTempDirectory("graft_ingest_idx").toString
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    // read through the ingest's own reader: the summed per-batch dfs
+    // partials and the carried nc must equal a fresh build over the
+    // accumulated corpus exactly
+    def assertMirrors(): Unit = {
+      val idx = CorpusIngest.readIndexExcluding(spark, outDir, 99L).get
+      val rebuilt = Dedup.buildDedupIndex(
+        CorpusIngest.readCorpus(spark, s"$outDir/corpus").get)
+      assert(idx.hashes.collect().map(_.getString(0)).toSet ==
+        rebuilt.hashes.collect().map(_.getString(0)).toSet)
+      assert(pairs(idx.dfs.select($"shingle", $"df")) ==
+        pairs(rebuilt.dfs.select($"shingle", $"df")))
+      assert(pairs(idx.shingles.select($"c_id", $"nc").distinct()) ==
+        pairs(rebuilt.shingles.select($"c_id", $"nc").distinct()))
+      assert(idx.shingles.filter($"nc".isNull).count() == 0)
+    }
     CorpusIngest.processBatch(fixtureDocs.filter($"doc_id" < 200), outDir, 0L)
+    assertMirrors()
     CorpusIngest.processBatch(fixtureDocs.filter($"doc_id" >= 200), outDir, 1L)
-    val corpus = CorpusIngest.readCorpus(spark, s"$outDir/corpus").get
-    val rebuilt = Dedup.buildDedupIndex(corpus)
-    val storedHashes = spark.read.parquet(s"$outDir/index/hashes")
-      .select("content_md5").collect().map(_.getString(0)).toSet
-    assert(storedHashes ==
-      rebuilt.hashes.collect().map(_.getString(0)).toSet)
-    val storedCounts = spark.read.parquet(s"$outDir/index/counts")
-      .select("c_id", "nc").collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val rebuiltCounts = rebuilt.counts
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(storedCounts == rebuiltCounts)
+    assertMirrors()
   }
 
-  test("a straddled index (pre-denormalization batches) repairs df and nc exactly") {
+  test("an index from before r7 fails loudly") {
     val outDir = java.nio.file.Files.createTempDirectory("graft_ingest_str").toString
     CorpusIngest.processBatch(fixtureDocs.filter($"doc_id" < 200), outDir, 0L)
-    // devolve batch 0 to the pre-denormalization vintage: its shingle
-    // rows lose the carried nc and its dfs partial disappears — the
-    // state an index upgraded mid-ingest is actually in
+    // devolve batch 0 to the pre-r7 vintage: its shingle rows lose the
+    // carried nc and its dfs partial disappears
     val shDir = s"$outDir/index/shingles/ingest_batch=0"
     val legacy = spark.read.parquet(shDir).drop("nc")
     val tmp = java.nio.file.Files.createTempDirectory("graft_str_tmp").toString
@@ -203,24 +212,14 @@ class CorpusIngestSpec extends AnyFunSuite {
     rmrf(new java.io.File(shDir))
     new java.io.File(tmp).renameTo(new java.io.File(shDir))
     rmrf(new java.io.File(s"$outDir/index/dfs/ingest_batch=0"))
-    // a post-upgrade batch lands beside it
-    CorpusIngest.processBatch(
-      fixtureDocs.filter($"doc_id" >= 200 && $"doc_id" < 400), outDir, 1L)
-    // the straddled read must reconstruct EXACTLY the index a fresh
-    // build over the accumulated corpus produces: summing only the
-    // post-upgrade dfs partials would undercount every shingle the
-    // legacy prefix contains, and a schema-sampled read could feed
-    // NULL nc into the jaccard filter
-    val idx = CorpusIngest.readIndexExcluding(spark, outDir, 99L).get
-    val corpus = CorpusIngest.readCorpus(spark, s"$outDir/corpus").get
-    val rebuilt = Dedup.buildDedupIndex(corpus)
-    def dfMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(dfMap(idx.dfs.select($"shingle", $"df")) ==
-      dfMap(rebuilt.dfs.select($"shingle", $"df".cast("long"))))
-    assert(dfMap(idx.shingles.select($"c_id", $"nc").distinct()) ==
-      dfMap(rebuilt.counts))
-    assert(idx.shingles.filter($"nc".isNull).count() == 0)
+    // the next batch must refuse the index, not read NULL nc into the
+    // Jaccard filter or undercount df
+    val e = intercept[IllegalStateException] {
+      CorpusIngest.processBatch(
+        fixtureDocs.filter($"doc_id" >= 200 && $"doc_id" < 400), outDir, 1L)
+    }
+    assert(e.getMessage.contains("ingest_batch=0") && e.getMessage.contains("rebuild"),
+      e.getMessage)
   }
 
   test("publishSnapshot: same docs, no provenance column, sorted file layout") {
@@ -257,9 +256,9 @@ class CorpusIngestSpec extends AnyFunSuite {
   }
 
   test("the index read starts as many Spark jobs after 4 batches as after 2") {
-    // the vintage check reads one footer per shingle directory on the
-    // driver; a schema-inferring spark.read per directory would add
-    // one job for every batch already ingested
+    // each index table is one partition-discovering read; a
+    // schema-inferring spark.read per batch directory would add one
+    // job for every batch already ingested
     val outDir = java.nio.file.Files.createTempDirectory("graft_ingest_flat").toString
     def ingest(b: Long): Unit =
       CorpusIngest.processBatch(fixtureDocs.filter($"doc_id" % 4 === b), outDir, b)
