@@ -59,6 +59,44 @@ object ScaleProbe {
     }.reduce(_ unionByName _)
   }
 
+  /** N DIRECTION-unique copies of the embeddings fixture: copy i
+    * replaces every vector with fresh deterministic noise, so
+    * near-dup clusters stay inside one copy. Hash-based white noise,
+    * NOT sin of linearly-shifted arguments: sin(x + c·i) keeps
+    * cos(c)-level correlation between copies (measured: the first fix
+    * still emitted 65M pairs at 16× — cos(37 rad) ≈ 0.77), while sin
+    * of a 64-bit hash is effectively uniform noise per (vec, dim,
+    * copy) and cross-copy cosines concentrate at ~1/√d. */
+  def uniqueEmbeddings(spark: SparkSession, dir: String, copies: Int): DataFrame = {
+    import spark.implicits._
+    val base = Tables.embeddings(spark, dir).select("vec_id", "embedding")
+    (0 until copies).map { i =>
+      if (i == 0) base
+      else base.select(
+        ($"vec_id" + lit(i * 10000000L)).as("vec_id"),
+        expr(s"transform(embedding, (x, j) -> " +
+          s"float(sin(xxhash64(vec_id * 1048573 + j * 101 + $i))))")
+          .as("embedding"))
+    }.reduce(_ unionByName _)
+  }
+
+  /** N key-disjoint copies of the events fixture's (user_id, props):
+    * copy i shifts user ids by i·10⁶ and the props key `k` by i·1000,
+    * so the co-engagement graph is N disjoint copies of the fixture's
+    * and its projection grows with the copies, not quadratically. */
+  def scaledEvents(spark: SparkSession, dir: String, copies: Int): DataFrame = {
+    import spark.implicits._
+    val ev = Tables.events(spark, dir).select($"user_id", $"props")
+    (0 until copies).map { i =>
+      if (i == 0) ev
+      else ev.select(($"user_id" + lit(i * 1000000L)).as("user_id"),
+        concat(lit("{\"k\": "),
+          (expr("cast(get_json_object(props, '$.k') as bigint)")
+            + lit(i * 1000L)).cast("string"),
+          lit("}")).as("props"))
+    }.reduce(_ unionByName _)
+  }
+
   /** BPE headroom: the scale dial for a tokenizer is the MERGE COUNT,
     * not corpus copies — a real tokenizer trains 30k–50k merges where
     * the oracle-gated q169 proves 16. Sweeps merges 16× across train
@@ -526,6 +564,18 @@ object ScaleProbe {
       val nd = docs.count(); val ne = emb.count()
       val queries = emb.filter($"vec_id" < 100)
       println(s"== scale ${s}x: $nd docs, $ne vectors")
+      // the co-engagement cells: the projection over the scaled events,
+      // materialized once, then `peel` over it (see q198_kcore)
+      def coengCell(minShared: Long)(peel: DataFrame => DataFrame): Long = {
+        val e = operators.Graph.coEngagementEdgesShared(
+            scaledEvents(spark, dir, s).repartition(cpus * 2), minShared = minShared)
+          .select("src", "dst")
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          e.count()
+          peel(e).count()
+        } finally { e.unpersist() }
+      }
 
       val probes: Seq[(String, () => Long)] = Seq(
         "q33_exact_dedup" -> (() => operators.Dedup.exactDedup(docs).count()),
@@ -580,8 +630,7 @@ object ScaleProbe {
           operators.Dedup.prefixCandidates(docs, k = 3,
             thresholdPermille = 500L).count()),
         "q34_meet_volume" -> (() => {
-          graft.functions.ShingleHashes.register(spark)
-          docs.withColumn("fh", expr("shingle_hashes(text, 3)"))
+          operators.Dedup.shingleSets(docs, 3)
             .select(explode($"fh").as("sh"))
             .groupBy("sh").agg(count(lit(1)).as("f"))
             .agg(coalesce(sum(expr("f * (f - 1) div 2")), lit(0L))
@@ -600,68 +649,20 @@ object ScaleProbe {
         // 211 s at 1x where the memoized form costs ~19 s): the same
         // carried-frame lesson as kCore's one-reference round, at the
         // caching layer instead of the plan layer
-        "q198_kcore" -> (() => {
-          val ev = Tables.events(spark, dir).select($"user_id", $"props")
-          val scaled = (0 until s).map { i =>
-            if (i == 0) ev
-            else ev.select(($"user_id" + lit(i * 1000000L)).as("user_id"),
-              concat(lit("{\"k\": "),
-                (expr("cast(get_json_object(props, '$.k') as bigint)")
-                  + lit(i * 1000L)).cast("string"),
-                lit("}")).as("props"))
-          }.reduce(_ unionByName _).repartition(cpus * 2)
-          val e = operators.Graph.coEngagementEdgesShared(scaled, minShared = 22L)
-            .select("src", "dst")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            e.count()
-            operators.Graph.kCore(e, k = 70, iters = 6).count()
-          } finally { e.unpersist() }
-        }),
+        "q198_kcore" -> (() =>
+          coengCell(22L)(operators.Graph.kCore(_, k = 70, iters = 6))),
         // r18: the full decomposition over the same scaled graph —
         // 12 h-index rounds, each one join + a degree-bounded rank
         // window + a combinable max; per-round volume tracks |edges|,
         // so the cell's slope should match q198's peel, not its
         // projection (which the persist isolates here too)
-        "q201_coreness" -> (() => {
-          val ev = Tables.events(spark, dir).select($"user_id", $"props")
-          val scaled = (0 until s).map { i =>
-            if (i == 0) ev
-            else ev.select(($"user_id" + lit(i * 1000000L)).as("user_id"),
-              concat(lit("{\"k\": "),
-                (expr("cast(get_json_object(props, '$.k') as bigint)")
-                  + lit(i * 1000L)).cast("string"),
-                lit("}")).as("props"))
-          }.reduce(_ unionByName _).repartition(cpus * 2)
-          val e = operators.Graph.coEngagementEdgesShared(scaled, minShared = 22L)
-            .select("src", "dst")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            e.count()
-            operators.Graph.coreness(e, iters = 12).count()
-          } finally { e.unpersist() }
-        }),
+        "q201_coreness" -> (() =>
+          coengCell(22L)(operators.Graph.coreness(_, iters = 12))),
         // r18: the truss peel on its thinner (shared>=32) projection —
         // kTruss checkpoints internally per round, so the cell only
         // isolates the projection the same way the query's memo does
-        "q202_ktruss" -> (() => {
-          val ev = Tables.events(spark, dir).select($"user_id", $"props")
-          val scaled = (0 until s).map { i =>
-            if (i == 0) ev
-            else ev.select(($"user_id" + lit(i * 1000000L)).as("user_id"),
-              concat(lit("{\"k\": "),
-                (expr("cast(get_json_object(props, '$.k') as bigint)")
-                  + lit(i * 1000L)).cast("string"),
-                lit("}")).as("props"))
-          }.reduce(_ unionByName _).repartition(cpus * 2)
-          val e = operators.Graph.coEngagementEdgesShared(scaled, minShared = 32L)
-            .select("src", "dst")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            e.count()
-            operators.Graph.kTruss(e, k = 6, iters = 7).count()
-          } finally { e.unpersist() }
-        }),
+        "q202_ktruss" -> (() =>
+          coengCell(32L)(operators.Graph.kTruss(_, k = 6, iters = 7))),
         "q41_ann_topk" -> (() =>
           operators.Similarity.annTopK(emb, queries, k = 10).count()),
         // the registered q43: integer IVF at its dials
@@ -732,22 +733,7 @@ object ScaleProbe {
         // directions keeps clusters inside one copy, so the probe
         // measures the candidate path, not output volume.
         "q150_crosslingual" -> (() => {
-          val base = Tables.embeddings(spark, dir)
-            .select("vec_id", "embedding")
-          // hash-based white noise, NOT sin of linearly-shifted
-          // arguments: sin(x + c·i) keeps cos(c)-level correlation
-          // between copies (measured: the first fix still emitted
-          // 65M pairs at 16× — cos(37 rad) ≈ 0.77), while sin of a
-          // 64-bit hash is effectively uniform noise per (vec, dim,
-          // copy) and cross-copy cosines concentrate at ~1/√d
-          val uniq = (0 until s).map { i =>
-            if (i == 0) base
-            else base.select(
-              ($"vec_id" + lit(i * 10000000L)).as("vec_id"),
-              expr(s"transform(embedding, (x, j) -> " +
-                s"float(sin(xxhash64(vec_id * 1048573 + j * 101 + $i))))")
-                .as("embedding"))
-          }.reduce(_ unionByName _).repartition(cpus * 2)
+          val uniq = uniqueEmbeddings(spark, dir, s).repartition(cpus * 2)
           // the documented dial: bandBits grows with corpus size to
           // hold candidate share (occupancy ≈ n/2^bits per band);
           // 8 bands × 8 bits = 64 is the fixture's DIM CEILING — the
@@ -768,16 +754,7 @@ object ScaleProbe {
         // scaling (bits + 2 per 4× data holds candidate share
         // constant) where the sign family capped at 8×8 = d = 64
         "q150srp_pairs" -> (() => {
-          val base = Tables.embeddings(spark, dir)
-            .select("vec_id", "embedding")
-          val uniq = (0 until s).map { i =>
-            if (i == 0) base
-            else base.select(
-              ($"vec_id" + lit(i * 10000000L)).as("vec_id"),
-              expr(s"transform(embedding, (x, j) -> " +
-                s"float(sin(xxhash64(vec_id * 1048573 + j * 101 + $i))))")
-                .as("embedding"))
-          }.reduce(_ unionByName _).repartition(cpus * 2)
+          val uniq = uniqueEmbeddings(spark, dir, s).repartition(cpus * 2)
           // srpBitsFor IS the ladder progression (12→14→16 at
           // 1×/4×/16×); the 64× cell holds the 16 ceiling on purpose
           // (the measured ceiling-held regime — ARCHITECTURE ladder)
@@ -795,16 +772,7 @@ object ScaleProbe {
         // exists to measure that the AUTOMATIC path inherits SRP's
         // zero spill exactly where the capped sign form spills 5.6 GB
         "q150auto_pairs" -> (() => {
-          val base = Tables.embeddings(spark, dir)
-            .select("vec_id", "embedding")
-          val uniq = (0 until s).map { i =>
-            if (i == 0) base
-            else base.select(
-              ($"vec_id" + lit(i * 10000000L)).as("vec_id"),
-              expr(s"transform(embedding, (x, j) -> " +
-                s"float(sin(xxhash64(vec_id * 1048573 + j * 101 + $i))))")
-                .as("embedding"))
-          }.reduce(_ unionByName _).repartition(cpus * 2)
+          val uniq = uniqueEmbeddings(spark, dir, s).repartition(cpus * 2)
           val pairs = operators.Similarity.semanticNearDupPairsAuto(uniq,
             bands = 8, simNumSqE4 = 2025L, nOpt = Some(2000L * s))
           pairs
@@ -928,36 +896,6 @@ object ScaleProbe {
         // add zero cross-copy candidates, so time ∝ docs
         "q127_containment" -> (() =>
           operators.Dedup.containmentPairs(docs, k = 3).count()),
-        // r18 A/B (VERDICT r17 item 6): the same containment pipeline
-        // with a SHUFFLE_HASH hint on the inverted-index self-join —
-        // the 16× cell's 3.7 GB spill is sort volume, and a shuffled
-        // hash join has no sort to spill; the memory axis shows
-        // whether the hash build trades spill for peak task memory.
-        // Inlined rather than a containmentPairs dial so the
-        // experiment can't leak into the oracle-gated operator before
-        // the verdict is in.
-        "q127shj_containment" -> (() => {
-          graft.functions.ShingleHashes.register(spark)
-          val sh = docs
-            .withColumn("fh", expr("shingle_hashes(text, 3)"))
-            .filter(size($"fh") > 0)
-            .select($"doc_id", size($"fh").cast("long").as("ns"),
-              explode($"fh").as("shingle"))
-          val und = sh.as("a").hint("SHUFFLE_HASH")
-            .join(sh.as("b"),
-              col("a.shingle") === col("b.shingle") &&
-                col("a.doc_id") < col("b.doc_id"))
-            .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-            .agg(count(lit(1)).as("common"),
-              max(col("a.ns")).as("n1"), max(col("b.ns")).as("n2"))
-          und.select(col("d1").as("contained"), col("common"),
-              col("n1").as("n_contained"))
-            .unionAll(und.select(col("d2").as("contained"), col("common"),
-              col("n2").as("n_contained")))
-            .withColumn("cont_permille", expr("common * 1000 div n_contained"))
-            .filter(col("n_contained") >= 10 && col("cont_permille") >= 800)
-            .count()
-        }),
         // r8 widening: bigram LM — one per-row list transform + two
         // combinable counts; no positional self-join anywhere
         "q128_bigram_lm" -> (() => {

@@ -51,21 +51,40 @@ object Dedup {
       .withColumn("sh", shingleExpr(col("text"), k))
       .filter(size(col("sh")) > 0)
 
-  /** Exact pairwise n-gram Jaccard via an inverted shingle index:
-    * explode → self-join on shingle → count common → join per-doc
-    * sizes. Exact-integer counts, one final double division. This is
-    * the verify/oracle path; candidate generation at scale is
-    * [[minHashPairs]] / [[simHashPairs]].
-    *
-    * `maxShingleDocFreq` guards the self-join's worst case: a shingle
-    * appearing in f docs contributes f·(f−1)/2 join rows, so one stop-
-    * phrase shared by 1M docs is 5·10¹¹ rows. With the cap set,
-    * shingles above that document frequency are dropped from BOTH the
-    * index and the per-doc sizes — jaccard is then exact over the
-    * capped shingle universe (a documented approximation; hot shingles
-    * carry no dedup signal). None (default) preserves the oracle
-    * semantics exactly; a cap at or above the corpus max df is a
-    * no-op, which the property spec pins. */
+  /** `docs` with `fh`, the distinct 64-bit hashes of its word
+    * k-shingles (exactly [[shingleExpr]]'s set, hashed); docs with
+    * fewer than k words have no shingles and are dropped. Every
+    * shingle-set operator here starts from this frame. */
+  private[graft] def shingleSets(docs: DataFrame, k: Int): DataFrame = {
+    graft.functions.ShingleHashes.register(docs.sparkSession)
+    docs
+      .withColumn("fh", expr(s"shingle_hashes(text, $k)"))
+      .filter(size(col("fh")) > 0)
+  }
+
+  /** Shingle postings `(id, n, shingle)`: one row per distinct shingle
+    * of each doc, carrying the doc's distinct-shingle count `n` =
+    * size(fh). The count rides the explode because it is already in
+    * hand, and it rides the pair joins because it is constant per doc,
+    * so no pair operator re-derives per-doc sizes with a separate
+    * aggregation and two restoring joins (that re-scanned the docs and
+    * re-shuffled twice, measured as a third of [[ngramJaccardPairs]]'
+    * time at sf0.1). */
+  private[graft] def shinglePostings(docs: DataFrame, k: Int, id: String,
+                                     n: String): DataFrame =
+    shingleSets(docs, k).select(
+      // no self-alias when the name is kept: the plan stays alias-free
+      if (id == "doc_id") col(id) else col("doc_id").as(id),
+      size(col("fh")).cast("long").as(n),
+      explode(col("fh")).as("shingle"))
+
+  /** The shingles of `postings` in more than `cap` rows (docs). The df
+    * count is map-side combinable, and the joins against the (tiny)
+    * result broadcast. */
+  private def hotShingles(postings: DataFrame, cap: Int): DataFrame =
+    postings.groupBy("shingle").agg(count(lit(1)).as("df"))
+      .filter(col("df") > cap).select("shingle")
+
   /** Surviving shingle rows under a hot-shingle cap, with the carried
     * per-doc count (`ns`) adjusted to the capped universe: carried −
     * the doc's dropped-row tally. The subtract form is the scale
@@ -86,50 +105,56 @@ object Dedup {
       .drop("hot_n")
   }
 
-  def ngramJaccardPairs(docs: DataFrame, k: Int = 3, threshold: Double = 0.6,
-                        maxShingleDocFreq: Option[Int] = None): DataFrame = {
-    // The inverted index keys on 64-bit shingle HASHES, not shingle
-    // strings: identical distinct/intersection counts w.h.p. (64-bit
-    // collisions ~1e-10 at fixture scale, the same approximation the
-    // minhash verification leg already makes), and the explode +
-    // self-join move longs instead of strings — the bulk of this
-    // operator's shuffle bytes. `shingle_hashes` emits the distinct
-    // hashes of exactly `shingleExpr`'s shingle set.
-    graft.functions.ShingleHashes.register(docs.sparkSession)
-    // `ns` (the per-doc distinct-shingle count) is projected ALONGSIDE
-    // the explode — it is just size(fh), already in hand — and rides
-    // the self-join, where it is constant within each (d1, d2) group.
-    // That removes the separate per-doc aggregation AND its two
-    // restoring joins from the plan (re-deriving ns via groupBy
-    // re-scanned the docs and re-shuffled twice, measured as a third
-    // of this operator's time at sf0.1).
-    val shAll = docs
-      .withColumn("fh", expr(s"shingle_hashes(text, $k)"))
-      .filter(size(col("fh")) > 0)
-      .select(col("doc_id"), size(col("fh")).cast("long").as("ns"),
-        explode(col("fh")).as("shingle"))
+  /** The inverted-index leg [[ngramJaccardPairs]] and
+    * [[containmentPairs]] share: one (d1 < d2, common, n1, n2) row per
+    * doc pair sharing at least one shingle, where `common` counts the
+    * shared shingles and n1/n2 are the docs' shingle counts. Under
+    * `maxShingleDocFreq`, shingles in more docs than the cap drop from
+    * the postings AND from the per-doc counts ([[capAdjust]]), so both
+    * operators measure over the capped universe. */
+  private def shinglePairStats(docs: DataFrame, k: Int,
+                               maxShingleDocFreq: Option[Int]): DataFrame = {
+    val shAll = shinglePostings(docs, k, "doc_id", "ns")
     val sh = maxShingleDocFreq match {
       case None => shAll
-      case Some(cap) =>
-        // df per shingle is a map-side-combinable count; the joins
-        // against the (tiny) hot-shingle list broadcast. Under the
-        // cap, ns must count the CAPPED universe — size(fh) no longer
-        // matches — adjusted by [[capAdjust]]'s dropped-row subtract
-        // (capped path only).
-        val hot = shAll.groupBy("shingle").agg(count(lit(1)).as("df"))
-          .filter(col("df") > cap).select("shingle")
-        capAdjust(shAll, hot, "doc_id", "ns")
+      case Some(cap) => capAdjust(shAll, hotShingles(shAll, cap), "doc_id", "ns")
     }
-    sh.as("a").join(sh.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
+    PairPack.pairsFromPostings(sh, Seq("shingle"), "doc_id")
       .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .agg(count(lit(1)).as("common"),
         max(col("a.ns")).as("n1"), max(col("b.ns")).as("n2"))
+  }
+
+  /** Exact pairwise n-gram Jaccard via an inverted shingle index:
+    * explode → self-join on shingle → count common, with the per-doc
+    * sizes carried through the join ([[shinglePairStats]]).
+    * Exact-integer counts, one final double division. This is the
+    * verify/oracle path; candidate generation at scale is
+    * [[minHashPairs]] / [[simHashPairs]].
+    *
+    * The index keys on 64-bit shingle HASHES, not shingle strings:
+    * identical distinct/intersection counts w.h.p. (64-bit collisions
+    * ~1e-10 at fixture scale, the same approximation the minhash
+    * verification leg already makes), and the explode + self-join move
+    * longs instead of strings — the bulk of this operator's shuffle
+    * bytes.
+    *
+    * `maxShingleDocFreq` guards the self-join's worst case: a shingle
+    * appearing in f docs contributes f·(f−1)/2 join rows, so one stop-
+    * phrase shared by 1M docs is 5·10¹¹ rows. With the cap set,
+    * shingles above that document frequency are dropped from BOTH the
+    * index and the per-doc sizes — jaccard is then exact over the
+    * capped shingle universe (a documented approximation; hot shingles
+    * carry no dedup signal). None (default) preserves the oracle
+    * semantics exactly; a cap at or above the corpus max df is a
+    * no-op, which the property spec pins. */
+  def ngramJaccardPairs(docs: DataFrame, k: Int = 3, threshold: Double = 0.6,
+                        maxShingleDocFreq: Option[Int] = None): DataFrame =
+    shinglePairStats(docs, k, maxShingleDocFreq)
       .withColumn("jaccard",
         col("common").cast("double") / (col("n1") + col("n2") - col("common")))
       .filter(col("jaccard") >= threshold)
       .select("d1", "d2", "common", "n1", "n2", "jaccard")
-  }
 
   /** Exact Jaccard-threshold pairs via PREFIX FILTERING — the
     * AllPairs/PPJoin family (Bayardo, Ma & Srikant, "Scaling Up All
@@ -197,13 +222,9 @@ object Dedup {
 
   /** Per-doc distinct shingle hashes + count — the frame both the
     * prefix build and the verification join read. */
-  private def prefixBase(docs: DataFrame, k: Int): DataFrame = {
-    graft.functions.ShingleHashes.register(docs.sparkSession)
-    docs
-      .withColumn("fh", expr(s"shingle_hashes(text, $k)"))
-      .filter(size(col("fh")) > 0)
+  private def prefixBase(docs: DataFrame, k: Int): DataFrame =
+    shingleSets(docs, k)
       .select(col("doc_id"), col("fh"), size(col("fh")).cast("long").as("ns"))
-  }
 
   /** The candidate (d1, d2) id pairs the prefix filter admits — every
     * pair with Jaccard ≥ t‰/1000 is here (lossless), plus the false
@@ -249,20 +270,15 @@ object Dedup {
     val lengthOk =
       least(col("a.ns"), col("b.ns")) * 1000L >=
         greatest(col("a.ns"), col("b.ns")) * lit(tp)
-    val joinCond =
-      if (!positional)
-        col("a.shingle") === col("b.shingle") &&
-          col("a.doc_id") < col("b.doc_id") && lengthOk
-      else
-        col("a.shingle") === col("b.shingle") &&
-          col("a.doc_id") < col("b.doc_id") && lengthOk &&
-          least(col("a.ns") - col("a.pos"), col("b.ns") - col("b.pos")) *
-            lit(1000L + tp) >= lit(tp) * (col("a.ns") + col("b.ns"))
+    val budgetOk =
+      least(col("a.ns") - col("a.pos"), col("b.ns") - col("b.pos")) *
+        lit(1000L + tp) >= lit(tp) * (col("a.ns") + col("b.ns"))
     // r22: the candidate dedup exchange carries ONE packed BIGINT per
     // pair when the probed doc-id bound allows ([[PairPack]]; guide
     // §2.3) — identical candidate set either way.
     PairPack.distinctPairs(
-      prefixes.as("a").join(prefixes.as("b"), joinCond)
+      PairPack.pairsFromPostings(prefixes, Seq("shingle"), "doc_id",
+          lengthOk +: (if (positional) Seq(budgetOk) else Nil): _*)
         .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2")),
       "d1", "d2", packed = PairPack.fits32(docs, "doc_id"))
   }
@@ -305,24 +321,7 @@ object Dedup {
                        minPermille: Long = 800L,
                        minShingles: Long = 10L,
                        maxShingleDocFreq: Option[Int] = None): DataFrame = {
-    graft.functions.ShingleHashes.register(docs.sparkSession)
-    val shAll = docs
-      .withColumn("fh", expr(s"shingle_hashes(text, $k)"))
-      .filter(size(col("fh")) > 0)
-      .select(col("doc_id"), size(col("fh")).cast("long").as("ns"),
-        explode(col("fh")).as("shingle"))
-    val sh = maxShingleDocFreq match {
-      case None => shAll
-      case Some(cap) =>
-        val hot = shAll.groupBy("shingle").agg(count(lit(1)).as("df"))
-          .filter(col("df") > cap).select("shingle")
-        capAdjust(shAll, hot, "doc_id", "ns")
-    }
-    val und = sh.as("a").join(sh.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-      .agg(count(lit(1)).as("common"),
-        max(col("a.ns")).as("n1"), max(col("b.ns")).as("n2"))
+    val und = shinglePairStats(docs, k, maxShingleDocFreq)
     // r22b: both directions IN-ROW (the coEngagementEdgesShared
     // surgery): the old `und.unionAll(und.select(swapped))` referenced
     // the pair aggregate twice, so each branch re-ran the final
@@ -406,10 +405,7 @@ object Dedup {
     * < k words yield an empty feature array and are dropped. */
   def withMinHash(docs: DataFrame, k: Int = 3, numHashes: Int = 16): DataFrame = {
     graft.functions.MinHashSigs.register(docs.sparkSession)
-    graft.functions.ShingleHashes.register(docs.sparkSession)
-    docs
-      .withColumn("fh", expr(s"shingle_hashes(text, $k)"))
-      .filter(size(col("fh")) > 0)
+    shingleSets(docs, k)
       .withColumn("sig", expr(s"minhash_sigs(fh, $numHashes)"))
       .drop("fh")
   }
@@ -454,10 +450,7 @@ object Dedup {
           }: _*)
         ).getItem(0))
       .select(col("doc_id"), posexplode(col("bands")).as(Seq("band_id", "band_hash")))
-    val cands = banded.as("a").join(banded.as("b"),
-        col("a.band_id") === col("b.band_id") &&
-        col("a.band_hash") === col("b.band_hash") &&
-        col("a.doc_id") < col("b.doc_id"))
+    val cands = PairPack.pairsFromPostings(banded, Seq("band_id", "band_hash"), "doc_id")
       .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .dropDuplicates("d1", "d2")
       // candidate pairs feed two verification joins: materialize once
@@ -488,10 +481,7 @@ object Dedup {
     // per-doc DISTINCT hash sets, so the jaccard double divides the
     // identical integers as the array_intersect/array_union form.
     graft.functions.SortedIntersectCount.register(docs.sparkSession)
-    val fhs = docs
-      .join(candIds, Seq("doc_id"), "left_semi")
-      .withColumn("fh", expr(s"shingle_hashes(text, $k)"))
-      .filter(size(col("fh")) > 0)
+    val fhs = shingleSets(docs.join(candIds, Seq("doc_id"), "left_semi"), k)
       .select(col("doc_id"), sort_array(col("fh")).as("fh"))
       .localCheckpoint()
     cands
@@ -634,27 +624,20 @@ object Dedup {
     * count aggregations, no restoring joins. */
   def deltaPairStats(corpus: DataFrame, exactNovel: DataFrame, k: Int = 3,
                      maxShingleDocFreq: Option[Int] = None): DataFrame = {
-    graft.functions.ShingleHashes.register(corpus.sparkSession)
-    def shingled(df: DataFrame, idName: String, nsName: String): DataFrame = df
-      .withColumn("fh", expr(s"shingle_hashes(text, $k)"))
-      .filter(size(col("fh")) > 0)
-      .select(col("doc_id").as(idName),
-        size(col("fh")).cast("long").as(nsName),
-        explode(col("fh")).as("shingle"))
     val (cSh, dSh) = maxShingleDocFreq match {
       case None =>
-        (shingled(corpus, "c_id", "nc"), shingled(exactNovel, "d_id", "nd"))
+        (shinglePostings(corpus, k, "c_id", "nc"),
+          shinglePostings(exactNovel, k, "d_id", "nd"))
       case Some(cap) =>
         // hot shingles measured over BOTH sides so the capped universe
         // is consistent for the jaccard sizes below; under the cap the
         // carried count must cover the CAPPED universe — adjusted by
         // [[capAdjust]]'s dropped-row subtract (capped path only)
-        val all = shingled(corpus, "c_id", "nc")
-          .unionByName(shingled(exactNovel, "c_id", "nc"))
-        val hot = all.groupBy("shingle").agg(count(lit(1)).as("df"))
-          .filter(col("df") > cap).select("shingle")
-        (capAdjust(shingled(corpus, "c_id", "nc"), hot, "c_id", "nc"),
-          capAdjust(shingled(exactNovel, "d_id", "nd"), hot, "d_id", "nd"))
+        val all = shinglePostings(corpus, k, "c_id", "nc")
+          .unionByName(shinglePostings(exactNovel, k, "c_id", "nc"))
+        val hot = hotShingles(all, cap)
+        (capAdjust(shinglePostings(corpus, k, "c_id", "nc"), hot, "c_id", "nc"),
+          capAdjust(shinglePostings(exactNovel, k, "d_id", "nd"), hot, "d_id", "nd"))
     }
     cSh.join(dSh, "shingle")
       .groupBy("c_id", "d_id")
@@ -763,18 +746,22 @@ object Dedup {
     DedupIndex(indexHashes(docs), shingles, docFreqs(shingles))
   }
 
+  /** The layout [[writeDedupIndex]] gives the index of `docs`: each
+    * table's name and schema, from analysis alone (no Spark job). A
+    * build-once index keyed by it is rebuilt whenever the layout
+    * changes, instead of being read as the current one. */
+  private[graft] def indexLayout(docs: DataFrame, k: Int): String = {
+    val ix = buildDedupIndex(docs, k)
+    Seq("hashes" -> ix.hashes, "shingles" -> ix.shingles, "dfs" -> ix.dfs)
+      .map { case (table, df) => s"$table:${df.schema.catalogString}" }
+      .mkString("|")
+  }
+
   private def indexHashes(docs: DataFrame): DataFrame =
     docs.select(md5(col("text")).as("content_md5")).distinct()
 
-  private def indexShingles(docs: DataFrame, k: Int): DataFrame = {
-    graft.functions.ShingleHashes.register(docs.sparkSession)
-    docs
-      .withColumn("fh", expr(s"shingle_hashes(text, $k)"))
-      .filter(size(col("fh")) > 0)
-      .select(col("doc_id").as("c_id"),
-        size(col("fh")).cast("long").as("nc"),
-        explode(col("fh")).as("shingle"))
-  }
+  private def indexShingles(docs: DataFrame, k: Int): DataFrame =
+    shinglePostings(docs, k, "c_id", "nc")
 
   private def docFreqs(shingles: DataFrame): DataFrame =
     shingles.groupBy("shingle").agg(count(lit(1)).as("df"))
@@ -865,7 +852,6 @@ object Dedup {
                         maxShingleDocFreq: Option[Int] = None,
                         releaseEagerly: Boolean = true,
                         containmentPermille: Option[Long] = None): DataFrame = {
-    graft.functions.ShingleHashes.register(delta.sparkSession)
     val exactNovel = delta
       .withColumn("content_md5", md5(col("text")))
       .join(index.hashes, Seq("content_md5"), "left_anti")
@@ -873,12 +859,7 @@ object Dedup {
       // same persist rationale as deltaDedup: full-text frame with two
       // consumers; keep lineage, spill not pin; released by novelOnly
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dShAll = exactNovel
-      .withColumn("fh", expr(s"shingle_hashes(text, $k)"))
-      .filter(size(col("fh")) > 0)
-      .select(col("doc_id").as("d_id"),
-        size(col("fh")).cast("long").as("nd"),
-        explode(col("fh")).as("shingle"))
+    val dShAll = shinglePostings(exactNovel, k, "d_id", "nd")
     val (cSh, dSh) = maxShingleDocFreq match {
       case None => (index.shingles, dShAll)
       case Some(cap) =>
@@ -941,11 +922,8 @@ object Dedup {
     * as [[ngramJaccardPairs]]). */
   def contamination(docs: DataFrame, benchmark: DataFrame,
                     k: Int = 3, minOverlap: Int = 3): DataFrame = {
-    graft.functions.ShingleHashes.register(docs.sparkSession)
-    def shingled(df: DataFrame) = df
-      .withColumn("fh", expr(s"shingle_hashes(text, $k)"))
-      .filter(size(col("fh")) > 0)
-      .select(col("doc_id"), explode(col("fh")).as("shingle"))
+    def shingled(df: DataFrame) =
+      shingleSets(df, k).select(col("doc_id"), explode(col("fh")).as("shingle"))
     val benchSh = shingled(benchmark).select("shingle").distinct()
     shingled(docs)
       .join(broadcast(benchSh), Seq("shingle"))
@@ -961,10 +939,7 @@ object Dedup {
     * k-gram features keep the space discriminative. */
   def withSimHash(docs: DataFrame, k: Int = 3): DataFrame = {
     graft.functions.SimHash64.register(docs.sparkSession)
-    graft.functions.ShingleHashes.register(docs.sparkSession)
-    docs
-      .withColumn("fh", expr(s"shingle_hashes(text, $k)"))
-      .filter(size(col("fh")) > 0)
+    shingleSets(docs, k)
       .withColumn("simhash", expr("simhash64(fh)"))
       .drop("fh")
   }
@@ -978,10 +953,7 @@ object Dedup {
       .withColumn("bands", expr(
         "transform(sequence(0, 3), b -> (shiftright(simhash, b * 16) & 65535))"))
       .select(col("doc_id"), col("simhash"), posexplode(col("bands")).as(Seq("band_id", "band_val")))
-    banded.as("a").join(banded.as("b"),
-        col("a.band_id") === col("b.band_id") &&
-        col("a.band_val") === col("b.band_val") &&
-        col("a.doc_id") < col("b.doc_id"))
+    PairPack.pairsFromPostings(banded, Seq("band_id", "band_val"), "doc_id")
       .select(
         col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
         col("a.simhash").as("s1"), col("b.simhash").as("s2"))

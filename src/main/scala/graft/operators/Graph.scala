@@ -647,11 +647,10 @@ object Graph {
     // ([[graft.operators.PairPack]]; guide §2.3 "narrower types").
     // The probe runs once per projection build and the memoized
     // coengShared22 frame is that build's only query-path caller.
-    val cands = graft.operators.PairPack.distinctPairs(
-      prefixes.as("a").join(prefixes.as("b"),
-          col("a.k") === col("b.k") && col("a.user_id") < col("b.user_id"))
+    val cands = PairPack.distinctPairs(
+      PairPack.pairsFromPostings(prefixes, Seq("k"), "user_id")
         .select(col("a.user_id").as("u"), col("b.user_id").as("v")),
-      "u", "v", packed = graft.operators.PairPack.fits32(events, "user_id"))
+      "u", "v", packed = PairPack.fits32(events, "user_id"))
     // r21: key arrays re-sorted BY VALUE once per user (tiny frame, ~
     // |users| rows) so verification is one allocation-free merge per
     // candidate pair (`sorted_intersect_count`) instead of

@@ -151,10 +151,7 @@ object Multimodal {
         posexplode(array(combos.map { c =>
           array(c.map(slice): _*)
         }: _*)).as(Seq("key_id", "key_val")))
-    banded.as("a").join(banded.as("b"),
-        col("a.key_id") === col("b.key_id") &&
-        col("a.key_val") === col("b.key_val") &&
-        col("a.asset_id") < col("b.asset_id"))
+    PairPack.pairsFromPostings(banded, Seq("key_id", "key_val"), "asset_id")
       .select(col("a.asset_id").as("id1"), col("b.asset_id").as("id2"),
         col("a.ahash").as("h1"), col("b.ahash").as("h2"))
       .dropDuplicates("id1", "id2")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** r22: packed-BIGINT pair dedup (guide §2.3 "narrower types").
@@ -18,6 +18,10 @@ import org.apache.spark.sql.functions._
   * non-long or past 2^32 keep the two-column form: identical output
   * either way (Round22Spec pins both paths and the sign-bit
   * boundary).
+  *
+  * [[pairsFromPostings]] is the pair generator those dedups sit on:
+  * the one self-join every posting-list pair operator (shingle,
+  * band, bucket, term, key and block postings) routes through.
   */
 object PairPack {
 
@@ -47,4 +51,18 @@ object PairPack {
         .select(shiftrightunsigned(col("_uv"), 32).as(aCol),
           col("_uv").bitwiseAND(lit(Mask32)).as(bCol))
     else pairs.select(col(aCol), col(bCol)).distinct()
+
+  /** Every pair of `postings` rows that agree on all of `keys` with
+    * `a.id < b.id` (and every `extra` predicate): the self-join under
+    * each posting-list pair operator. An id pair meets once per shared
+    * posting, so callers aggregate, dedup or verify the meet rows
+    * themselves; both sides' columns stay reachable as `a.<c>` /
+    * `b.<c>`. The condition folds left in key, id, extra order. */
+  def pairsFromPostings(postings: DataFrame, keys: Seq[String], id: String,
+                        extra: Column*): DataFrame = {
+    def side(s: String, c: String) = col(s"$s.$c")
+    val cond = (keys.map(k => side("a", k) === side("b", k)) ++
+      ((side("a", id) < side("b", id)) +: extra)).reduce(_ && _)
+    postings.as("a").join(postings.as("b"), cond)
+  }
 }

@@ -174,10 +174,7 @@ object Similarity {
     // ids-only through the explode + self-join (see annTopK)
     val b = corpus.select(col(idCol).as("id"),
       posexplode(bucketsOf(vecCol, tables, bits, seed)).as(Seq("table_id", "bucket")))
-    val pairs = b.as("a").join(b.as("b"),
-        col("a.table_id") === col("b.table_id") &&
-        col("a.bucket") === col("b.bucket") &&
-        col("a.id") < col("b.id"))
+    val pairs = PairPack.pairsFromPostings(b, Seq("table_id", "bucket"), "id")
       .select(col("a.id").as("d1"), col("b.id").as("d2"))
       .dropDuplicates("d1", "d2")
     val v1 = corpus.select(col(idCol).as("d1"), col(vecCol).as("v1"))
@@ -270,9 +267,7 @@ object Similarity {
         explode(array((0 until bands).map(b =>
           struct(lit(b).cast("long").as("band"), bandBucket(b).as("bkt"))): _*)).as("e"))
       .select(col("vid"), col("e.band").as("band"), col("e.bkt").as("bkt"))
-    val cand = sigs.as("a").join(sigs.as("b"),
-        col("a.band") === col("b.band") && col("a.bkt") === col("b.bkt") &&
-        col("a.vid") < col("b.vid"))
+    val cand = PairPack.pairsFromPostings(sigs, Seq("band", "bkt"), "vid")
       .select(col("a.vid").as("d1"), col("b.vid").as("d2"))
       .dropDuplicates("d1", "d2")
     val side1 = coded.select(col(idCol).as("d1"), col("c").as("c1"), col("ss").as("ss1"))
@@ -365,9 +360,7 @@ object Similarity {
         posexplode(call_function("srp_buckets",
           col(vecCol), lit(tables), lit(bits), lit(seed)))
           .as(Seq("band", "bkt")))
-    val cand = sigs.as("a").join(sigs.as("b"),
-        col("a.band") === col("b.band") && col("a.bkt") === col("b.bkt") &&
-        col("a.vid") < col("b.vid"))
+    val cand = PairPack.pairsFromPostings(sigs, Seq("band", "bkt"), "vid")
       .select(col("a.vid").as("d1"), col("b.vid").as("d2"))
       .dropDuplicates("d1", "d2")
     val side1 = coded.select(col(idCol).as("d1"), col("c").as("c1"), col("ss").as("ss1"))

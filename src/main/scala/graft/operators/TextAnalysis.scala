@@ -613,9 +613,7 @@ object TextAnalysis {
       .filter(col("w") > 0)
       .select("doc_id", "term", "w")
     val ss = w.groupBy("doc_id").agg(sum(col("w") * col("w")).as("ss"))
-    val pairs = w.as("a")
-      .join(w.as("b"),
-        col("a.term") === col("b.term") && col("a.doc_id") < col("b.doc_id"))
+    val pairs = PairPack.pairsFromPostings(w, Seq("term"), "doc_id")
       .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .agg(count(lit(1)).as("n_common"),
         sum(col("a.w") * col("b.w")).as("dot"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{AsOf, Graph, Maintenance, Multimodal, Sketches}
+import graft.operators.{AsOf, Graph, Maintenance, Multimodal, PairPack, Sketches}
 import graft.streaming.EventStreams
 
 /** Event-time window inventory over `events`, plus multimodal
@@ -934,9 +934,7 @@ object EventQueries {
     val tu = events
       .select(col("event_type"), col("user_id")).distinct()
     val sizes = tu.groupBy("event_type").agg(count(lit(1)).as("n"))
-    tu.as("a").join(tu.as("b"),
-        col("a.user_id") === col("b.user_id") &&
-          col("a.event_type") < col("b.event_type"))
+    PairPack.pairsFromPostings(tu, Seq("user_id"), "event_type")
       .groupBy(col("a.event_type").as("t1"), col("b.event_type").as("t2"))
       .agg(count(lit(1)).as("n_common"))
       .join(broadcast(sizes.select(col("event_type").as("t1"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{Dedup, Graph, Sharding, TextAnalysis}
+import graft.operators.{Dedup, Graph, PairPack, Sharding, TextAnalysis}
 
 /** Text-analysis / dedup operator inventory over the `documents`
   * fixture, oracle-paired where the semantics are SQL-expressible.
@@ -408,11 +408,12 @@ object TextQueries {
     * file set — ns granularity (ADVICE r17) so a same-size fixture
     * regenerated within the same wall-clock second still changes the
     * signature — so a regenerated fixture can never serve a stale
-    * index; staging + atomic rename keeps concurrent builders
-    * (parallel local runs) correct — the loser's staging dir is
-    * discarded. Build-path runs also sweep crashed builders' orphaned
-    * `.stage-<pid>` dirs and week-old index dirs, bounding tmpdir
-    * accumulation. */
+    * index, and the index layout ([[Dedup.indexLayout]]), so an index
+    * an older writer left is never read as the current one. Staging +
+    * atomic rename keeps concurrent builders (parallel local runs)
+    * correct — the loser's staging dir is discarded. Build-path runs
+    * also sweep crashed builders' orphaned `.stage-<pid>` dirs and
+    * week-old index dirs, bounding tmpdir accumulation. */
   private def q105IndexPath(spark: SparkSession, dir: String): String =
     q105IndexLock.synchronized {
       def walk(f: java.io.File): Seq[java.io.File] =
@@ -421,9 +422,13 @@ object TextQueries {
       def nsMtime(f: java.io.File): Long =
         java.nio.file.Files.getLastModifiedTime(f.toPath)
           .to(java.util.concurrent.TimeUnit.NANOSECONDS)
+      val corpus = docsRebalanced(spark, dir)
+        .filter(col("doc_id") < 1000)
+        .filter(pmod(col("doc_id"), lit(5)) =!= 0)
       val sigSrc = walk(new java.io.File(s"$dir/documents.parquet"))
         .map(f => s"${f.getPath}:${f.length}:${nsMtime(f)}")
-        .mkString("|") + "|k=3|id_lt=1000|corpus=mod5ne0"
+        .mkString("|") + "|k=3|id_lt=1000|corpus=mod5ne0|" +
+        Dedup.indexLayout(corpus, k = 3)
       val sig = java.security.MessageDigest.getInstance("MD5")
         .digest(sigSrc.getBytes("UTF-8")).map("%02x".format(_))
         .mkString.take(16)
@@ -433,26 +438,24 @@ object TextQueries {
         sweepStaleIndexArtifacts(root.getParentFile)
         val staging = new java.io.File(root.getParentFile,
           root.getName + ".stage-" + ProcessHandle.current.pid)
-        val corpus = docsRebalanced(spark, dir)
-          .filter(col("doc_id") < 1000)
-          .filter(pmod(col("doc_id"), lit(5)) =!= 0)
         Dedup.writeDedupIndex(corpus, staging.getAbsolutePath, k = 3)
         if (!staging.renameTo(root)) {
           // another process published first: keep theirs, drop ours
           if (!root.isDirectory)
             throw new java.io.IOException(
               s"could not publish q105 index at $root")
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) f.listFiles.foreach(rm)
-            f.delete()
-          }
-          rm(staging)
+          rmTree(staging)
         }
       }
       root.getAbsolutePath
     }
 
   private val q105IndexLock = new Object
+
+  private def rmTree(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty).foreach(rmTree)
+    f.delete()
+  }
 
   /** Publish-time sweep (ADVICE r17): a `.stage-<pid>` dir whose owner
     * process is gone is a crashed builder's leak; a `graft_q105_idx_*`
@@ -461,10 +464,6 @@ object TextQueries {
     * mid-sweep reader of a deleted week-old index just rebuilds).
     * Runs only on the build path — steady-state runs never pay it. */
   private def sweepStaleIndexArtifacts(tmp: java.io.File): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty).foreach(rm)
-      f.delete()
-    }
     val stage = """graft_q105_idx_.*\.stage-(\d+)""".r
     val weekMs = 7L * 24 * 3600 * 1000
     val now = System.currentTimeMillis
@@ -472,9 +471,9 @@ object TextQueries {
       f.getName match {
         case stage(pid) =>
           val o = ProcessHandle.of(pid.toLong)
-          if (!(o.isPresent && o.get.isAlive)) rm(f)
+          if (!(o.isPresent && o.get.isAlive)) rmTree(f)
         case n if n.startsWith("graft_q105_idx_") &&
-          now - f.lastModified > weekMs => rm(f)
+          now - f.lastModified > weekMs => rmTree(f)
         case _ => ()
       }
     }
@@ -922,8 +921,7 @@ object TextQueries {
     // join sides in the same job (the q105 lesson, same file) — the
     // eager count is what actually holds the scan count at one
     blocked.count()
-    blocked.as("a").join(blocked.as("b"),
-        col("a.blk") === col("b.blk") && col("a.doc_id") < col("b.doc_id"))
+    PairPack.pairsFromPostings(blocked, Seq("blk"), "doc_id")
       .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
         levenshtein(col("a.head"), col("b.head")).cast("long").as("lev"))
       .filter(col("lev") <= EditMaxDist)

@@ -222,6 +222,23 @@ class CorpusIngestSpec extends AnyFunSuite {
       e.getMessage)
   }
 
+  test("indexLayout names each table writeDedupIndex writes with its schema, jobless") {
+    val docs = fixtureDocs.filter($"doc_id" < 100)
+    var layout = ""
+    val jobs = SparkInternals.jobsStarted(spark.sparkContext, "corpus-ingest-spec-layout") {
+      layout = Dedup.indexLayout(docs, 3)
+    }
+    assert(jobs === 0, s"$jobs jobs")
+    val path = java.nio.file.Files.createTempDirectory("graft_layout").toString + "/ix"
+    Dedup.writeDedupIndex(docs, path, k = 3)
+    val written = Dedup.readDedupIndex(spark, path)
+    val tables = new java.io.File(path).listFiles.filter(_.isDirectory).map(_.getName)
+    assert(layout.split('|').map(_.takeWhile(_ != ':')).sorted === tables.sorted)
+    assert(layout === Seq("hashes" -> written.hashes, "shingles" -> written.shingles,
+      "dfs" -> written.dfs).map { case (t, df) => s"$t:${df.schema.catalogString}" }
+      .mkString("|"))
+  }
+
   test("publishSnapshot: same docs, no provenance column, sorted file layout") {
     val outDir = java.nio.file.Files.createTempDirectory("graft_ingest_snap").toString
     val snapDir = java.nio.file.Files.createTempDirectory("graft_snap").toString + "/v1"
