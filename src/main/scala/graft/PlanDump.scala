@@ -20,14 +20,19 @@ package graft
 object PlanDump {
   /** `plan` with the fields that vary between runs of the same code
     * masked: `plan_id=N`, `RDD[N]` ids, checkpoint call sites
-    * (`at Foo.scala:N`, which move with the code), and expression ids
-    * `#N`, renumbered in order of first appearance (AQE work and
-    * eager checkpoints allocate them in timing-dependent order). */
+    * (`at Foo.scala:N`, which move with the code), JVM object
+    * identities that a plan prints through `toString` (lambda classes
+    * `Foo$$$Lambda$5189/0x00007f2f…@5623354e` and byte arrays
+    * `[B@7447e4aa`), and expression ids `#N`, renumbered in order of
+    * first appearance (AQE work and eager checkpoints allocate them in
+    * timing-dependent order). */
   def canonical(plan: String): String = {
     val masked = plan
       .replaceAll("plan_id=\\d+", "plan_id=N")
       .replaceAll("RDD\\[\\d+\\]", "RDD[N]")
       .replaceAll("at [\\w$.]+\\.scala:\\d+", "at <call site>")
+      .replaceAll("\\$\\$Lambda(\\$\\d+)?/0x\\p{XDigit}+(@\\p{XDigit}+)?", "\\$\\$Lambda<id>")
+      .replaceAll("\\[B@\\p{XDigit}+", "[B@<id>")
     val ids = scala.collection.mutable.HashMap.empty[String, Int]
     "#\\d+".r.replaceAllIn(masked,
       m => "#" + ids.getOrElseUpdate(m.matched, ids.size))

@@ -23,16 +23,21 @@ import graft.ops.tb.{TbPipeline, TbServing}
   * the ISO3 list and `countries.json`, and the map-data rows once for
   * the features, the year and the country count. At endpoint sizes
   * (≤ tens of rows per payload) a refresh is bound by the fixed cost
-  * per Spark job, not by data, so the job count is the cost: 7 collects
-  * (37 Spark jobs) instead of the 19 actions (62 jobs) of a `toJSON`
-  * per payload and a lookup per trends ISO3.
+  * per Spark job, not by data, so the job count is the cost. Over the
+  * pipeline's one-partition rated frame no query plans an exchange;
+  * what remains is one job per collect plus one per broadcast (the
+  * summary's latest year, the coords table). Of the 7 collects,
+  * `countries.json`'s starts none, so the 6 others start 12 Spark jobs,
+  * against 37 over a partitioned rated frame and 62 for the 19 actions
+  * of a `toJSON` per payload and a lookup per trends ISO3.
   *
   * Row order: every array keeps its query's order — trends by year,
   * comparison by `total_cases` descending (the summary's own sort),
   * yearly trends by year, countries by ISO3 — except map-data
-  * `features`, which is the `mapData` join's output order and so
-  * unspecified. Pinning it to `total_cases DESC` would change the
-  * payload bytes; that is left for the maintainers to decide.
+  * `features`, which is the `mapData` join's output order (the
+  * optimizer drops the summary's sort under a join) and so unspecified.
+  * Pinning it to `total_cases DESC` would change the payload bytes;
+  * that is left for the maintainers to decide.
   *
   * Usage: TbServe <tbCsv> <popCsv> <outDir>
   * Writes: map_data.json, trends/<ISO3>.json ×10, comparison.json,
@@ -60,9 +65,11 @@ object TbServe {
     val summary = products.countrySummary
 
     // GET /api/countries (flask:746-754); its rows also give the ISO3
-    // list the trends payloads are keyed by
-    val coordRows = coords.orderBy("iso3")
-      .select(col("iso3"), rowJson(coords)).collect()
+    // list the trends payloads are keyed by. The projection over the
+    // literal table folds into a local relation, so the collect starts
+    // no Spark job; the rows are ordered here rather than by a Spark sort.
+    val coordRows = coords.select(col("iso3"), rowJson(coords)).collect()
+      .sortBy(_.getString(0))
     val countries = s"""{"countries":${jsonArray(coordRows.map(_.getString(1)))}}"""
 
     // GET /api/map-data (flask_api_server.py:539-597): features carry

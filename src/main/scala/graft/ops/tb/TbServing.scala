@@ -30,15 +30,12 @@ object TbServing {
 
   /** GET /api/map-data?year=Y — year point filter + coords enrichment
     * (J2 broadcast) + regional re-aggregation (flask_api_server.py:539-597).
+    * `year = None` filters nothing: the endpoint's default is the latest
+    * year, which is all a `countrySummary` holds.
     * Returns the feature rows; regional stats via [[regionalStats]]. */
-  def mapData(summary: DataFrame, coords: DataFrame, year: Option[Int]): DataFrame = {
-    val y = year.map(v => summary.filter(col("year") === v)).getOrElse {
-      val latest = summary.agg(max("year").as("latest_year"))
-      summary.join(broadcast(latest), col("year") === col("latest_year"))
-        .drop("latest_year")
-    }
-    y.join(broadcast(coords), Seq("iso3"), "left")
-  }
+  def mapData(summary: DataFrame, coords: DataFrame, year: Option[Int]): DataFrame =
+    year.map(v => summary.filter(col("year") === v)).getOrElse(summary)
+      .join(broadcast(coords), Seq("iso3"), "left")
 
   /** Regional stats envelope: sum cases/deaths, mean per-100k rounded
     * (flask_api_server.py:582-590). */

@@ -30,4 +30,22 @@ class PlanDumpSpec extends AnyFunSuite {
     val c = b.replace("Keys [1]: [shingle#77L]", "Keys [1]: [c_id#9L]")
     assert(PlanDump.canonical(a) !== PlanDump.canonical(c))
   }
+
+  test("canonical masks lambda class names a plan prints") {
+    val a = "MapElements graft.ops.EventStreams$$$Lambda$5189/0x00007f2fd1424b40@5623354e, obj#371: int"
+    val b = "MapElements graft.ops.EventStreams$$$Lambda$4977/0x00007f8b1c3a9d58@1b2c3d4e, obj#12: int"
+    assert(PlanDump.canonical(a) === PlanDump.canonical(b))
+    assert(PlanDump.canonical(a) ===
+      "MapElements graft.ops.EventStreams$$$Lambda<id>, obj#0: int")
+    // a lambda of another class still reads as a difference
+    assert(PlanDump.canonical(a) !==
+      PlanDump.canonical(b.replace("EventStreams", "TextQueries")))
+  }
+
+  test("canonical masks byte-array identities a plan prints") {
+    val a = "Filter (bloom_filter_agg#55 might_contain [B@7447e4aa)"
+    val b = "Filter (bloom_filter_agg#9 might_contain [B@4f48e01f)"
+    assert(PlanDump.canonical(a) === PlanDump.canonical(b))
+    assert(PlanDump.canonical(a) === "Filter (bloom_filter_agg#0 might_contain [B@<id>)")
+  }
 }

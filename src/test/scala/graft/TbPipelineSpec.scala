@@ -146,6 +146,21 @@ class TbPipelineSpec extends AnyFunSuite {
     assert(idn.getAs[Int]("cases_rank") == 1)
   }
 
+  test("a second run over rewritten CSVs at the same paths reads the new values") {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("graft_tb_rerun")
+    val tb = Files.copy(Paths.get(TbFixture.tbCsv), dir.resolve("tb.csv"))
+    val pop = Files.copy(Paths.get(TbFixture.popCsv), dir.resolve("population.csv"))
+    def idnCases(): Double = TbPipeline.run(spark, tb.toString, pop.toString)
+      .countrySummary.filter(col("iso3") === "IDN").collect()(0).getAs[Double]("total_cases")
+    assert(idnCases() === 1200.0)
+    val fact = "Indonesia,IDN,SEA,2023,e_inc_num,1200.0"
+    val csv = Files.readString(tb)
+    assert(csv.contains(fact))
+    Files.writeString(tb, csv.replace(fact, "Indonesia,IDN,SEA,2023,e_inc_num,1300.0"))
+    assert(idnCases() === 1300.0)
+  }
+
   test("csv/parquet sink round-trip preserves the summary") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_sink").toString
     TbPipeline.write(fixtureProducts.countrySummary, s"$tmp/summary_pq", "parquet")

@@ -25,8 +25,15 @@ class TbServeSpec extends AnyFunSuite {
   import TbFixture._
 
   /** Spark jobs `writePayloads` may start on the fixture: measured at
-    * 37 (7 collects); 62 with a `toJSON` per payload. */
-  private val MaxPayloadJobs = 37
+    * 12 over a one-partition rated frame (7 collects; `countries.json`'s
+    * starts none, the 6 others 12 jobs); 37 over a partitioned one, 62
+    * with a `toJSON` per payload. */
+  private val MaxPayloadJobs = 12
+
+  /** Spark jobs one refresh may start on the fixture (`TbPipeline.run`,
+    * the three product writes, the quality report and the payloads):
+    * measured at 25; 58 over a partitioned rated frame. */
+  private val MaxRefreshJobs = 25
 
   private lazy val payloads: Map[String, String] = TbServe.writePayloads(
     spark, TbPipeline.run(spark, tbCsv, popCsv),
@@ -145,5 +152,18 @@ class TbServeSpec extends AnyFunSuite {
     }
     assert(jobs > 0 && jobs <= MaxPayloadJobs, s"$jobs jobs")
     assert(cacheState === before)
+  }
+
+  test("one refresh stays within its Spark-job budget") {
+    val out = Files.createTempDirectory("graft_tbserve_refresh").toString
+    val jobs = SparkInternals.jobsStarted(spark.sparkContext, "tbserve-spec-refresh-jobs") {
+      val p = TbPipeline.run(spark, tbCsv, popCsv)
+      TbPipeline.write(p.countrySummary, s"$out/country_summary")
+      TbPipeline.write(p.yearlyTrends, s"$out/yearly_trends")
+      TbPipeline.write(p.countryTrends, s"$out/country_trends", partitionBy = Seq("year"))
+      p.qualityReport.collect()
+      TbServe.writePayloads(spark, p, s"$out/api")
+    }
+    assert(jobs > 0 && jobs <= MaxRefreshJobs, s"$jobs jobs")
   }
 }
