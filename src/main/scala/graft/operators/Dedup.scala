@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Deduplication operators for a training-data pipeline: exact,
   * n-gram Jaccard, MinHash+LSH, and SimHash — all as compositions of
@@ -746,16 +747,25 @@ object Dedup {
     DedupIndex(indexHashes(docs), shingles, docFreqs(shingles))
   }
 
+  /** Each table [[writeDedupIndex]] writes for `docs`, with its
+    * schema, from analysis alone (no Spark job): the one source of both
+    * [[indexLayout]] and the schemas [[readDedupIndex]] reads with. The
+    * schemas do not depend on `k` (a shingle is a long whatever its
+    * width), so the reader takes the default. */
+  private def indexSchemas(docs: DataFrame, k: Int = 3): Seq[(String, StructType)] = {
+    val ix = buildDedupIndex(docs, k)
+    Seq("hashes" -> ix.hashes.schema, "shingles" -> ix.shingles.schema,
+      "dfs" -> ix.dfs.schema)
+  }
+
   /** The layout [[writeDedupIndex]] gives the index of `docs`: each
     * table's name and schema, from analysis alone (no Spark job). A
     * build-once index keyed by it is rebuilt whenever the layout
     * changes, instead of being read as the current one. */
-  private[graft] def indexLayout(docs: DataFrame, k: Int): String = {
-    val ix = buildDedupIndex(docs, k)
-    Seq("hashes" -> ix.hashes, "shingles" -> ix.shingles, "dfs" -> ix.dfs)
-      .map { case (table, df) => s"$table:${df.schema.catalogString}" }
+  private[graft] def indexLayout(docs: DataFrame, k: Int): String =
+    indexSchemas(docs, k)
+      .map { case (table, schema) => s"$table:${schema.catalogString}" }
       .mkString("|")
-  }
 
   private def indexHashes(docs: DataFrame): DataFrame =
     docs.select(md5(col("text")).as("content_md5")).distinct()
@@ -790,18 +800,20 @@ object Dedup {
       .write.mode("overwrite").parquet(at("dfs"))
   }
 
-  /** Read a persisted index back ([[writeDedupIndex]]'s layout; an
-    * index written in leaves reads with the leaf's partition column).
-    * Every consumer scan is a plain parquet read — deterministic
+  /** Read back the index [[writeDedupIndex]] wrote at `path` for docs
+    * shaped like `docs` (an index written in leaves reads with the
+    * leaf's partition column). Each table reads with the schema
+    * [[indexSchemas]] derives, so no Spark job infers one from the
+    * files. Every consumer scan is a plain parquet read — deterministic
     * cost, no persist-layer memory/disk bimodality, and
     * [[deltaDedupIndexed]]'s multiple reads of `shingles` each prune
     * columns at the scan. */
-  def readDedupIndex(spark: org.apache.spark.sql.SparkSession,
-                     path: String): DedupIndex =
-    DedupIndex(
-      spark.read.parquet(s"$path/hashes"),
-      spark.read.parquet(s"$path/shingles"),
-      spark.read.parquet(s"$path/dfs"))
+  def readDedupIndex(docs: DataFrame, path: String): DedupIndex = {
+    val read = indexSchemas(docs).map { case (table, schema) =>
+      table -> docs.sparkSession.read.schema(schema).parquet(s"$path/$table")
+    }.toMap
+    DedupIndex(read("hashes"), read("shingles"), read("dfs"))
+  }
 
   /** The leaves of the index at `path` (see [[writeDedupIndex]]) other
     * than `skip`, the leaf being rewritten (a crash may have left it

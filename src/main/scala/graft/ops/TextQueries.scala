@@ -395,7 +395,7 @@ object TextQueries {
     // MEMORY_AND_DISK persist simulation re-ran the build every pass
     // and its spill/GC timing was the one non-deterministic leg
     // (ARCHITECTURE r16/r17 notes); a parquet read has no such mode.
-    val index = Dedup.readDedupIndex(spark, q105IndexPath(spark, dir))
+    val index = Dedup.readDedupIndex(docs, q105IndexPath(spark, dir))
     Dedup.deltaDedupIndexed(index,
       docs.filter(pmod(col("doc_id"), lit(5)) === 0),
       k = 3, threshold = 0.6, maxShingleDocFreq = Some(2),

@@ -21,6 +21,13 @@ import graft.operators.{Dedup, TextAnalysis}
   * double-appending, so the sink is idempotent under the checkpoint's
   * at-least-once replay. Readers see one corpus table via partition
   * discovery (`spark.read.parquet(outDir/corpus)`).
+  *
+  * Batch sizing: a micro-batch whose planned size (plan statistics, no
+  * Spark job) is at most 256 KB of files is planned on ONE partition,
+  * which removes over a quarter of a small batch's Spark jobs; a larger
+  * batch keeps its scan partitions, because above that size the work,
+  * not per-job overhead, sets its cost ([[OnePartitionMaxBytes]] gives
+  * the measurements). No option sets this.
   */
 object CorpusIngest {
 
@@ -50,59 +57,112 @@ object CorpusIngest {
     // non-novel, and overwrite the partition with an empty set —
     // silent data loss. The exclusion is a partition-pruned filter,
     // so the replayed directories are never even scanned.
-    val existing = readIndexExcluding(spark, outDir, batchId)
-    // The raw batch feeds the clean recipe and the report's input
-    // count; the cleaned batch feeds the LSH candidate and hash
-    // checkpoints, the batch-novel materialization and the report.
-    // Both are pinned so the source files are read once and the clean
-    // recipe (token, quality, language and bigram passes) runs once,
-    // not once per consumer — the CorpusMain shape. The report's
-    // n_cleaned count materializes `cleaned` before any dedup leg
-    // reads it. Batch-sized, so MEMORY_AND_DISK spills rather than
-    // OOMs.
-    val pinned = batch.persist(StorageLevel.MEMORY_AND_DISK)
-    val keepIds = TextAnalysis.cleanCorpus(pinned, minTokens, maxTokens,
-      minQuality, maxTopBigramRatio, langs).select("doc_id")
-    val cleaned = pinned.join(keepIds, Seq("doc_id"), "left_semi")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nCleaned = cleaned.count()
-    // novelty WITHIN the batch first (deltaDedup's documented contract);
-    // persisted because the novelty join, the write, and the report
-    // count all consume it — the LSH+CC chain must not run three times
-    val batchNovel = Dedup.dedupCorpus(cleaned, k, numHashes, bands, threshold)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val novel = existing match {
-      case Some(index) =>
-        Dedup.deltaDedupIndexed(index, batchNovel, k, threshold,
-          maxShingleDocFreq = maxShingleDocFreq,
-          containmentPermille = containmentPermille)
-      case None => batchNovel
+    val existing = readIndexExcluding(batch, outDir, batchId)
+    // Every frame pinned here is released in `finally`, so a batch that
+    // fails (a write, say) leaves nothing in the CacheManager for a
+    // supervised restart to pile onto.
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def pin(df: DataFrame): DataFrame = {
+      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+      held += p
+      p
     }
-    val corpusPath = s"$outDir/corpus/$leaf"
-    novel.write.mode("overwrite").parquet(corpusPath)
-    // Index maintenance: this batch's index leaf is derived from the
-    // DURABLE partition just written (not the in-memory plan), so the
-    // index always mirrors the corpus on disk; overwriting the batch's
-    // leaf keeps the replay idempotence of the corpus writes. Its
-    // `dfs` rows are a PARTIAL (df over this batch's docs only): df is
-    // additive over disjoint doc sets, so the reader sums partials and
-    // the corpus-wide df is never recomputed.
-    val landed = spark.read.parquet(corpusPath)
-    Dedup.writeDedupIndex(landed, s"$outDir/index", k, leaf)
-    // Per-batch observability: the stage funnel an operator watches to
-    // catch drift (a cleaning recipe suddenly rejecting everything, a
-    // batch that is all duplicates). Batch-sized counts, idempotent
-    // like every other per-batch artifact; read the whole funnel with
-    // spark.read.parquet(outDir/reports).
-    import spark.implicits._
-    Seq((pinned.count(), nCleaned, batchNovel.count(), landed.count()))
-      .toDF("n_input", "n_cleaned", "n_batch_novel", "n_novel")
-      .write.mode("overwrite")
-      .parquet(s"$outDir/reports/$leaf")
-    batchNovel.unpersist(blocking = false)
-    cleaned.unpersist(blocking = false)
-    pinned.unpersist(blocking = false)
+    try {
+      // The raw batch feeds the clean recipe and the report's input
+      // count; the cleaned batch feeds the LSH candidate and hash
+      // checkpoints, the batch-novel materialization and the report.
+      // Both are pinned so the source files are read once and the clean
+      // recipe (token, quality, language and bigram passes) runs once,
+      // not once per consumer — the CorpusMain shape. Batch-sized, so
+      // MEMORY_AND_DISK spills rather than OOMs.
+      //
+      // A batch of at most [[OnePartitionMaxBytes]] ([[fitsOnePartition]])
+      // is pinned as ONE partition. The cache then reports
+      // SinglePartition, so the clean recipe, the in-batch dedup and the
+      // novelty joins planned over it need no exchange: at that size the
+      // cost is per-job overhead, not data, and every exchange is a job.
+      // The semi-join below is hinted to a shuffled hash join, which
+      // needs no exchange over two one-partition sides, where a broadcast
+      // join would spend a job broadcasting `keepIds`. A larger batch (an
+      // AvailableNow backlog can make one micro-batch the whole landing
+      // directory) keeps its scan partitions and the partitioned plan.
+      //
+      // Each pinned frame is built by ONE action before any plan reads
+      // it twice: AQE gives every read of a not-yet-built cache its own
+      // query stage, and each stage builds the same cache as its own
+      // job. The input count (which the report keeps) builds `pinned`;
+      // the n_cleaned count builds `cleaned`.
+      val onePartition = fitsOnePartition(batch)
+      val pinned = pin(if (onePartition) batch.coalesce(1) else batch)
+      val nInput = pinned.count()
+      val keepIds = TextAnalysis.cleanCorpus(pinned, minTokens, maxTokens,
+        minQuality, maxTopBigramRatio, langs).select("doc_id")
+      val cleaned = pin(pinned.join(
+        if (onePartition) keepIds.hint("shuffle_hash") else keepIds,
+        Seq("doc_id"), "left_semi"))
+      val nCleaned = cleaned.count()
+      // novelty WITHIN the batch first (deltaDedup's documented contract);
+      // persisted because the novelty join, the write, and the report
+      // count all consume it — the LSH+CC chain must not run three times
+      val batchNovel = pin(Dedup.dedupCorpus(cleaned, k, numHashes, bands, threshold))
+      val novel = existing match {
+        case Some(index) =>
+          Dedup.deltaDedupIndexed(index, batchNovel, k, threshold,
+            maxShingleDocFreq = maxShingleDocFreq,
+            containmentPermille = containmentPermille)
+        case None => batchNovel
+      }
+      val corpusPath = s"$outDir/corpus/$leaf"
+      novel.write.mode("overwrite").parquet(corpusPath)
+      // Index maintenance: this batch's index leaf is derived from the
+      // DURABLE partition just written (not the in-memory plan), so the
+      // index always mirrors the corpus on disk; overwriting the batch's
+      // leaf keeps the replay idempotence of the corpus writes. Its
+      // `dfs` rows are a PARTIAL (df over this batch's docs only): df is
+      // additive over disjoint doc sets, so the reader sums partials and
+      // the corpus-wide df is never recomputed. Read with the schema
+      // just written, so no job infers it, and as one partition when the
+      // batch was (its novel docs are fewer), so the index's distinct
+      // hashes and the report's count need no exchange.
+      val written = spark.read.schema(novel.schema).parquet(corpusPath)
+      val landed = if (onePartition) written.coalesce(1) else written
+      Dedup.writeDedupIndex(landed, s"$outDir/index", k, leaf)
+      // Per-batch observability: the stage funnel an operator watches to
+      // catch drift (a cleaning recipe suddenly rejecting everything, a
+      // batch that is all duplicates). Batch-sized counts, idempotent
+      // like every other per-batch artifact; read the whole funnel with
+      // spark.read.parquet(outDir/reports).
+      import spark.implicits._
+      Seq((nInput, nCleaned, batchNovel.count(), landed.count()))
+        .toDF("n_input", "n_cleaned", "n_batch_novel", "n_novel")
+        .write.mode("overwrite")
+        .parquet(s"$outDir/reports/$leaf")
+    } finally held.foreach(_.unpersist(blocking = false))
   }
+
+  /** Largest planned batch size — plan statistics, i.e. the files'
+    * on-disk (compressed) bytes — that [[processBatch]] plans on one
+    * partition. Below it a batch's cost is per-job overhead; above it the
+    * work is, and one partition runs it on one core. Measured on 4 vCPUs
+    * with docs shaped like the sf0.1 documents (about 115 on-disk bytes
+    * a doc), wall time of a first batch and of a second batch that
+    * probes the first one's index, one partition vs scan partitions:
+    * 259 KB (2,200 docs) 4.1–4.6 vs 5.2–5.5 s and 5.7 vs 5.9–6.6 s;
+    * 508 KB about even; 993 KB (8,700 docs) no slower on the first batch but
+    * 15.4–16.6 vs 11.6–12.4 s on the second; 3.9 MB 16.6 vs 19.3 s and
+    * 286 vs 95 s. Spark's own file bounds sit above the crossover:
+    * `spark.sql.files.openCostInBytes` (4 MB), the size below which its
+    * split rule never cuts a file, and `maxPartitionBytes` (128 MB). */
+  private[graft] val OnePartitionMaxBytes: Long = 256L << 10
+
+  /** Whether `batch`'s planned size is at most [[OnePartitionMaxBytes]].
+    * Plan statistics, so no Spark job. A foreachBatch frame carries its
+    * file source's statistics (`CorpusIngestSpec` streams a wave through
+    * [[start]] and checks that it takes the one-partition plan); a plan
+    * Spark cannot size reads as `spark.sql.defaultSizeInBytes`
+    * (Long.MaxValue by default) and keeps its partitions. */
+  private[graft] def fitsOnePartition(batch: DataFrame): Boolean =
+    batch.queryExecution.optimizedPlan.stats.sizeInBytes <= OnePartitionMaxBytes
 
   /** Publish a read-optimized snapshot of the ingest corpus: the
     * append-oriented `ingest_batch` layout is replay-idempotent but
@@ -150,19 +210,21 @@ object CorpusIngest {
       else Some(df)
     }
 
-  /** The materialized dedup index as of BEFORE `batchId` (see the
-    * replay note in [[processBatch]]), or None before another batch
-    * has landed. Each table reads through partition discovery with
-    * the batch's own leaf filtered out, and the per-batch `dfs`
-    * partials are summed into corpus-wide document frequencies. Throws
-    * IllegalStateException on an index from before r7
-    * ([[Dedup.indexLeaves]]). */
-  private[graft] def readIndexExcluding(spark: SparkSession, outDir: String,
+  /** The materialized dedup index of docs shaped like `docs` as of
+    * BEFORE `batchId` (see the replay note in [[processBatch]]), or
+    * None before another batch has landed. Each table reads through
+    * partition discovery, with the schema the index writer derives for
+    * `docs` (no Spark job), and the batch's own leaf filtered out; the
+    * per-batch `dfs` partials are summed into corpus-wide document
+    * frequencies. Throws IllegalStateException on an index from before
+    * r7 ([[Dedup.indexLeaves]]). */
+  private[graft] def readIndexExcluding(docs: DataFrame, outDir: String,
                                         batchId: Long): Option[Dedup.DedupIndex] = {
     val path = s"$outDir/index"
-    if (Dedup.indexLeaves(spark, path, skip = s"ingest_batch=$batchId").isEmpty) None
+    if (Dedup.indexLeaves(docs.sparkSession, path,
+        skip = s"ingest_batch=$batchId").isEmpty) None
     else {
-      val idx = Dedup.readDedupIndex(spark, path)
+      val idx = Dedup.readDedupIndex(docs, path)
       def excluding(t: DataFrame) =
         t.filter(col("ingest_batch") =!= batchId).drop("ingest_batch")
       Some(Dedup.DedupIndex(excluding(idx.hashes), excluding(idx.shingles),
@@ -291,13 +353,13 @@ object CorpusIngest {
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val ab = archiveBatchDocs(batch, None, maxMemberBytes,
           maxTotalBytes, sliced)
-        ab.quarantine.write.mode("overwrite")
-          .parquet(s"$outDir/quarantine/ingest_batch=$id")
-        processBatch(ab.docs, outDir, id, minTokens, maxTokens,
-          minQuality, maxTopBigramRatio, langs, k, numHashes, bands,
-          threshold)
-        ab.pinned.unpersist(blocking = false)
-        () // foreachBatch wants Unit; unpersist returns the frame
+        try {
+          ab.quarantine.write.mode("overwrite")
+            .parquet(s"$outDir/quarantine/ingest_batch=$id")
+          processBatch(ab.docs, outDir, id, minTokens, maxTokens,
+            minQuality, maxTopBigramRatio, langs, k, numHashes, bands,
+            threshold)
+        } finally ab.pinned.unpersist(blocking = false)
       }
       .option("checkpointLocation", s"$outDir/_checkpoint")
       .trigger(trigger)
@@ -357,18 +419,18 @@ object CorpusIngest {
           maxMemberBytes = maxMemberBytes, maxTotalBytes = maxTotalBytes,
           maxSliceBytes = maxSliceBytes, fanoutPartitions = fanoutPartitions)
           .persist(StorageLevel.MEMORY_AND_DISK)
-        recs.filter(col("quarantine").isNotNull)
-          .select("archive", "member_index", "member_offset", "member_clen",
-            "quarantine")
-          .write.mode("overwrite").parquet(s"$outDir/quarantine/ingest_batch=$id")
-        val docs = recs.filter(col("quarantine").isNull)
-          .select(xxhash64(col("archive"), col("member_offset")).as("doc_id"),
-            col("text"), col("archive").as("source"))
-        processBatch(docs, outDir, id, minTokens, maxTokens,
-          minQuality, maxTopBigramRatio, langs, k, numHashes, bands,
-          threshold)
-        recs.unpersist(blocking = false)
-        ()
+        try {
+          recs.filter(col("quarantine").isNotNull)
+            .select("archive", "member_index", "member_offset", "member_clen",
+              "quarantine")
+            .write.mode("overwrite").parquet(s"$outDir/quarantine/ingest_batch=$id")
+          val docs = recs.filter(col("quarantine").isNull)
+            .select(xxhash64(col("archive"), col("member_offset")).as("doc_id"),
+              col("text"), col("archive").as("source"))
+          processBatch(docs, outDir, id, minTokens, maxTokens,
+            minQuality, maxTopBigramRatio, langs, k, numHashes, bands,
+            threshold)
+        } finally recs.unpersist(blocking = false)
       }
       .option("checkpointLocation", s"$outDir/_checkpoint")
       .trigger(trigger)

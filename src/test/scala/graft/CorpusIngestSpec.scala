@@ -19,12 +19,26 @@ class CorpusIngestSpec extends AnyFunSuite {
   private val docSchema = fixtureDocs.schema
 
   /** Spark jobs one non-first [[CorpusIngest.processBatch]] may start
-    * on the fixture: measured at 67; 71 while the index kept a per-doc
-    * counts table and the index read probed its hash set for emptiness,
-    * and 109 when each of the cleaned batch's four consumers re-ran
-    * the clean recipe and the index read inferred each shingle
-    * directory's schema with a Spark job. */
-  private val MaxBatchJobs = 67
+    * on the fixture: measured at 47 to 50 with the batch pinned as one
+    * partition, each pinned frame built by one action and the index read
+    * with the writer's schemas. The count moves from run to run because
+    * AQE submits a job per query stage it materializes, and how the
+    * concurrent stages fall into jobs depends on timing; the budget is 2
+    * over the highest count seen. 67 before the one-partition plan, 71
+    * while the index kept a per-doc counts table and the index read
+    * probed its hash set for emptiness, and 109 when each of the cleaned
+    * batch's four consumers re-ran the clean recipe and the index read
+    * inferred each shingle directory's schema with a Spark job. */
+  private val MaxBatchJobs = 52
+
+  /** Spark jobs the first batch (no index yet) may start on the
+    * fixture: measured at 38 to 39 (the same timing spread), 2 over. The
+    * scan-partitioned plan starts 54 on the same wave. */
+  private val MaxFirstBatchJobs = 41
+
+  /** Persisted RDDs that are not checkpoints: the frames a batch pins. */
+  private def cachedNonCkpt() = spark.sparkContext.getPersistentRDDs
+    .filter { case (_, r) => !r.isCheckpointed }.keySet
 
   /** Land a wave as ONE parquet file directly in the landing dir (the
     * file stream source lists files, not nested write directories). */
@@ -179,7 +193,7 @@ class CorpusIngestSpec extends AnyFunSuite {
     // partials and the carried nc must equal a fresh build over the
     // accumulated corpus exactly
     def assertMirrors(): Unit = {
-      val idx = CorpusIngest.readIndexExcluding(spark, outDir, 99L).get
+      val idx = CorpusIngest.readIndexExcluding(fixtureDocs, outDir, 99L).get
       val rebuilt = Dedup.buildDedupIndex(
         CorpusIngest.readCorpus(spark, s"$outDir/corpus").get)
       assert(idx.hashes.collect().map(_.getString(0)).toSet ==
@@ -231,11 +245,12 @@ class CorpusIngestSpec extends AnyFunSuite {
     assert(jobs === 0, s"$jobs jobs")
     val path = java.nio.file.Files.createTempDirectory("graft_layout").toString + "/ix"
     Dedup.writeDedupIndex(docs, path, k = 3)
-    val written = Dedup.readDedupIndex(spark, path)
     val tables = new java.io.File(path).listFiles.filter(_.isDirectory).map(_.getName)
     assert(layout.split('|').map(_.takeWhile(_ != ':')).sorted === tables.sorted)
-    assert(layout === Seq("hashes" -> written.hashes, "shingles" -> written.shingles,
-      "dfs" -> written.dfs).map { case (t, df) => s"$t:${df.schema.catalogString}" }
+    // the schemas the files carry, inferred here: readDedupIndex reads
+    // with the layout's schemas, so this is what keeps them honest
+    assert(layout === Seq("hashes", "shingles", "dfs")
+      .map(t => s"$t:${spark.read.parquet(s"$path/$t").schema.catalogString}")
       .mkString("|"))
   }
 
@@ -273,30 +288,31 @@ class CorpusIngestSpec extends AnyFunSuite {
   }
 
   test("the index read starts as many Spark jobs after 4 batches as after 2") {
-    // each index table is one partition-discovering read; a
-    // schema-inferring spark.read per batch directory would add one
-    // job for every batch already ingested
+    // none: each index table is one partition-discovering read with the
+    // schema the writer derives. A schema-inferring read would start a
+    // job per table, and a read per batch directory one per batch.
     val outDir = java.nio.file.Files.createTempDirectory("graft_ingest_flat").toString
     def ingest(b: Long): Unit =
       CorpusIngest.processBatch(fixtureDocs.filter($"doc_id" % 4 === b), outDir, b)
     def readJobs(): Int =
       SparkInternals.jobsStarted(spark.sparkContext, "corpus-ingest-spec-index-read") {
-        assert(CorpusIngest.readIndexExcluding(spark, outDir, 99L).isDefined)
+        assert(CorpusIngest.readIndexExcluding(fixtureDocs, outDir, 99L).isDefined)
       }
     Seq(0L, 1L).foreach(ingest)
     val afterTwo = readJobs()
     Seq(2L, 3L).foreach(ingest)
     val afterFour = readJobs()
-    assert(afterTwo > 0 && afterFour === afterTwo,
+    assert(afterTwo === 0 && afterFour === 0,
       s"$afterTwo jobs after 2 batches, $afterFour after 4")
   }
 
   test("a non-first batch stays within its Spark-job budget and releases what it persists") {
     val sc = spark.sparkContext
-    def cachedNonCkpt() =
-      sc.getPersistentRDDs.filter { case (_, r) => !r.isCheckpointed }.keySet
     val outDir = java.nio.file.Files.createTempDirectory("graft_ingest_jobs").toString
-    CorpusIngest.processBatch(fixtureDocs.filter($"doc_id" < 200), outDir, 0L)
+    val first = SparkInternals.jobsStarted(sc, "corpus-ingest-spec-first") {
+      CorpusIngest.processBatch(fixtureDocs.filter($"doc_id" < 200), outDir, 0L)
+    }
+    assert(first > 0 && first <= MaxFirstBatchJobs, s"$first jobs in the first batch")
     val before = cachedNonCkpt()
     val jobs = SparkInternals.jobsStarted(sc, "corpus-ingest-spec-batch") {
       CorpusIngest.processBatch(fixtureDocs.filter($"doc_id" >= 200), outDir, 1L)
@@ -304,5 +320,108 @@ class CorpusIngestSpec extends AnyFunSuite {
     assert(jobs > 0 && jobs <= MaxBatchJobs, s"$jobs jobs")
     assert((cachedNonCkpt() -- before).isEmpty,
       "processBatch must unpersist the frames it pins")
+  }
+
+  test("a batch whose write fails releases every frame it pinned") {
+    val outDir = java.nio.file.Files.createTempDirectory("graft_ingest_fail").toString
+    CorpusIngest.processBatch(fixtureDocs.filter($"doc_id" < 200), outDir, 0L)
+    // a regular file where the reports directory should be: batch 1
+    // pins, dedups and writes its corpus and index leaves, then fails
+    // on the report write
+    val reports = new java.io.File(s"$outDir/reports")
+    def rmrf(p: java.io.File): Unit = {
+      if (p.isDirectory) p.listFiles().foreach(rmrf)
+      p.delete()
+    }
+    rmrf(reports)
+    assert(reports.createNewFile())
+    val before = cachedNonCkpt()
+    intercept[Exception] {
+      CorpusIngest.processBatch(fixtureDocs.filter($"doc_id" >= 200), outDir, 1L)
+    }
+    assert(new java.io.File(s"$outDir/corpus/ingest_batch=1").isDirectory,
+      "the failure must come after the batch pinned its frames")
+    assert((cachedNonCkpt() -- before).isEmpty,
+      "a failed batch must unpersist the frames it pinned")
+  }
+
+  /** Run `body` with every file source's planned size scaled by
+    * `factor` (`spark.sql.sources.fileCompressionFactor`; unscaled if
+    * None), then restore it: a scaled batch plans above
+    * [[CorpusIngest.OnePartitionMaxBytes]] and keeps its scan partitions. */
+  private def withFileSizeScaled[T](factor: Option[Double])(body: => T): T = {
+    val key = "spark.sql.sources.fileCompressionFactor"
+    val saved = spark.conf.getOption(key)
+    factor.foreach(f => spark.conf.set(key, f.toString))
+    try body finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  /** A factor that lifts a batch of `bytes` over the one-partition bound. */
+  private def splitFactor(bytes: Long): Option[Double] =
+    Some(math.ceil(2.0 * CorpusIngest.OnePartitionMaxBytes / bytes.toDouble))
+
+  test("the one-partition plan ingests exactly what the scan-partitioned plan ingests") {
+    // The same four waves, each landed as one file, twice: at their own
+    // size each is pinned as one partition; with the file statistics
+    // scaled past the bound each keeps its scan partitions. A frame keeps
+    // the statistics it was first planned with, so each run reads the
+    // waves afresh under its own factor.
+    val landing = java.nio.file.Files.createTempDirectory("graft_ingest_waves").toString
+    val batches = 0L to 3L
+    batches.foreach(b =>
+      landFile(fixtureDocs.filter($"doc_id" % 4 === b), landing, s"wave$b.parquet"))
+    val size = batches.map(b => new java.io.File(landing, s"wave$b.parquet").length).min
+    def ingest(factor: Option[Double]): (String, Int) = withFileSizeScaled(factor) {
+      val outDir = java.nio.file.Files.createTempDirectory("graft_ingest_gate").toString
+      val waves = batches.map(b => b -> spark.read.parquet(s"$landing/wave$b.parquet"))
+      waves.foreach { case (_, wave) =>
+        assert(CorpusIngest.fitsOnePartition(wave) === factor.isEmpty) }
+      val jobs = SparkInternals.jobsStarted(spark.sparkContext, "corpus-ingest-spec-gate") {
+        waves.foreach { case (b, wave) => CorpusIngest.processBatch(wave, outDir, b) }
+      }
+      (outDir, jobs)
+    }
+    val (pinnedDir, pinnedJobs) = ingest(None)
+    val (splitDir, splitJobs) = ingest(splitFactor(size))
+    assert(pinnedJobs < splitJobs,
+      s"the one-partition plan starts $pinnedJobs jobs, the split plan $splitJobs")
+    for (table <- Seq("corpus", "reports", "index/hashes", "index/shingles", "index/dfs")) {
+      val a = spark.read.parquet(s"$pinnedDir/$table")
+      val b = spark.read.parquet(s"$splitDir/$table")
+      assert(a.count() > 0 && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
+        s"$table differs between the two plans")
+    }
+  }
+
+  test("a wave streamed through start takes the one-partition plan") {
+    // foreachBatch hands processBatch a LogicalRDD over the file
+    // source's scan, so the gate sees only the statistics it carries.
+    // The two plans differ in Spark jobs, so the stream's own job group
+    // (its runId) tells which one the batch took.
+    val wave = fixtureDocs.filter($"doc_id" < 200)
+    def streamJobs(split: Boolean): Int = {
+      val inDir = java.nio.file.Files.createTempDirectory("graft_ingest_in").toString
+      val outDir = java.nio.file.Files.createTempDirectory("graft_ingest_out").toString
+      landFile(wave, inDir, "wave.parquet")
+      val bytes = new java.io.File(inDir, "wave.parquet").length
+      var runId = ""
+      val jobs = withFileSizeScaled(if (split) splitFactor(bytes) else None) {
+        SparkInternals.jobsByGroup(spark.sparkContext) {
+          val q = CorpusIngest.start(spark, inDir, outDir, docSchema)
+          runId = q.runId.toString
+          q.awaitTermination()
+        }
+      }
+      assert(spark.read.parquet(s"$outDir/reports").count() === 1, "one batch")
+      jobs.getOrElse(runId, 0)
+    }
+    val pinned = streamJobs(split = false)
+    val split = streamJobs(split = true)
+    info(s"streamed wave: $pinned jobs on one partition, $split on scan partitions")
+    assert(pinned > 0 && pinned <= MaxFirstBatchJobs && pinned < split,
+      s"the streamed wave started $pinned jobs, $split on the scan-partitioned plan")
   }
 }

@@ -252,7 +252,7 @@ class Round17Spec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-idx-rt").toFile
     try {
       Dedup.writeDedupIndex(corpus, dir.getAbsolutePath, k = 3)
-      val read = Dedup.readDedupIndex(spark, dir.getAbsolutePath)
+      val read = Dedup.readDedupIndex(corpus, dir.getAbsolutePath)
       val built = Dedup.buildDedupIndex(corpus, k = 3)
       // every written frame equals the in-memory build as a multiset
       for ((a, b, name) <- Seq(
