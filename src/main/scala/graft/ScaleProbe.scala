@@ -1092,12 +1092,15 @@ object ScaleProbe {
       docs.unpersist(); emb.unpersist()
     }
 
-    // deep-graph CC through the entry point: a 50k-node chain (diameter
-    // 50k) stalls the min-label changed count in round 1, and
-    // connectedComponents hands the graph over to star contraction
+    // deep-graph CC: a 50k-node chain (diameter 50k). Its 49,999 pairs
+    // sit under Graph.LocalMaxEdges, so the entry point labels it on the
+    // driver; the distributed tier stalls the min-label changed count in
+    // round 1 and hands the graph over to star contraction
     val chain = spark.range(1L, 50000L).select($"id".as("d1"), ($"id" - 1).as("d2"))
     val (cc, sec) = timeIt(operators.Graph.connectedComponents(chain).count())
     println(f"cc_50k_chain           $sec%8.2f s   (nodes=$cc)")
+    val (ccd, secd) = timeIt(operators.Graph.distributedComponents(chain).count())
+    println(f"cc_50k_chain_distributed $secd%6.2f s   (nodes=$ccd)")
     spark.stop()
   }
 }

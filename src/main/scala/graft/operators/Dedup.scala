@@ -504,9 +504,12 @@ object Dedup {
     * columns.
     *
     * Each stage is the scale-shaped variant: O(n) hash pass → bucketed
-    * LSH (never O(n²)) → iterative CC ([[Graph.connectedComponents]]
-    * hands deep/adversarial duplicate graphs over to star contraction
-    * once its changed count stops halving). */
+    * LSH (never O(n²)) → connected components
+    * ([[Graph.connectedComponents]]: union-find on the driver for up to
+    * `Graph.LocalMaxEdges` pairs, an ingest batch's few hundred among
+    * them; above that iterative min-label rounds, which hand
+    * deep/adversarial duplicate graphs over to star contraction once
+    * their changed count stops halving). */
   def dedupCorpus(docs: DataFrame, k: Int = 3, numHashes: Int = 16,
                   bands: Option[Int] = None, threshold: Double = 0.6): DataFrame = {
     // exact pass: survivors = smallest doc_id per distinct text. The

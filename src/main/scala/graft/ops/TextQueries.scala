@@ -265,8 +265,9 @@ object TextQueries {
     TextAnalysis.bigramRepetition(Tables.documents(spark, dir))
 
   /** The near-dup component frame (doc_id, component_id) shared by
-    * q39 and q140 — memoized because connectedComponents is an
-    * iterative join chain worth paying once per session. */
+    * q39 and q140 — memoized because connectedComponents runs Spark
+    * jobs (the bounded pair probe, or the iterative join chain above
+    * `Graph.LocalMaxEdges`) worth paying once per session. */
   private def dedupComponents(spark: SparkSession, dir: String): DataFrame =
     Memo.of(spark, s"dedup_components:$dir:k=3:t=0.6") {
       Graph.connectedComponents(

@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.SparkInternals
@@ -11,6 +14,11 @@ class DedupTextSpec extends AnyFunSuite {
   import SparkTestSession.{spark, sf}
 
   private lazy val docs = Tables.documents(spark, sf)
+
+  /** Evaluations of each pair by connected components above
+    * `Graph.LocalMaxEdges`: 2 when the distributed tier was the only
+    * one (its symmetric edges read the pair list twice). */
+  private val PairEvals = 2
 
   test("exact dedup keeps one row per distinct text") {
     val d = Dedup.exactDedup(docs)
@@ -291,7 +299,7 @@ class DedupTextSpec extends AnyFunSuite {
     // a 60-node chain: diameter 59, min-label round 1 changes 58 of its
     // 60 labels, so the labels come from the star-contraction handover
     val chain = (0L until 59L).map(i => (i + 1, i)).toDF("d1", "d2")
-    assert(labels(Graph.connectedComponents(chain)) == allZero)
+    assert(labels(Graph.distributedComponents(chain)) == allZero)
     // star contraction itself still refuses a non-fixpoint labelling
     val e = intercept[IllegalStateException] {
       Graph.connectedComponentsStars(chain, maxIter = 1).collect()
@@ -311,7 +319,7 @@ class DedupTextSpec extends AnyFunSuite {
       .union(chain.select($"d2".as("a"), $"d1".as("b"))).distinct()
     val perRound = jobs("round")(Graph.minLabelRounds(sym).next())
     val starChain = jobs("star-chain")(Graph.connectedComponentsStars(chain).collect())
-    val ccChain = jobs("cc-chain")(Graph.connectedComponents(chain).collect())
+    val ccChain = jobs("cc-chain")(Graph.distributedComponents(chain).collect())
     assert(perRound > 0 && ccChain <= starChain + 3 * perRound,
       s"chain: cc $ccChain jobs, star $starChain, $perRound per min-label round")
     // fixture near-dup clusters are shallow, so min-label reaches its
@@ -320,7 +328,7 @@ class DedupTextSpec extends AnyFunSuite {
     val pairs = Dedup.ngramJaccardPairs(docs, k = 3, threshold = 0.6)
       .select("d1", "d2").localCheckpoint()
     val starPairs = jobs("star-pairs")(Graph.connectedComponentsStars(pairs).collect())
-    val ccPairs = jobs("cc-pairs")(Graph.connectedComponents(pairs).collect())
+    val ccPairs = jobs("cc-pairs")(Graph.distributedComponents(pairs).collect())
     assert(ccPairs < starPairs, s"fixture pairs: cc $ccPairs jobs, star $starPairs")
   }
 
@@ -332,7 +340,7 @@ class DedupTextSpec extends AnyFunSuite {
     val pairs = Dedup.ngramJaccardPairs(docs, k = 3, threshold = 0.6)
       .select("d1", "d2").cache()
     assert(labels(Graph.connectedComponentsStars(pairs)) ==
-      labels(Graph.connectedComponents(pairs)))
+      labels(Graph.distributedComponents(pairs)))
     // a 60-node chain: diameter 59 — min-label needs many rounds, star
     // contraction must agree while converging in O(log^2) rounds
     val chain = (0L until 59L).map(i => (i + 1, i)).toDF("d1", "d2")
@@ -349,6 +357,66 @@ class DedupTextSpec extends AnyFunSuite {
     val minLabel = Graph.minLabelRounds(sym).dropWhile(_._2 > 0).next()._1
     assert(labels(Graph.connectedComponentsStars(edges)) == labels(minLabel))
     pairs.unpersist()
+  }
+
+  test("connected components: the driver tier labels like the distributed tier") {
+    import spark.implicits._
+    def same(pairs: DataFrame): Unit = {
+      val local = Graph.connectedComponents(pairs)
+      val distributed = Graph.distributedComponents(pairs)
+      assert(local.queryExecution.analyzed.isInstanceOf[LocalRelation])
+      assert(local.schema == distributed.schema)
+      assert(local.collect().toSet == distributed.collect().toSet)
+    }
+    same(Dedup.ngramJaccardPairs(docs, k = 3, threshold = 0.6).select("d1", "d2"))
+    // the 60-node chain, which the distributed tier hands to star
+    same((0L until 59L).map(i => (i + 1, i)).toDF("d1", "d2"))
+    // the seeded random multi-component graph
+    val rnd = new scala.util.Random(7)
+    same(Seq.fill(120)((rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
+      .filter { case (a, b) => a != b }
+      .map { case (a, b) => (math.max(a, b), math.min(a, b)) }
+      .toDF("d1", "d2"))
+    // Int ids stay Int
+    val ints = Seq((2, 1), (3, 2), (7, 5)).toDF("d1", "d2")
+    same(ints)
+    assert(Graph.connectedComponents(ints).schema.map(_.dataType) ==
+      Seq(IntegerType, IntegerType))
+    // no pairs: an empty frame with the distributed tier's schema
+    same(Seq.empty[(Long, Long)].toDF("d1", "d2"))
+  }
+
+  test("connected components: job budget of the driver tier and its bound") {
+    val sc = spark.sparkContext
+    def isLocal(df: DataFrame) = df.queryExecution.analyzed.isInstanceOf[LocalRelation]
+    // n disjoint pairs (2i+1, 2i)
+    def pairs(n: Long) = spark.range(n).select(
+      (col("id") * 2 + 1).as("d1"), (col("id") * 2).as("d2"))
+    var comp: DataFrame = null
+    val fixture = Dedup.ngramJaccardPairs(docs, k = 3, threshold = 0.6)
+      .select("d1", "d2").localCheckpoint()
+    val fixtureJobs = SparkInternals.jobsStarted(sc, "dedup-spec-cc-fixture") {
+      comp = Graph.connectedComponents(fixture)
+    }
+    assert(isLocal(comp) && fixtureJobs <= 2, s"fixture pairs: $fixtureJobs jobs")
+    val atBound = SparkInternals.jobsStarted(sc, "dedup-spec-cc-bound") {
+      comp = Graph.connectedComponents(pairs(Graph.LocalMaxEdges))
+    }
+    assert(isLocal(comp) && atBound <= 2, s"${Graph.LocalMaxEdges} pairs: $atBound jobs")
+    assert(comp.count() == 2L * Graph.LocalMaxEdges)
+    comp = Graph.connectedComponents(pairs(Graph.LocalMaxEdges + 1))
+    assert(!isLocal(comp) && comp.count() == 2L * (Graph.LocalMaxEdges + 1))
+  }
+
+  test("connected components above the bound evaluate the pair list no more than before") {
+    val sc = spark.sparkContext
+    val evals = sc.longAccumulator("dedup-spec-cc-pair-evals")
+    val tap = udf { (id: Long) => evals.add(1); id }
+    val n = Graph.LocalMaxEdges + 1L
+    val pairs = spark.range(n).select(
+      (tap(col("id")) * 2 + 1).as("d1"), (col("id") * 2).as("d2"))
+    assert(Graph.connectedComponents(pairs).count() == 2 * n)
+    assert(evals.value <= PairEvals * n, s"${evals.value} evaluations of $n pairs")
   }
 
   test("dedup corpus: one representative survives per near-dup component") {
